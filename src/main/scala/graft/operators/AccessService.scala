@@ -22,6 +22,15 @@ import org.apache.spark.sql.functions._
   * true while `success` is false when the circuit is open. The breaker
   * consumes THAT attempt stream (`Windowed.featureCircuit`), not the
   * ingest stream.
+  *
+  * Serving contract over a `GrantStore.read` grants frame: the frame
+  * resolves the store's view to one generation when it is read, and a
+  * service answers from that generation for its whole life. A service
+  * built before a publish keeps answering from its own generation; one
+  * built after sees the publish. The two-generation store rewrites the
+  * older generation on the SECOND publish after a service was built,
+  * so rebuild the service within two publishes (the serve tier
+  * rebuilds it per publish).
   */
 final class AccessService(
     spark: SparkSession,
@@ -29,8 +38,18 @@ final class AccessService(
     circuits: DataFrame,  // [feature, circuit_open]
     maxBroadcastGrants: Long = AccessService.GrantsBroadcastMaxRows) {
 
-  private val g = grants.cache()
-  private val c = circuits.cache()
+  /** Cached on first use by the batch path only: a registered cache
+    * would replace the point lookup's bucket-pruned scan with a full
+    * scan of the cached view, and a service rebuilt per publish would
+    * pin one cached frame per generation. */
+  private lazy val g = grants.cache()
+  private lazy val c = circuits.cache()
+
+  /** Features whose circuit is open, read once per service: the
+    * circuits frame is O(features). */
+  private lazy val openCircuits: Set[String] =
+    circuits.filter(col("circuit_open")).select(col("feature"))
+      .collect().map(_.getString(0)).toSet
 
   /** Measured once per service instance (the cache makes the count a
     * one-time cost); drives the broadcast-vs-shuffle strategy below,
@@ -73,12 +92,17 @@ final class AccessService(
       .select(col("ts"), col("user_id"), col("feature"),
         coalesce(col("has_grant"), lit(true)).as("success"))
 
-  /** Single lookup (the `GET /can<feature>` shape). */
-  def canAccess(userId: Long, feature: String): Boolean = {
-    import spark.implicits._
-    check(Seq((userId, feature)).toDF("user_id", "feature"))
-      .head().getBoolean(4)
-  }
+  /** Single lookup (the `GET /can<feature>` shape), same answer as
+    * [[check]]'s `has_access`. An open circuit answers without reading
+    * the grants; otherwise one filter on the uncached grants frame,
+    * which over the user_id-bucketed `GrantStore` prunes to the single
+    * bucket file holding `userId`: one job of one task. */
+  def canAccess(userId: Long, feature: String): Boolean =
+    openCircuits(feature) || {
+      val hit = grants.filter(col("user_id") === userId && col("feature") === feature)
+        .select(col("has_grant")).head(1)
+      hit.isEmpty || hit(0).isNullAt(0) || hit(0).getBoolean(0)
+    }
 
   /** `can<feature>` flag lookup, reference route shape (P5). */
   def canAccessFlag(userId: Long, flag: String): Option[Boolean] =

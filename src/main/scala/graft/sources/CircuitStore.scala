@@ -42,24 +42,12 @@ object CircuitStore {
   def cadence(referenceCadence: Boolean): Cadence =
     if (referenceCadence) ReferenceCadence else DefaultCadence
 
-  private def generations(table: String): (String, String) =
-    (table + "__a", table + "__b")
-
-  private def inactiveGen(spark: SparkSession, table: String): String = {
-    val (a, b) = generations(table)
-    if (!spark.catalog.tableExists(table)) a
-    else {
-      val ddl = spark.sql(s"SHOW CREATE TABLE `$table`").head().getString(0)
-      if (ddl.contains(a)) b else a
-    }
-  }
-
   private def publish(spark: SparkSession, table: String, gen: String): Unit =
     spark.sql(s"CREATE OR REPLACE VIEW `$table` AS SELECT * FROM `$gen`")
 
   /** Drop the view and both generations (test/cleanup utility). */
   def drop(spark: SparkSession, table: String): Unit = {
-    val (a, b) = generations(table)
+    val (a, b) = BucketedUpsert.generations(table)
     spark.sql(s"DROP VIEW IF EXISTS `$table`")
     spark.sql(s"DROP TABLE IF EXISTS `$a`")
     spark.sql(s"DROP TABLE IF EXISTS `$b`")
@@ -84,7 +72,7 @@ object CircuitStore {
           .join(broadcast(latest), Seq("feature"), "full_outer")
           .select(col("feature"),
             coalesce(col("new_open"), col("circuit_open")).as("circuit_open"))
-      val gen = inactiveGen(spark, table)
+      val gen = BucketedUpsert.inactiveGen(spark, table)
       merged.write.format("parquet")
         .mode(org.apache.spark.sql.SaveMode.Overwrite).saveAsTable(gen)
       publish(spark, table, gen)

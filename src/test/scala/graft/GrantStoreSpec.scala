@@ -138,12 +138,25 @@ class GrantStoreSpec extends AnyFunSuite {
         GrantStore.read(spark, table), circuits)
       assert(!svc.canAccess(7L, "purchase"))
       assert(svc.canAccess(8L, "purchase")) // unseen → default grant
-      // a CDC upsert lands in the next service built from the table
+      // a CDC upsert lands in the next service built from the table;
+      // a service built before it keeps answering from its own
+      // generation
       GrantStore.upsert(spark,
         Seq((7L, "purchase", true)).toDF("user_id", "feature", "has_grant"),
         table, buckets = 4)
       val svc2 = new AccessService(spark,
         GrantStore.read(spark, table), circuits)
+      assert(svc2.canAccess(7L, "purchase"))
+      assert(!svc.canAccess(7L, "purchase"))
+      // the same holds one publish later for the service built after
+      // the first: the second publish rewrites the OLDER generation,
+      // which is why a service must be rebuilt within two publishes
+      GrantStore.upsert(spark,
+        Seq((7L, "purchase", false)).toDF("user_id", "feature", "has_grant"),
+        table, buckets = 4)
+      val svc3 = new AccessService(spark,
+        GrantStore.read(spark, table), circuits)
+      assert(!svc3.canAccess(7L, "purchase"))
       assert(svc2.canAccess(7L, "purchase"))
     } finally drop(table)
   }
