@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Generic O(delta) upsert into a bucketed generation table — the
@@ -15,6 +15,10 @@ import org.apache.spark.sql.functions._
   * 1 − |touched|/n of the table is neither scanned nor rewritten —
   * then carries every untouched bucket file forward by hard link
   * (fallback copy) and republishes the view in one atomic catalog op.
+  * The inactive generation is overwritten in place (its catalog entry
+  * is reused while its layout holds), by `min(|touched|,
+  * defaultParallelism)` write tasks that each own whole buckets, so
+  * every generation keeps exactly one file per non-empty bucket.
   * A 10-row delta against a 100 TB table touches ~10 buckets of IO.
   * On a real deployment the same shape feeds a Delta/Iceberg
   * `MERGE INTO`, where carry-forward is a manifest reference. Single
@@ -25,14 +29,15 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
   private[graft] def generations(table: String): (String, String) =
     (table + "__a", table + "__b")
 
-  /** The generation NOT currently served — the safe write target. */
+  /** The generation NOT currently served — the safe write target.
+    * Read from the view's catalog entry (its stored SELECT), which is a
+    * metadata lookup; `SHOW CREATE TABLE` ran a command per publish. */
   private[graft] def inactiveGen(spark: SparkSession, table: String): String = {
     val (a, b) = generations(table)
-    if (!spark.catalog.tableExists(table)) a
-    else {
-      val ddl = spark.sql(s"SHOW CREATE TABLE `$table`").head().getString(0)
-      if (ddl.contains(a)) b else a
-    }
+    val served = if (!spark.catalog.tableExists(table)) None
+      else spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table)).viewText
+    if (served.exists(_.contains(s"`$a`"))) b else a
   }
 
   private[graft] def publish(spark: SparkSession, table: String, gen: String): Unit = {
@@ -187,6 +192,7 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     val spark = df.sparkSession
     val gen = inactiveGen(spark, table)
     Bucketed.write(df, gen, bucketKey, buckets)
+    recordBatch(spark, gen, None)
     publish(spark, table, gen)
   }
 
@@ -344,19 +350,28 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
         .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(gen))
         .location)
 
-  /** Bucket id encoded in a bucketed-write file name
-    * (`part-00000-<uuid>_00003.c000.snappy.parquet` → 3). */
+  /** Bucket id encoded in a bucketed-write data file name
+    * (`part-00000-<uuid>_00003.c000.snappy.parquet` → 3). Hidden names
+    * — the filesystem's `.<name>.crc` checksum sidecars, `_SUCCESS` —
+    * are not data files, whatever they embed: counting them listed
+    * every touched bucket twice, and an explicit path list longer than
+    * 32 makes Spark list it with a distributed job. */
   private[graft] def bucketIdOf(fileName: String): Option[Int] =
-    "_(\\d{5})\\.".r.findFirstMatchIn(fileName).map(_.group(1).toInt)
+    if (fileName.startsWith(".") || fileName.startsWith("_")) None
+    else "_(\\d{5})\\.".r.findFirstMatchIn(fileName).map(_.group(1).toInt)
 
   /** The bucket ids the delta's keys land in — Spark's bucketing hash
     * is `pmod(murmur3(key), n)`, identical to the SQL `hash()`
     * function, so the pruning computation matches the writer's
-    * placement exactly. */
+    * placement exactly. Deduplicated inside each partition rather
+    * than by `distinct()`, so the set costs one job with no shuffle
+    * beyond what computing `delta` itself needs. */
   private[graft] def affectedBuckets(delta: DataFrame, bucketKey: String,
                                      buckets: Int): Set[Int] =
-    delta.select(pmod(hash(col(bucketKey)), lit(buckets)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
+    delta.select(pmod(hash(col(bucketKey)), lit(buckets)))
+      .as(Encoders.scalaInt)
+      .mapPartitions((ids: Iterator[Int]) => ids.toSet.iterator)(Encoders.scalaInt)
+      .collect().toSet
 
   /** The last applied (query id, batch id) recorded on a generation
     * table (the at-least-once replay guard for NON-idempotent merges).
@@ -387,6 +402,20 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
   private[graft] def currentQueryId(spark: SparkSession): String =
     Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId")).getOrElse(BatchCaller)
 
+  /** Record on `gen` the (query id, batch id) it now holds, or that it
+    * holds none. Generations are overwritten in place, which keeps
+    * their table properties, so a write without a batch id must clear
+    * the entry an earlier batch left — a stale one would describe a
+    * state the generation no longer holds. */
+  private def recordBatch(spark: SparkSession, gen: String,
+                          applied: Option[(String, Long)]): Unit = applied match {
+    case Some((qid, id)) => spark.sql(
+      s"ALTER TABLE `$gen` SET TBLPROPERTIES(" +
+        s"'graft.batchId'='$id', 'graft.queryId'='$qid')")
+    case None => if (appliedBatch(spark, gen).isDefined) spark.sql(
+      s"ALTER TABLE `$gen` UNSET TBLPROPERTIES IF EXISTS ('graft.batchId', 'graft.queryId')")
+  }
+
   /** Merge `delta` into `table`: rows join on `joinKeys`; every other
     * column combines via `merge(name, existing, delta)` — default
     * last-writer-wins (`coalesce(delta, existing)`); AggStore passes
@@ -403,8 +432,10 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
              merge: (String, Column, Column) => Column =
                (_, ex, dl) => coalesce(dl, ex),
              batchId: Option[Long] = None): Unit = {
-    val valueCols = spark.table(table).schema.fieldNames.toSeq
-      .filterNot(joinKeys.contains)
+    // the merged rows keep the table's column order, whatever position
+    // the join keys hold in it
+    val cols = spark.table(table).schema.fieldNames.toSeq
+    val valueCols = cols.filterNot(joinKeys.contains)
     // value columns are renamed __delta_* for the merge
     val delta = delta0.select(
       joinKeys.map(col) ++
@@ -417,8 +448,9 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
         // is only the touched buckets — so the shuffled join is small
         // by construction.
         existing.join(delta, joinKeys, "full_outer")
-          .select(joinKeys.map(col) ++ valueCols.map(c =>
-            merge(c, col(c), col(s"__delta_$c")).as(c)): _*)
+          .select(cols.map(c =>
+            if (joinKeys.contains(c)) col(c)
+            else merge(c, col(c), col(s"__delta_$c")).as(c)): _*)
     }
   }
 
@@ -443,8 +475,15 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     * `transform(existing-touched-rows)`, carry untouched bucket files
     * forward by hard link, republish the view atomically. `delta` must
     * contain `joinKeys` (plus whatever the transform needs) and is
-    * persisted here once for the emptiness guard, the bucket-set
-    * collect and the transform's own reads. */
+    * persisted here once for the bucket-set collect and the
+    * transform's own reads.
+    *
+    * A publish runs two jobs besides the shuffles its plans need: one
+    * computes `delta` and collects its bucket set (empty set = empty
+    * delta, nothing to do), one writes the touched buckets into the
+    * inactive generation — in place, with one task per touched bucket
+    * up to the cluster's parallelism ([[Bucketed.write]]). Everything
+    * else is catalog and filesystem metadata. */
   private def compose(spark: SparkSession, table: String, delta0: DataFrame,
                       joinKeys: Seq[String], bucketKey: String, buckets: Int,
                       batchId: Option[Long])
@@ -457,8 +496,11 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
         "the merge joins and prunes buckets on the same key")
     val delta = delta0.persist()
     try {
-      // empty or net-zero CDC batches must not pay any rewrite
-      if (delta.isEmpty) return
+      // one job folds the delta and collects its buckets; it runs ahead
+      // of the replay guard, so a redelivered batch still folds once.
+      // Empty or net-zero CDC batches touch nothing and pay no rewrite
+      val touched = affectedBuckets(delta, bucketKey, buckets)
+      if (touched.isEmpty) return
       val gen = inactiveGen(spark, table)
       val (a, b) = generations(table)
       val active = if (gen == a) b else a
@@ -487,7 +529,6 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
         }
       }
       if (alreadyApplied) return
-      val touched = affectedBuckets(delta, bucketKey, buckets)
       val srcDir = tableDir(spark, active)
       val (touchedFiles, untouchedFiles) = {
         import scala.jdk.CollectionConverters._
@@ -506,7 +547,7 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
         if (touchedFiles.isEmpty) spark.table(table).limit(0)
         else spark.read.schema(spark.table(table).schema)
           .parquet(touchedFiles.map(_.toString): _*)
-      Bucketed.write(transform(existing), gen, bucketKey, buckets)
+      Bucketed.write(transform(existing), gen, bucketKey, buckets, touched.size)
       // carry untouched buckets forward: link shares the bytes (the
       // "reference" half of generation-compose); copy is the fallback
       // for filesystems without links
@@ -518,9 +559,7 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
           java.nio.file.Files.copy(f, dst)
         }
       }
-      batchId.foreach(id => spark.sql(
-        s"ALTER TABLE `$gen` SET TBLPROPERTIES(" +
-          s"'graft.batchId'='$id', 'graft.queryId'='$qid')"))
+      recordBatch(spark, gen, batchId.map(qid -> _))
       spark.sql(s"REFRESH TABLE `$gen`")
       publish(spark, table, gen)
     } finally delta.unpersist()
