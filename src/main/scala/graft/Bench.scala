@@ -226,7 +226,7 @@ object Bench {
           s"sfDir=$sfDir ⇒ memo gate neutralized (memo_pins: unpinned_sf)")
     // decision arithmetic lives in MemoGate (pure, spec-pinned).
     // Self-heal (VERDICT r18 #3): a degraded memo phase is retried up
-    // to 2 more times — Caches.clearAll() first, so a retry is a real
+    // to 2 more times — Memo.clearAll() first, so a retry is a real
     // re-measurement (re-derive + re-cache every memo), not a free
     // read of the frames the degraded attempt already cached. Pins
     // stay the same across attempts: the stores and scans are warm by
@@ -240,7 +240,7 @@ object Bench {
         System.err.println(
           s"[bench] NOTE degraded memo phase: clearing memos and " +
             s"re-measuring (attempt ${attempt + 1})")
-        Caches.clearAll()
+        Memo.clearAll()
       }
       val builds = runMemoPhase()
       (builds, MemoGate.evaluate(builds, MemoBaselineSec))

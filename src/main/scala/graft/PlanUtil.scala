@@ -27,11 +27,6 @@ import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
   * sized by GraftSession, never a hard-coded local constant. */
 private[graft] object PlanUtil {
 
-  /** Per-session locks for the AQE toggle below (a global lock would
-    * serialize unrelated sessions' memo builds). */
-  private val toggleLocks = scala.collection.concurrent.TrieMap
-    .empty[org.apache.spark.sql.SparkSession, Object]
-
   /** Eager localCheckpoint that PRESERVES the child plan's output
     * partitioning (AQE disabled for the materialization job only).
     *
@@ -40,7 +35,9 @@ private[graft] object PlanUtil {
     * leave AQE permanently off (t2 snapshots t1's "false" as its
     * restore value). The per-session lock makes toggle → materialize →
     * restore atomic, so the conf is ALWAYS restored correctly and two
-    * memo builds can't corrupt each other. Residual, documented: an
+    * memo builds can't corrupt each other. It lives in the session's
+    * [[Memo]] slot: unrelated sessions never serialize on it, and
+    * `Memo.clearAll` releases it with the session's memos. Residual, documented: an
     * unrelated query planned in the SAME session inside the window
     * still plans with AQE off — memo builds run in the bench's
     * sequential memo phase, and streaming micro-batches run in CLONED
@@ -50,8 +47,7 @@ private[graft] object PlanUtil {
     * existing Dataset to. */
   def checkpointKeepPartitioning(df: DataFrame): DataFrame = {
     val session = df.sparkSession
-    val lock = toggleLocks.getOrElseUpdate(session, new Object)
-    lock.synchronized {
+    Memo.lock(session).synchronized {
       val conf = session.conf
       val prev = conf.get("spark.sql.adaptive.enabled", "true")
       conf.set("spark.sql.adaptive.enabled", "false")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Memo
 import graft.config.EngineConfig
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -162,8 +163,17 @@ object AccessService {
     * so featureCircuit / latestFeatureCircuit calls over the same
     * attempts frame reuse the aggregation for free. Bounded: one
     * entry per (session, source), each a users×features-sized frame. */
-  private val serveCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, EngineConfig), (DataFrame, DataFrame, DataFrame)]
+  private val serveMemo = Memo.keyed("serve_frames", Seq("events.parquet")) {
+    (spark: SparkSession, sfDir: String, cfg: EngineConfig) =>
+      val events = graft.sources.Tables.events(spark, sfDir)
+      val wide = Memo.cache(Grants.wide(
+        EventAggregates.perUser(events, cfg.aggregates), cfg))
+      val att = Memo.cache(attempts(events, wide, cfg))
+      // hot downstream agg, reused by plan identity; cached through
+      // the memo so it is released with the entry
+      Memo.cache(Windowed.featureStats(att))
+      (wide, att)
+  }
 
   /** Cached (wide grants, attempt log) for the events table at
     * `sfDir`. The memo OWNS its inputs (it loads the events frame
@@ -171,27 +181,8 @@ object AccessService {
     * never silently serve frames built from different inputs than the
     * caller's. */
   def serveFrames(spark: SparkSession, sfDir: String,
-                  cfg: EngineConfig): (DataFrame, DataFrame) = {
-    val (wide, att, _) = serveCache.getOrElseUpdate((spark, sfDir, cfg), {
-      val events = graft.sources.Tables.events(spark, sfDir)
-      val wide = Grants.wide(
-        EventAggregates.perUser(events, cfg.aggregates), cfg).cache()
-      val att = attempts(events, wide, cfg).cache()
-      // hot downstream agg, reused by plan identity; retained so
-      // clearCaches can unpersist it
-      val stats = Windowed.featureStats(att).cache()
-      (wide, att, stats)
-    })
-    (wide, att)
-  }
-
-  /** Drop this module's session memos (see [[graft.Caches]]). */
-  private[graft] def clearCaches(): Unit = {
-    serveCache.values.foreach { case (w, a, st) =>
-      Seq(w, a, st).foreach(_.unpersist(false))
-    }
-    serveCache.clear()
-  }
+                  cfg: EngineConfig): (DataFrame, DataFrame) =
+    serveMemo(spark, sfDir, cfg)
 
   /** Build from raw events: aggregates → grants view + per-feature
     * circuit state from the latest breaker window of the derived

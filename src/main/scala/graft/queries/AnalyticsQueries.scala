@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Memo
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -179,34 +180,17 @@ object AnalyticsQueries extends QueryModule {
     * assumed; BasketCapSpec plants one and measures). The
     * [[BasketMinSupport]] floor drops the singleton-pair
     * noise floor before anything downstream touches the frame. */
-  private val basketPairCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-  private def basketPairs(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    basketPairCache.getOrElseUpdate((s, dir), {
-      val bi = capBasketItems(Tables.lineitem(s, dir)
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("i")))
-        .cache()
-      val pairs = bi.select(col("o"), col("i").as("i1"))
+  private val basketPairs = memo("basket_pairs", Seq("lineitem.parquet"), warm = true) {
+    (s, dir) =>
+      val bi = Memo.cache(capBasketItems(Tables.lineitem(s, dir)
+        .select(col("l_orderkey").as("o"), col("l_partkey").as("i"))))
+      val pairs = Memo.cache(bi.select(col("o"), col("i").as("i1"))
         .join(bi.select(col("o"), col("i").as("i2")), Seq("o"))
         .filter(col("i1") < col("i2"))
         .groupBy(col("i1"), col("i2")).agg(count(lit(1)).as("c"))
-        .filter(col("c") >= BasketMinSupport)
-        .cache()
+        .filter(col("c") >= BasketMinSupport))
       (bi, pairs)
-    })
-
-  private[graft] def clearCaches(): Unit = {
-    basketPairCache.values.foreach { case (a, b) =>
-      a.unpersist(); b.unpersist()
-    }
-    basketPairCache.clear()
   }
-
-  override def memoWarmers: Seq[(String, (SparkSession, String) => Unit)] =
-    Seq(("basket_pairs", (s: SparkSession, dir: String) => {
-      val (bi, pairs) = basketPairs(s, dir)
-      bi.count(); pairs.count(); ()
-    }))
 
   /** Exact integer micros from a decimal daily-revenue frame: the
     * DECIMAL(·,6) sum is order-free-exact, so ×10⁶ is an integral

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Memo
 import graft.config.DefaultConfig
 import graft.operators.{AsOf, EventAggregates, Grants, Windowed}
 import graft.sources.Tables
@@ -28,24 +29,9 @@ object EventQueries extends QueryModule {
     * the grants views, AccessService.serveFrames' wide build) reads
     * the InMemoryRelation instead of re-aggregating the events scan.
     * One ~|users|-row frame per (session, source). */
-  private val aggCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def perUserCached(s: SparkSession, dir: String): DataFrame =
-    aggCache.getOrElseUpdate((s, dir),
-      EventAggregates.perUser(events(s, dir), cfg.aggregates).cache())
-
-  /** Drop this module's session memos (see [[graft.Caches]]): frees
-    * the pinned executor cache memory and un-staleness a dir whose
-    * parquet contents were rewritten under the same path. */
-  private[graft] def clearCaches(): Unit = {
-    aggCache.values.foreach(_.unpersist(false))
-    aggCache.clear()
+  private val perUserCached = memo("per_user_aggs", Seq("events.parquet"), warm = true) {
+    (s, dir) => Memo.cache(EventAggregates.perUser(events(s, dir), cfg.aggregates))
   }
-
-  override def memoWarmers: Seq[(String, (SparkSession, String) => Unit)] =
-    Seq(("per_user_aggs", (s: SparkSession, d: String) => {
-      perUserCached(s, d).count(); ()
-    }))
 
   /** Shared oracle CTE: the per-user aggregate frame, mirroring
     * EventAggregates.perUser. event_id is unique in the test data, so

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Memo
 import graft.functions.FixedPointOps._
 import graft.operators.NgramLm
 import graft.sources.Tables
@@ -69,6 +70,11 @@ object LmQueries extends QueryModule {
   private[graft] def lmFullStore(s: SparkSession, dir: String): String =
     lmStorePrefix(s, dir, lmFullPrefixName(dir), identity)
 
+  private def dropCounts(prefix: String => String)(s: SparkSession, dir: String): Unit = {
+    graft.sources.StoreSentinel.drop(s, prefix(dir))
+    graft.streaming.LmCountsStream.drop(s, prefix(dir))
+  }
+
   /** Session-scoped memo of the LM trained on the trusted
     * doc_id % 5 != 0 slice — the count frames come from the PERSISTED
     * store (built once per corpus, adopted across sessions) and both
@@ -76,76 +82,24 @@ object LmQueries extends QueryModule {
     * shape). The frames are cached: the curriculum query reads them
     * for the whole corpus and the filter query for the held-out
     * slice, and uncached each probe would re-scan the store. */
-  private val lmCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), NgramLm.Counts]
-  private def trustedLm(s: SparkSession, dir: String): NgramLm.Counts =
-    lmCache.getOrElseUpdate((s, dir), {
-      val c = graft.streaming.LmCountsStream
-        .readCounts(s, lmTrustedStore(s, dir))
-      NgramLm.Counts(c.bigrams.cache(), c.contexts.cache(),
-        c.unigrams.cache(), c.totals.cache())
-    })
+  private val trustedLm = memo("lm_trusted", Seq("documents.parquet"), warm = true,
+      dropStore = dropCounts(lmTrustedPrefixName)) { (s, dir) =>
+    val c = graft.streaming.LmCountsStream.readCounts(s, lmTrustedStore(s, dir))
+    NgramLm.Counts(Memo.cache(c.bigrams), Memo.cache(c.contexts),
+      Memo.cache(c.unigrams), Memo.cache(c.totals))
+  }
 
   /** Session-scoped memo of the FULL-corpus count frames (the PMI
     * collocation query needs corpus-wide statistics, not the trusted
     * slice). Same store + cache discipline as [[trustedLm]]; contexts
     * stays uncached (only the PMI query's store build writes it, no
     * registry query reads it twice). */
-  private val fullLmCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), NgramLm.Counts]
-  private def fullLm(s: SparkSession, dir: String): NgramLm.Counts =
-    fullLmCache.getOrElseUpdate((s, dir), {
-      val c = graft.streaming.LmCountsStream
-        .readCounts(s, lmFullStore(s, dir))
-      NgramLm.Counts(c.bigrams.cache(), c.contexts,
-        c.unigrams.cache(), c.totals.cache())
-    })
-
-  /** Drop this module's session memos AND their persisted stores (the
-    * invalidation API — the TextQueries.clearCaches contract; see
-    * [[graft.Caches]]). */
-  private[graft] def clearCaches(): Unit = {
-    lmCache.foreach { case ((s, dir), c) =>
-      Seq(c.bigrams, c.contexts, c.unigrams, c.totals)
-        .foreach(_.unpersist(false))
-      graft.sources.StoreSentinel.drop(s, lmTrustedPrefixName(dir))
-      graft.streaming.LmCountsStream.drop(s, lmTrustedPrefixName(dir))
-    }
-    lmCache.clear()
-    fullLmCache.foreach { case ((s, dir), c) =>
-      Seq(c.bigrams, c.unigrams, c.totals).foreach(_.unpersist(false))
-      graft.sources.StoreSentinel.drop(s, lmFullPrefixName(dir))
-      graft.streaming.LmCountsStream.drop(s, lmFullPrefixName(dir))
-    }
-    fullLmCache.clear()
+  private val fullLm = memo("lm_full", Seq("documents.parquet"), warm = true,
+      dropStore = dropCounts(lmFullPrefixName)) { (s, dir) =>
+    val c = graft.streaming.LmCountsStream.readCounts(s, lmFullStore(s, dir))
+    NgramLm.Counts(Memo.cache(c.bigrams), c.contexts,
+      Memo.cache(c.unigrams), Memo.cache(c.totals))
   }
-
-  /** Test hook simulating a process restart: forget the in-memory
-    * memos (unpersisting their frames — a new process holds no cache)
-    * WITHOUT dropping the persisted stores (the
-    * TextQueries.forgetSessionMemos contract). */
-  private[graft] def forgetSessionMemos(): Unit = {
-    lmCache.values.foreach(c => Seq(c.bigrams, c.contexts, c.unigrams,
-      c.totals).foreach(_.unpersist(false)))
-    lmCache.clear()
-    fullLmCache.values.foreach(c => Seq(c.bigrams, c.unigrams,
-      c.totals).foreach(_.unpersist(false)))
-    fullLmCache.clear()
-  }
-
-  override def memoWarmers: Seq[(String, (SparkSession, String) => Unit)] =
-    Seq(
-      ("lm_trusted", (s: SparkSession, d: String) => {
-        val c = trustedLm(s, d)
-        c.bigrams.count(); c.contexts.count()
-        c.unigrams.count(); c.totals.count(); ()
-      }),
-      // fullLm leaves contexts uncached (only the PMI query reads it,
-      // once) — warm only the cached frames.
-      ("lm_full", (s: SparkSession, d: String) => {
-        val c = fullLm(s, d)
-        c.bigrams.count(); c.unigrams.count(); c.totals.count(); ()
-      }))
 
   /** Collocation keep thresholds: support ≥ 5 occurrences and PMI ≥
     * 0.125 bits (131072 at 2^20 scale). Calibrated discriminating at

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Memo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One gate-checkable query: a Spark plan plus (usually) an equivalent
@@ -16,12 +17,18 @@ final case class Q(
 trait QueryModule {
   def all: Seq[Q]
 
-  /** Named session-memo builders for the bench warm-up phase. Each
-    * thunk forces one memoized frame to its steady serving state, so
-    * per-query bench times measure serving cost and the artifact
-    * bills the first-touch build to an explicit `memo_builds` row
-    * instead of whichever query happens to run first. Names are
-    * stable artifact keys; builders must be idempotent (re-invoking
-    * on a warm memo is a no-op count). */
-  def memoWarmers: Seq[(String, (SparkSession, String) => Unit)] = Nil
+  private val declared = scala.collection.mutable.ArrayBuffer.empty[Memo[Unit, _]]
+
+  /** This module's session memos, in declaration order (the warmed ones
+    * make up the bench warm-up phase, `SparkEntry.memoWarmers`). */
+  private[graft] def memos: Seq[Memo[Unit, _]] = declared.toSeq
+
+  /** Declare one of this module's session memos (see [[graft.Memo]]). */
+  protected def memo[V](name: String, tables: Seq[String], warm: Boolean = false,
+                        dropStore: (SparkSession, String) => Unit = (_, _) => ())(
+      build: (SparkSession, String) => V): Memo[Unit, V] = {
+    val m = Memo(name, tables, warm, dropStore)(build)
+    declared += m
+    m
+  }
 }

@@ -42,33 +42,21 @@ object RelationalQueries extends QueryModule {
     * all 9 Jacobi/LPA rounds across the three queries read the edge
     * side exchange-free (guide §2.4 — two operations keyed the same
     * way share one exchange) instead of re-shuffling the same frame
-    * every round. See [[graft.Caches]]. */
-  private val tradeEdgeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private[queries] def tradeEdges(s: SparkSession, dir: String): DataFrame =
-    tradeEdgeCache.getOrElseUpdate((s, dir), {
-      val e0 = Tables.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderkey"))
-        .join(Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
-        .distinct()
-      graft.PlanUtil.partitionedCheckpoint(
-        e0.union(e0.select(col("dst").as("src"), col("src").as("dst"))),
-        col("src"))
-    })
-
-  /** Drop this module's session memos (see [[graft.Caches]]): the
-    * checkpointed edge RDDs are released to GC with their refs. */
-  private[graft] def clearCaches(): Unit = tradeEdgeCache.clear()
-
-  override def memoWarmers: Seq[(String, (SparkSession, String) => Unit)] =
-    // localCheckpoint(true) is eager — building the memo IS the
-    // materialization; no separate count needed.
-    Seq(("trade_edges", (s: SparkSession, dir: String) => {
-      tradeEdges(s, dir); ()
-    }))
+    * every round. Checkpointed, not cached: the edge RDDs are released
+    * to GC with the entry. */
+  private[queries] val tradeEdges = memo("trade_edges",
+      Seq("orders.parquet", "lineitem.parquet"), warm = true) { (s, dir) =>
+    val e0 = Tables.orders(s, dir)
+      .select(col("o_custkey"), col("o_orderkey"))
+      .join(Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey")),
+        col("o_orderkey") === col("l_orderkey"))
+      .select(concat(lit("c"), col("o_custkey")).as("src"),
+        concat(lit("s"), col("l_suppkey")).as("dst"))
+      .distinct()
+    graft.PlanUtil.partitionedCheckpoint(
+      e0.union(e0.select(col("dst").as("src"), col("src").as("dst"))),
+      col("src"))
+  }
 
   /** Canonical final-output form for a decimal aggregate: round in exact
     * decimal space (both engines round half-away-from-zero; DuckDB's bare

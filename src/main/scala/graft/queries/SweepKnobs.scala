@@ -9,7 +9,9 @@ package graft.queries
   * (`GRAFT_SWEEP_MODE=1`, set only by the 10× sweep harness —
   * BENCHNOTES "10× sweep protocol"); any other session throws at
   * first touch, so a stray env var becomes a hard failure instead of
-  * silently shifted production output.
+  * silently shifted production output. `SPARK_GRAFT_PLANFULL` keeps
+  * the output but drops a checkpoint from what a timed run computes,
+  * so it goes through the same gate.
   *
   * The env reader is a parameter so the decision table is unit-testable
   * without mutating process env (SweepKnobsSpec).

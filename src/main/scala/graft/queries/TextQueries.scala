@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Memo
 import graft.functions.TextOps
 import graft.functions.TextOps._
 import graft.sources.Tables
@@ -188,20 +189,13 @@ object TextQueries extends QueryModule {
   /** Session memo of the [[jaccardRegime]] pick — a per-corpus plan
     * statistic (one map-side aggregate over the cached shingle frame,
     * but EAGER at query construction: the bench's min-of-3 paid it
-    * three times, and PlanAudit's cold sweep once more). Invalidation
-    * contract (ADVICE r21): like every other (session, dir) memo here,
-    * this is invalidated ONLY via [[clearCaches]] — a corpus mutated
-    * in place within a session without clearCaches is profiled against
-    * the stale cached shingle frame (perf-only: both regime plans
-    * return identical rows). */
-  private val regimeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  private def jaccardRegimeCached(s: SparkSession, dir: String): String =
-    regimeCache.getOrElseUpdate((s, dir), {
+    * three times, and PlanAudit's cold sweep once more). */
+  private val jaccardRegimeCached = memo("jaccard_regime", Seq("documents.parquet")) {
+    (s, dir) =>
       val sh = shingleRowsCached(s, dir)
       jaccardRegime(sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= JaccardMaxDf))
-    })
+  }
 
   /** DISTINCT `(doc_id, s, h)` shingle rows — base of the minhash +
     * Jaccard pipelines. Built with a PER-DOC `array_distinct` before
@@ -210,16 +204,13 @@ object TextQueries extends QueryModule {
     * exact and shuffle-free, while dropDuplicates(doc_id, s) would
     * exchange every gram row — measured strictly worse than paying
     * the md5 a second time. */
-  private val shingleCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private[queries] def shingleRowsCached(s: SparkSession, dir: String): DataFrame =
-    shingleCache.getOrElseUpdate((s, dir), {
-      val t = tokens(col("text"))
-      docs(s, dir).filter(size(t) >= 3)
-        .select(col("doc_id"), explode(shingles(t)).as("s"))
-        .withColumn("h", portableHash(col("s")))
-        .cache()
-    })
+  private[queries] val shingleRowsCached = memo("shingle_rows",
+      Seq("documents.parquet"), warm = true) { (s, dir) =>
+    val t = tokens(col("text"))
+    Memo.cache(docs(s, dir).filter(size(t) >= 3)
+      .select(col("doc_id"), explode(shingles(t)).as("s"))
+      .withColumn("h", portableHash(col("s"))))
+  }
 
   /** The MinHash+LSH candidate pipeline through exact-Jaccard
     * verification: (d1, d2, jaccard). Shared by dedup_minhash_lsh and
@@ -241,15 +232,13 @@ object TextQueries extends QueryModule {
     * The minhash aggregate is cached: the banding self-join (and the
     * incremental probe) read it from both sides, and uncached Spark
     * recomputes the whole shingle→minhash aggregate per side
-    * (ReuseExchange does not fire across the explode). Tracked in
-    * auxCached so clearCaches() releases it too. */
+    * (ReuseExchange does not fire across the explode). Released with
+    * the memo entry whose build cached it ([[Memo.cache]]). */
   private def bandedSigs(sh: DataFrame): DataFrame = {
-    val mh = sh.groupBy(col("doc_id"))
+    val mh = Memo.cache(sh.groupBy(col("doc_id"))
       .agg(min(minhashExpr(col("h"), 0)).as("mh0"),
         (1 until MinhashAB.size).map(i =>
-          min(minhashExpr(col("h"), i)).as(s"mh$i")): _*)
-      .cache()
-    auxCached.add(mh)
+          min(minhashExpr(col("h"), i)).as(s"mh$i")): _*))
     // one pass over mh: explode the 4 band signatures instead of a
     // 4-way union (which would recompute the aggregate per branch)
     val bandStructs = array((0 until MinhashBands).map { b =>
@@ -268,23 +257,34 @@ object TextQueries extends QueryModule {
     * source, the way a production dedup stage materializes its edge
     * list once and fans consumers out from it. Bounded: one
     * pairs-sized frame per (session, source). */
-  private val pairCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def minhashPairsCached(s: SparkSession, dir: String): DataFrame =
-    pairCache.getOrElseUpdate((s, dir),
-      minhashPairs(shingleRowsCached(s, dir)).cache())
+  private val minhashPairsCached = memo("minhash_pairs",
+      Seq("documents.parquet"), warm = true) { (s, dir) =>
+    Memo.cache(minhashPairs(shingleRowsCached(s, dir)))
+  }
 
-  private val labelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def clusterLabels(s: SparkSession, dir: String): DataFrame =
-    labelCache.getOrElseUpdate((s, dir), {
-      val edges = minhashPairsCached(s, dir)
-        .filter(col("jaccard") >= 0.5)
-        .select(col("d1").as("a"), col("d2").as("b"))
-      graft.operators.ConnectedComponents.components(edges)
-        .select(col("node").as("doc_id"), col("component").as("canonical_id"))
-        .cache()
-    })
+  private val clusterLabels = memo("dedup_cluster_labels",
+      Seq("documents.parquet"), warm = true) { (s, dir) =>
+    val edges = minhashPairsCached(s, dir)
+      .filter(col("jaccard") >= 0.5)
+      .select(col("d1").as("a"), col("d2").as("b"))
+    Memo.cache(graft.operators.ConnectedComponents.components(edges)
+      .select(col("node").as("doc_id"), col("component").as("canonical_id")))
+  }
+
+  /** Session-scoped memo of the df-capped shingle rows `ab(doc_id, s)`
+    * (df ≤ 50) and their inverted-index shared-counts frame
+    * `(d1, d2, shared)` — ONE self-join per (session, dir), shared by
+    * dedup_ngram_jaccard AND dedup_containment (the two exact-pair
+    * metrics over the same candidate space; before this memo each paid
+    * the full explode independently — ~2 s apiece at sf0.1). */
+  private[queries] val ngramShared = memo("ngram_shared",
+      Seq("documents.parquet"), warm = true) { (s, dir) =>
+    val sh = shingleRowsCached(s, dir)
+    val keep = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
+      .filter(col("df") <= JaccardMaxDf)
+    val ab = Memo.cache(sh.join(keep, Seq("s")).select(col("doc_id"), col("s")))
+    (ab, Memo.cache(sharedCounts(ab, None)))
+  }
 
   /** Batch MinHash+LSH near-dup cluster labels for an arbitrary
     * `[doc_id, text]` frame: the dedup_clusters pipeline (shingle →
@@ -320,22 +320,22 @@ object TextQueries extends QueryModule {
   /** Session-scoped memo of the winnowing selection (the fingerprint
     * frame is 2/(W+1) the gram count — small); both winnow queries
     * read it, the gram explode + md5 pass runs once. */
-  private val winnowCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def winnowSelectCached(s: SparkSession, dir: String): DataFrame =
-    winnowCache.getOrElseUpdate((s, dir), winnowSelect(docs(s, dir)).cache())
+  private val winnowSelectCached = memo("winnow_select",
+      Seq("documents.parquet"), warm = true) { (s, dir) =>
+    Memo.cache(winnowSelect(docs(s, dir)))
+  }
 
   /** Session-scoped memo of the learned BPE merge table — tokenizer
     * training runs once per (session, corpus) and both `bpe_merges`
     * and `bpe_encode` read the artifact (train-then-apply, the real
     * pipeline shape: the merge table is produced once and shipped to
-    * every encoder). Holds a driver-side Seq, not a DataFrame — no
-    * unpersist needed, but cleared with the rest so a rewritten
-    * fixture dir retrains. */
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[graft.operators.Bpe.Merge]]
-  private[queries] def bpeMergesCached(s: SparkSession, dir: String): Seq[graft.operators.Bpe.Merge] =
-    bpeCache.getOrElseUpdate((s, dir), bpeMergesStored(s, dir))
+    * every encoder). Holds a driver-side Seq read from the persisted
+    * merge table below. */
+  private[queries] val bpeMergesCached = memo("bpe_merges",
+      Seq("documents.parquet"), warm = true, dropStore = (s, dir) => {
+        graft.sources.StoreSentinel.drop(s, bpePrefixName(dir))
+        graft.sources.BucketedUpsert.drop(s, bpePrefixName(dir) + "merges")
+      })(bpeMergesStored)
 
   /** PERSISTED merge table (path-keyed prefix — the LM-counts recipe,
     * VERDICT r15 #1 applied to the tokenizer): the 20 iterative
@@ -443,76 +443,6 @@ object TextQueries extends QueryModule {
          |       coalesce(enc.n_merged_symbols, 0) AS n_merged_symbols
          |FROM documents d LEFT JOIN enc USING (doc_id)""".stripMargin
   }
-
-  /** Session-scoped memo of the df-capped shingle rows `ab(doc_id, s)`
-    * (df ≤ 50) and their inverted-index shared-counts frame
-    * `(d1, d2, shared)` — ONE self-join per (session, dir), shared by
-    * dedup_ngram_jaccard AND dedup_containment (the two exact-pair
-    * metrics over the same candidate space; before this memo each paid
-    * the full explode independently — ~2 s apiece at sf0.1). */
-  private val ngramSharedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-  private[queries] def ngramShared(s: SparkSession, dir: String):
-      (DataFrame, DataFrame) =
-    ngramSharedCache.getOrElseUpdate((s, dir), {
-      val sh = shingleRowsCached(s, dir)
-      val keep = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= JaccardMaxDf)
-      val ab = sh.join(keep, Seq("s")).select(col("doc_id"), col("s")).cache()
-      val shared = sharedCounts(ab, None).cache()
-      auxCached.add(ab)
-      auxCached.add(shared)
-      (ab, shared)
-    })
-
-  /** Cached frames built INSIDE memoized pipelines (the minhash
-    * signature frame) — not keyed by (session, dir), but still pinned
-    * until released; clearCaches() must cover them or every
-    * clear-and-requery cycle leaks one InMemoryRelation. */
-  private val auxCached =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Drop this module's session memos (see [[graft.Caches]]). */
-  private[graft] def clearCaches(): Unit = {
-    Seq(shingleCache, pairCache, labelCache, winnowCache).foreach { c =>
-      c.values.foreach(_.unpersist(false))
-      c.clear()
-    }
-    ngramSharedCache.clear() // frames themselves drain via auxCached
-    regimeCache.clear()
-    bpeCache.keys.foreach { case (s, dir) =>
-      graft.sources.StoreSentinel.drop(s, bpePrefixName(dir))
-      graft.sources.BucketedUpsert.drop(s, bpePrefixName(dir) + "merges") }
-    bpeCache.clear()
-    postingsCache.foreach { case ((s, _), p) =>
-      graft.sources.StoreSentinel.drop(s, p)
-      graft.sources.PostingsStore.drop(s, p) }
-    postingsCache.clear()
-    var df = auxCached.poll()
-    while (df != null) { df.unpersist(false); df = auxCached.poll() }
-  }
-
-  override def memoWarmers: Seq[(String, (SparkSession, String) => Unit)] =
-    Seq(
-      ("shingle_rows", (s: SparkSession, d: String) => {
-        shingleRowsCached(s, d).count(); ()
-      }),
-      ("minhash_pairs", (s: SparkSession, d: String) => {
-        minhashPairsCached(s, d).count(); ()
-      }),
-      ("dedup_cluster_labels", (s: SparkSession, d: String) => {
-        clusterLabels(s, d).count(); ()
-      }),
-      ("ngram_shared", (s: SparkSession, d: String) => {
-        val (ab, shared) = ngramShared(s, d)
-        ab.count(); shared.count(); ()
-      }),
-      ("winnow_select", (s: SparkSession, d: String) => {
-        winnowSelectCached(s, d).count(); ()
-      }),
-      ("bpe_merges", (s: SparkSession, d: String) => {
-        bpeMergesCached(s, d); ()
-      }))
 
   /** Oracle CTE chain mirroring minhashPairs, ending in
     * `mh_pairs(d1, d2, jaccard)`. */
@@ -715,34 +645,28 @@ object TextQueries extends QueryModule {
     * reference analogue is the grants view surviving across requests
     * (`/root/reference/services/user_feature.py:22`), lifted to
     * surviving across process restarts. */
-  private val postingsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
   /** Pure prefix derivation (path-keyed, catalog-identifier-safe). */
   private[graft] def postingsPrefixName(dir: String): String =
     "bm25ix_" + java.lang.Integer.toHexString(dir.hashCode)
-  private[graft] def postingsPrefix(s: SparkSession, dir: String): String =
-    postingsCache.getOrElseUpdate((s, dir), {
-      val p = postingsPrefixName(dir)
-      val sig = graft.sources.StoreSentinel.corpusSignature(dir, "documents.parquet")
-      val adopted = graft.sources.StoreSentinel.matches(s, p, sig) &&
-        graft.sources.PostingsStore.adopt(s, p)
-      if (!adopted) {
-        graft.sources.StoreSentinel.drop(s, p)
-        graft.sources.PostingsStore.drop(s, p)
-        graft.sources.PostingsStore.init(s, p)
-        graft.sources.PostingsStore.upsertBatch(s,
-          docs(s, dir).select(col("doc_id"), col("text")), p)
-        // sentinel LAST: its presence certifies a completed build
-        graft.sources.StoreSentinel.write(s, p, sig)
-      }
-      p
-    })
-
-  /** Test hook simulating a process restart: forget the in-memory
-    * memo WITHOUT dropping the persisted stores (clearCaches drops
-    * them — it is the invalidation API; this is the amnesia one). */
-  private[graft] def forgetSessionMemos(): Unit = {
-    postingsCache.clear(); bpeCache.clear()
+  private[graft] val postingsPrefix = memo("bm25_postings",
+      Seq("documents.parquet"), dropStore = (s, dir) => {
+        graft.sources.StoreSentinel.drop(s, postingsPrefixName(dir))
+        graft.sources.PostingsStore.drop(s, postingsPrefixName(dir))
+      }) { (s, dir) =>
+    val p = postingsPrefixName(dir)
+    val sig = graft.sources.StoreSentinel.corpusSignature(dir, "documents.parquet")
+    val adopted = graft.sources.StoreSentinel.matches(s, p, sig) &&
+      graft.sources.PostingsStore.adopt(s, p)
+    if (!adopted) {
+      graft.sources.StoreSentinel.drop(s, p)
+      graft.sources.PostingsStore.drop(s, p)
+      graft.sources.PostingsStore.init(s, p)
+      graft.sources.PostingsStore.upsertBatch(s,
+        docs(s, dir).select(col("doc_id"), col("text")), p)
+      // sentinel LAST: its presence certifies a completed build
+      graft.sources.StoreSentinel.write(s, p, sig)
+    }
+    p
   }
 
   /** The SAME BM25 top-20 against the persisted index: tf/dl come from

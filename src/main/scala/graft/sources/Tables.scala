@@ -33,7 +33,7 @@ object Tables extends org.apache.spark.internal.Logging {
     * file) falls below the session's cores — i.e. only on genuinely
     * small/split-starved sources; a 100 TB scan keeps its native
     * file/row-group parallelism. */
-  private[graft] def fanout(df: DataFrame): DataFrame = {
+  private def fanout(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val cores = spark.sparkContext.defaultParallelism
     val files = df.inputFiles

@@ -26,11 +26,11 @@ class CachesSpec extends AnyFunSuite {
       .storageLevel
     assert(spineLevel != StorageLevel.NONE,
       "the aggregate spine should be cached after a warm query")
-    Caches.clearAll()
+    Memo.clearAll()
     assert(spineLevel == StorageLevel.NONE,
       "clearAll must unpersist the memoized spine")
     // queries still run — memos rebuild on demand
     assert(SparkEntry.queries("a1_count_dedup")(spark, dir).count() > 0)
-    Caches.clearAll()
+    Memo.clearAll()
   }
 }

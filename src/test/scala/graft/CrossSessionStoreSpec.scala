@@ -111,7 +111,7 @@ class CrossSessionStoreSpec extends AnyFunSuite {
     val p = "bm25ix_" + java.lang.Integer.toHexString(sf.hashCode)
 
     // process restart: memo amnesia + empty catalog, bytes preserved
-    queries.TextQueries.forgetSessionMemos()
+    Memo.forget()
     Seq("_postings", "_docs", "_stats")
       .foreach(sfx => deregisterPreservingBytes(p + sfx))
     val bytesBefore = storeFiles(p)
@@ -131,7 +131,7 @@ class CrossSessionStoreSpec extends AnyFunSuite {
     assert(expected.nonEmpty)
     val p = "ivfq_" + java.lang.Integer.toHexString(sf.hashCode)
 
-    queries.EmbeddingQueries.forgetSessionMemos()
+    Memo.forget()
     Seq("_pivots", "_cells")
       .foreach(sfx => deregisterPreservingBytes(p + sfx))
     val bytesBefore = storeFiles(p)
@@ -153,7 +153,7 @@ class CrossSessionStoreSpec extends AnyFunSuite {
     val p = queries.LmQueries.lmTrustedPrefixName(sf)
 
     // process restart: memo amnesia + empty catalog, bytes preserved
-    queries.LmQueries.forgetSessionMemos()
+    Memo.forget()
     Seq("lm_bigrams", "lm_contexts", "lm_unigrams", "lm_totals")
       .foreach(t => deregisterPreservingBytes(p + t))
     val bytesBefore = storeFiles(p)
@@ -175,7 +175,7 @@ class CrossSessionStoreSpec extends AnyFunSuite {
     val p = queries.TextQueries.bpePrefixName(sf)
 
     // process restart: memo amnesia + empty catalog, bytes preserved
-    queries.TextQueries.forgetSessionMemos()
+    Memo.forget()
     deregisterPreservingBytes(p + "merges")
     val bytesBefore = storeFiles(p)
     assert(bytesBefore.nonEmpty, "merge-table bytes must survive the 'restart'")
@@ -296,14 +296,14 @@ class CrossSessionStoreSpec extends AnyFunSuite {
 
     // same path, different bytes — the trap adoption must NOT fall into
     writeCorpus(5)
-    queries.TextQueries.forgetSessionMemos()
+    Memo.forget()
     val p2 = queries.TextQueries.postingsPrefix(spark, dir.toString)
     assert(p2 == p, "prefix is path-derived, so only the sentinel can tell")
     assert(PostingsStore.stats(spark, p2).head().getLong(0) == 5L,
       "a regenerated corpus must force a rebuild, not serve stale rows")
     StoreSentinel.drop(spark, p)
     PostingsStore.drop(spark, p)
-    queries.TextQueries.forgetSessionMemos()
+    Memo.forget()
   }
 
   test("a restarted daily-revenue stream store resumes accumulated state") {

@@ -301,7 +301,7 @@ class EmbeddingAnnSpec extends AnyFunSuite {
     (0L until 16L).filter(i => i != 3L && i != 7L).foreach { i =>
       assert(out(i) == ((i, -1L, true)), s"pivot $i: ${out(i)}")
     }
-    graft.Caches.clearAll()
+    graft.Memo.clearAll()
   }
 
   test("kNN labeling: planted clusters vote unanimously and correctly") {
@@ -332,7 +332,7 @@ class EmbeddingAnnSpec extends AnyFunSuite {
     // however many candidates the 2 probed cells held (16 seed cells
     // over 40 vectors leaves some cells sparse — k=5 is a cap)
     assert(got.forall(g => g._3 >= 1L && g._3 <= 5L))
-    graft.Caches.clearAll()
+    graft.Memo.clearAll()
   }
 
   test("MMR: greedy selection matches a driver-side reference; diversity beats redundancy") {
@@ -381,7 +381,7 @@ class EmbeddingAnnSpec extends AnyFunSuite {
     // diversity: the 2nd pick is NOT from the duplicate cluster
     assert(!Set(2L, 3L).contains(got(1)._2),
       s"second pick must be a diverse point, got ${got(1)._2}")
-    graft.Caches.clearAll()
+    graft.Memo.clearAll()
   }
 
   test("kNN labeling on the driver corpus: one verdict per query, votes within k") {

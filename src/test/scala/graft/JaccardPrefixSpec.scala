@@ -74,7 +74,7 @@ class JaccardPrefixSpec extends AnyFunSuite
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(got.toSeq == Seq((1L, 2L, 0.8)),
       s"threshold-exact pair must survive the prefix filter: ${got.toSeq}")
-    graft.Caches.clearAll()
+    graft.Memo.clearAll()
   }
 
   test("adaptive regime pick: thin-df corpus → inverted-index, boilerplate-heavy → prefix") {
@@ -121,7 +121,7 @@ class JaccardPrefixSpec extends AnyFunSuite
     val p = run("prefix"); val i = run("inverted")
     assert(p == i, s"plans must agree: only-prefix=${p -- i}, only-inverted=${i -- p}")
     assert(p.nonEmpty, "mixed fixture must contain strong duplicates")
-    graft.Caches.clearAll()
+    graft.Memo.clearAll()
   }
 
   test("randomized corpora: prefix and inverted plans agree on every trial") {
@@ -158,7 +158,7 @@ class JaccardPrefixSpec extends AnyFunSuite
       val p = run("prefix"); val i = run("inverted")
       assert(p == i, s"trial $trial diverged: only-prefix=${p -- i}, " +
         s"only-inverted=${i -- p}\n docs=$docs")
-      graft.Caches.clearAll()
+      graft.Memo.clearAll()
     }
   }
 }

@@ -51,7 +51,7 @@ class LinkageQueriesSpec extends AnyFunSuite {
         .as[(Long, Long, Double)].collect().toSet
       assert(got == Set((1L, 2L, 1.0)),
         s"containment must be directional (contained, container): $got")
-    } finally graft.Caches.clearAll()
+    } finally graft.Memo.clearAll()
   }
 
   test("community_lpa: two cliques joined by one bridge edge resolve to two communities") {

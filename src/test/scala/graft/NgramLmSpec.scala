@@ -103,7 +103,7 @@ class NgramLmSpec extends AnyFunSuite {
     val want = ("ice", "cream", 6L, refLog2Fp(170L) - refLog2Fp(6L))
     assert(got.toSeq == Seq(want),
       s"keep set must be exactly the planted collocation, got ${got.toSeq}")
-    graft.Caches.clearAll()
+    graft.Memo.clearAll()
   }
 
   private object Tables {

@@ -55,7 +55,7 @@ class RetryGateSpec extends AnyFunSuite {
     val phases = Iterator(slow, quiet)
     var cleared = 0
     val o = RetryGate.run(3) { attempt =>
-      if (attempt > 0) cleared += 1 // stands in for Caches.clearAll()
+      if (attempt > 0) cleared += 1 // stands in for Memo.clearAll()
       val b = phases.next()
       (b, MemoGate.evaluate(b, pins))
     } { case ((_, v), _) => v.degraded }

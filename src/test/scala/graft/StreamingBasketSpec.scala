@@ -117,7 +117,7 @@ class StreamingBasketSpec extends AnyFunSuite {
         "delete must cancel exactly the capped subset the ingest kept")
     } finally {
       BasketStream.drop(spark, prefix)
-      graft.Caches.clearAll()
+      graft.Memo.clearAll()
     }
   }
 }

@@ -24,6 +24,16 @@ class SweepKnobsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("GRAFT_SWEEP_MODE"))
   }
 
+  test("SPARK_GRAFT_PLANFULL is read through the same gate") {
+    val e = intercept[IllegalStateException] {
+      queries.EmbeddingQueries.planFull(env("SPARK_GRAFT_PLANFULL" -> "1"))
+    }
+    assert(e.getMessage.contains("SPARK_GRAFT_PLANFULL"))
+    assert(queries.EmbeddingQueries.planFull(
+      env("SPARK_GRAFT_PLANFULL" -> "1", SweepKnobs.ModeVar -> "1")))
+    assert(!queries.EmbeddingQueries.planFull(env()))
+  }
+
   test("GRAFT_SWEEP_MODE must be exactly '1' — not merely set") {
     intercept[IllegalStateException] {
       SweepKnobs.gate("GRAFT_TRI_SAMPLE_MOD", Some(5L), "sampled graph",
@@ -53,9 +63,11 @@ class SweepKnobsSpec extends AnyFunSuite {
     // this suite must run in a knob-free environment (the production
     // default), so touching them must not throw.
     assert(sys.env.get("GRAFT_PMI_OFFSET_FP").isEmpty &&
-      sys.env.get("GRAFT_TRI_SAMPLE_MOD").isEmpty,
+      sys.env.get("GRAFT_TRI_SAMPLE_MOD").isEmpty &&
+      sys.env.get("SPARK_GRAFT_PLANFULL").isEmpty,
       "test JVM must not carry sweep knobs")
     assert(queries.LmQueries.all.nonEmpty)
     assert(queries.TextQueries.all.nonEmpty)
+    assert(queries.EmbeddingQueries.all.nonEmpty)
   }
 }
