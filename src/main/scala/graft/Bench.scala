@@ -83,22 +83,7 @@ object Bench {
     // a typo'd stream knob must die here, not archive a mislabeled run
     // (ADVICE r16) — validate before any session or warmup work
     StreamBench.validateKnobs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // cap the no-stats runtime-bloom fallback (see GraftSession):
-      // an unestimated creation side otherwise ships a 1 MiB bloom in
-      // every dependent stage's task binary
-      .config("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "4194304")
-      // Registry-sized generated-class cache (see GraftSession): the
-      // 100-entry default thrashes under a 180-query sweep, so every
-      // min-of-3 pass pays full Janino recompilation for every query.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Warmup: JVM/codegen/session init must not be billed to the first
     // query (it was ~4s of a1's 5.2s before this). SYNTHETIC data only

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: time individual registered queries (repeatedly) against
   * SPARK_GRAFT_SF_DIR. Not part of the driver contract — used to chase
   * per-query scale behavior that the one-shot `Bench` run can't separate
@@ -14,15 +12,9 @@ import org.apache.spark.sql.SparkSession
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Per-stage metrics: localizes a slow rep to a stage and separates
     // CPU from GC from shuffle-write from scheduler idle time.

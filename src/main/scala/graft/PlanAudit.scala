@@ -628,16 +628,8 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq else DefaultNames
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // match the bench/GraftSession runtime-bloom cap so audited
-      // plans are the shipped plans
-      .config("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the shipped session, so audited plans are the shipped plans
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>
       val (plan, smells) = audit(spark, sfDir, name)

@@ -1,16 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Mirrors the driver's t1 smoke: run SparkEntry.entry and require rows>0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val n = df.count()

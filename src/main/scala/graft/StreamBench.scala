@@ -245,12 +245,7 @@ object StreamBench {
     val nChunks = args.lift(1).map(_.toInt).getOrElse(10)
     val attempts = args.lift(2).map(_.toInt).getOrElse(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     val (readings, flips) = runAttempts(spark, sfDir, nChunks, attempts)
     val eps = readings.max

@@ -132,15 +132,10 @@ object AccessService {
     * event is one user touching the platform, which access-checks every
     * registered feature (the reference logs an attempt on each
     * `GET /can<feature>`, user_feature.py:52-55); `success` is the
-    * user's grant. One user_id join against the wide grants frame, then
-    * a zero-shuffle stack() unpivot — rows = events × features without
-    * a per-feature join. */
-  def attemptsFromEvents(events: DataFrame, cfg: EngineConfig): DataFrame =
-    attempts(events, Grants.wide(
-      EventAggregates.perUser(events, cfg.aggregates), cfg), cfg)
-
-  /** Attempt log against an already-built wide grants frame — callers
-    * that also serve grants reuse one aggregation for both. */
+    * user's grant. One user_id join against an already-built wide
+    * grants frame (callers that also serve grants reuse one aggregation
+    * for both), then a zero-shuffle stack() unpivot — rows = events ×
+    * features without a per-feature join. */
   def attempts(events: DataFrame, wideGrants: DataFrame,
                cfg: EngineConfig): DataFrame = {
     val stackArgs = cfg.features

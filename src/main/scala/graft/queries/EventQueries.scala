@@ -60,7 +60,7 @@ object EventQueries extends QueryModule {
       |  FROM agg)""".stripMargin
 
   /** Access-attempt log CTE (depends on gWideCte), mirroring
-    * AccessService.attemptsFromEvents: every event access-checks every
+    * AccessService.attempts: every event access-checks every
     * registered feature; success = the user's grant (default TRUE). */
   private val attCte =
     """att AS (

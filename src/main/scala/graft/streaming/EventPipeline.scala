@@ -2,8 +2,8 @@ package graft.streaming
 
 import graft.config._
 import graft.operators.RuleEval
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** The reference's write path as Structured Streaming
   * (SURVEY.md §3.1): events → per-user incremental aggregates →
@@ -18,8 +18,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (models/aggregate.py:41-83): seen-uuid set for dedup, count/sum
   * scalars, distinct-value sets, plus the current grants
   * (user_feature.py:22). Seen-id state is unbounded exactly like the
-  * reference's; production would bound it with
-  * `withWatermark + dropDuplicates` upstream and drop `seenIds`.
+  * reference's in [[grantChanges]]; [[grantChangesBounded]] is the
+  * production shape, deduping within the watermark inside the fold.
   */
 object EventPipeline {
 
@@ -64,10 +64,10 @@ object EventPipeline {
     UserAggState(Map.empty, Map.empty, Map.empty, Map.empty, Map.empty)
 
   /** The shared per-user fold: apply the batch's events in event-time
-    * order, re-evaluate grants after each, collect flips. Both state
-    * APIs (flatMapGroupsWithState and transformWithState) wrap exactly
-    * this, which is what makes their parity a code invariant rather
-    * than a test hope.
+    * order, re-evaluate grants after each, collect flips. Both
+    * flatMapGroupsWithState pipelines ([[grantChanges]] and
+    * [[grantChangesBounded]]) wrap exactly this, which is what makes
+    * their parity a code invariant rather than a test hope.
     *
     * This is the ingest tier's hot loop — it runs once per EVENT on
     * every executor — so it works on mutable accumulators and the
@@ -183,88 +183,6 @@ object EventPipeline {
       state.getOption.getOrElse(emptyState), events)
     state.update(st)
     changes.iterator
-  }
-
-  /** Composite key for the distinct-value sets flattened into one
-    * MapState: (aggregate name, observed value). */
-  final case class DistinctKey(agg: String, v: String)
-
-  /** The same per-user pipeline on Spark 4's transformWithState
-    * StatefulProcessor API. The state is decomposed into typed
-    * MapState handles (the v2 state store's composite state) rather
-    * than one UserAggState blob: each seen-uuid / accumulator /
-    * distinct-member / grant is its OWN RocksDB entry. The unbounded
-    * seen-uuid set is touched ONLY by containsKey point lookups and
-    * point inserts — never materialized — while the bounded state
-    * (accumulators, distinct members, grants: O(config + per-user
-    * cardinality)) is read per batch and written back diffed against
-    * the batch-start snapshot, so unchanged entries cost nothing.
-    * (A UserAggState blob also wouldn't encode: the tws state schema
-    * rejects MapType fields.) TTLConfig.NONE keeps state forever like
-    * the reference's dicts; a real deployment sets a TTL to bound the
-    * seen-uuid state instead of growing it unboundedly. */
-  final class GrantProcessor(cfg: EngineConfig)
-      extends StatefulProcessor[Long, TypedEventRow, GrantChange] {
-    @transient private var seen: org.apache.spark.sql.streaming.MapState[Long, Boolean] = _
-    @transient private var counts: org.apache.spark.sql.streaming.MapState[String, Long] = _
-    @transient private var sums: org.apache.spark.sql.streaming.MapState[String, Double] = _
-    @transient private var distincts: org.apache.spark.sql.streaming.MapState[DistinctKey, Boolean] = _
-    @transient private var grants: org.apache.spark.sql.streaming.MapState[String, Boolean] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      val h = getHandle
-      seen = h.getMapState("seenIds", Encoders.scalaLong, Encoders.scalaBoolean, TTLConfig.NONE)
-      counts = h.getMapState("counts", Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
-      sums = h.getMapState("sums", Encoders.STRING, Encoders.scalaDouble, TTLConfig.NONE)
-      distincts = h.getMapState("distincts",
-        Encoders.product[DistinctKey], Encoders.scalaBoolean, TTLConfig.NONE)
-      grants = h.getMapState("grants", Encoders.STRING, Encoders.scalaBoolean, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(userId: Long, events: Iterator[TypedEventRow],
-                                 timers: TimerValues): Iterator[GrantChange] = {
-      // uuid dedup by POINT LOOKUP — the seen-id set is the unbounded
-      // one and is never materialized: prior-batch dupes are filtered
-      // via containsKey, in-batch dupes via distinctBy (duplicate rows
-      // are identical, so keeping any one is exact), and the fold runs
-      // with trackSeen=false so it neither reads nor grows a seen map.
-      val fresh = events.filterNot(e => seen.containsKey(e.event_id))
-        .toSeq.distinctBy(_.event_id)
-      // the remaining state is O(aggregates + distinct values), read
-      // in full per batch (bounded by config and per-user cardinality,
-      // not by event history)
-      val st0 = UserAggState(
-        seenIds = Map.empty,
-        counts = counts.iterator().map { case (k, v) => k -> v }.toMap,
-        sums = sums.iterator().map { case (k, v) => k -> v }.toMap,
-        distincts = distincts.iterator().toSeq
-          .groupBy(_._1.agg)
-          .map { case (a, ks) => a -> ks.map(k => k._1.v -> k._2).toMap },
-        grants = grants.iterator().map { case (k, v) => k -> v }.toMap)
-      val (st, changes) = foldEvents(cfg, userId, st0, fresh.iterator,
-        trackSeen = false)
-      fresh.foreach(e => seen.updateValue(e.event_id, true))
-      st.counts.foreach { case (k, v) =>
-        if (!st0.counts.get(k).contains(v)) counts.updateValue(k, v) }
-      st.sums.foreach { case (k, v) =>
-        if (!st0.sums.get(k).contains(v)) sums.updateValue(k, v) }
-      st.distincts.foreach { case (a, m) => m.foreach { case (dv, flag) =>
-        if (!st0.distincts.get(a).exists(_.contains(dv)))
-          distincts.updateValue(DistinctKey(a, dv), flag) } }
-      st.grants.foreach { case (k, v) =>
-        if (!st0.grants.get(k).contains(v)) grants.updateValue(k, v) }
-      changes.iterator
-    }
-  }
-
-  /** grantChanges on the transformWithState path; requires the RocksDB
-    * state store provider when run as a streaming query. */
-  def grantChangesTws(spark: SparkSession, events: Dataset[EventRow],
-                      cfg: EngineConfig): Dataset[GrantChange] = {
-    import spark.implicits._
-    typed(events).groupByKey(_.user_id)
-      .transformWithState(new GrantProcessor(cfg),
-        TimeMode.None(), OutputMode.Append())
   }
 
   /** Backlog/observability surface (SURVEY.md S5: the reference's

@@ -1,49 +1,13 @@
 package graft
 
-import graft.operators.{DedupSumAggregator, SkewJoin}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Scale-path operators: one-pass dedup-sum Aggregator and the salted
-  * skew join (equality with the plain join is the contract). */
+/** The native `l2_fp` expression: bit-equal to its higher-order-function
+  * formulation, null-safe, and loud on long overflow. */
 class ScaleOpsSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
-
-  test("DedupSumAggregator sums each uuid once, across partitions") {
-    import spark.implicits._
-    // same uuid in different input partitions → must still count once
-    val ds = spark.sparkContext
-      .parallelize(Seq((1L, 10.0), (2L, 5.0), (1L, 10.0), (3L, 2.5)), numSlices = 4)
-      .toDS()
-    val agg = new DedupSumAggregator().toColumn
-    val out = ds.select(agg).head()
-    assert(out == 17.5)
-  }
-
-  test("DedupSumAggregator per key via groupByKey") {
-    import spark.implicits._
-    val ds = Seq(
-      (1L, (10L, 1.0)), (1L, (10L, 1.0)), (1L, (11L, 2.0)),
-      (2L, (12L, 5.0)))
-      .toDS()
-    val out = ds.groupByKey(_._1).mapValues(_._2)
-      .agg(new DedupSumAggregator().toColumn.name("s"))
-      .collect().toMap
-    assert(out == Map(1L -> 3.0, 2L -> 5.0))
-  }
-
-  test("salted join equals the plain join") {
-    import spark.implicits._
-    val big = (1 to 1000).map(i => (i % 3, i.toLong)).toDF("k", "id")
-    val small = Seq((0, "a"), (1, "b"), (2, "c"), (9, "z")).toDF("k", "v")
-    val plain = big.join(small, Seq("k")).select("k", "id", "v")
-      .collect().map(_.toSeq).toSet
-    val salted = SkewJoin.salted(big, small, "k", 8,
-      pmod(xxhash64(col("id")), lit(8)))
-      .select("k", "id", "v").collect().map(_.toSeq).toSet
-    assert(salted == plain)
-  }
 
   test("native l2_fp is bit-equal to the HOF formulation (and null-safe)") {
     import spark.implicits._

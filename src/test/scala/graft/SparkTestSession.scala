@@ -2,25 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session per JVM for all suites. Registers
-  * GraftExtensions at construction so SQL-surface tests (hll_*,
-  * bloom_*, simhash, ...) resolve regardless of which suite creates
-  * the session first. */
+/** One shared local session per JVM for all suites, built by the
+  * shipped factory so specs plan under the product's settings
+  * (GraftExtensions, so SQL-surface tests — hll_*, bloom_*, simhash,
+  * ... — resolve regardless of which suite creates the session first;
+  * the registry-sized codegen cache; the runtime-bloom cap). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // registry-sized generated-class cache (see GraftSession): the
-      // suite drives the full registry several times (PlanAudit,
-      // Verify-shaped specs), and the 100-entry default recompiles
-      // every repeated plan
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .getOrCreate()
+    val s = GraftSession.local(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -62,6 +62,8 @@ class StreamingParitySpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("bounded_flips")
       .outputMode("append").start()
     try {
+      // queueMetrics (the reference's GET /queue-size): no progress yet
+      assert(EventPipeline.queueMetrics(q)("batch_id") == -1L)
       ms.addData(Seq(
         ev(1, 4, "purchase", 600.0, 1),
         ev(2, 4, "error", 700.0, 2)))  // revoke purchase
@@ -70,6 +72,10 @@ class StreamingParitySpec extends AnyFunSuite {
         ev(2, 4, "error", 700.0, 2),   // duplicate inside watermark → dropped
         ev(3, 4, "purchase", 200.0, 3))) // re-grant
       q.processAllAvailable()
+      // two batches in, one user's state row
+      val m = EventPipeline.queueMetrics(q)
+      assert(m("batch_id").asInstanceOf[Long] >= 1L, m)
+      assert(m("state_rows") == 1L, m)
     } finally q.stop()
     val flips = spark.table("bounded_flips").as[GrantChange].collect().toSeq
     assert(flips == Seq(
