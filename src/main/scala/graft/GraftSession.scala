@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.{ForkFreeLocalFileSystem, ForkFreeLocalFs}
 import org.apache.spark.sql.SparkSession
 
 /** User-facing session factory with the engine's recommended
@@ -44,6 +45,11 @@ object GraftSession {
       // must be set before the first codegen, i.e. here.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+      // `file:` through both Hadoop filesystem APIs without a chmod or
+      // readlink subprocess per checkpoint, state or bucket file
+      // (graft.sources.ForkFreeRawLocalFileSystem).
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
 
   /** Local development/test shape. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =

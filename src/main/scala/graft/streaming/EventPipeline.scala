@@ -191,8 +191,12 @@ object EventPipeline {
     * progress rather than an in-process counter. */
   def queueMetrics(q: org.apache.spark.sql.streaming.StreamingQuery): Map[String, Any] = {
     Option(q.lastProgress).map { p =>
+      // An idle trigger reports progress too, with no `addBatch` phase,
+      // under the id of the batch it did not run: the last batch that
+      // ran is the one before it (-1 when none has).
+      val ran = p.durationMs.containsKey("addBatch")
       Map(
-        "batch_id" -> p.batchId,
+        "batch_id" -> (if (ran) p.batchId else p.batchId - 1),
         "num_input_rows" -> p.numInputRows,
         "input_rows_per_sec" -> p.inputRowsPerSecond,
         "process_rows_per_sec" -> p.processedRowsPerSecond,
