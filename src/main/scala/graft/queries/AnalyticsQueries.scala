@@ -34,11 +34,8 @@ object AnalyticsQueries extends QueryModule {
   private val WeekUs = 604800000000L // 7 * 86400 * 1e6
   private val DayUs = 86400000000L
 
-  /** Funnel step-conversion window: 24 h in µs (see funnel_conversion).
-    * Package-visible: FunnelStream's per-event state transitions apply
-    * the SAME window, and referencing one constant is what makes the
-    * stream/batch funnel parity structural rather than a comment. */
-  private[graft] val StepWindowUs = 86400000000L
+  /** Funnel step-conversion window: 24 h in µs (see funnel_conversion). */
+  private val StepWindowUs = 86400000000L
 
   /** Market-basket min-support floor. ONE constant feeds all three
     * places that must agree for the streaming==batch invariant: the

@@ -166,32 +166,11 @@ object PackingQueries extends QueryModule {
   private val Epochs = 2
   private val NShards = 8
 
-  /** The tokenized-and-packed training stream `(seq_id, position,
-    * token_id)` — `bpe_encode`'s learned tokenizer composed with
-    * `pack_sequences`' concat-and-chunk packer, i.e. the frame a
-    * training job's data loader actually reads. Documents are BPE-
-    * segmented with the shared merge table (broadcast, vocab-sized;
-    * encoding is embarrassingly parallel), token ids come from the
-    * deterministic vocab rank (distinct encoded symbols in
-    * lexicographic order — ASCII corpus, so Spark UTF-16 and DuckDB
-    * memcmp order agree), and each token's GLOBAL stream offset is
-    * its document's two-phase prefix-sum start (the `pack_sequences`
-    * recipe — no whole-corpus single-partition window) plus its
-    * in-document position. `seq_id`/`position` are the offset's
-    * div/mod by [[Cap]]. Both the distinct-word join and the vocab
-    * rank are built for an UNBOUNDED web-corpus vocabulary (size-
-    * gated broadcast via Bpe.vocabJoin; two-phase symbol rank), and
-    * no partition-less window exists anywhere in the plan — the
-    * prefix offsets are driver-side (`prefixFrame`), asserted by
-    * PackingQueriesSpec on the executed plan. Shared by the
-    * `pack_sequences_bpe` gate query and the CorpusWriter
-    * shard-export spec. */
   /** Encode a document frame's DISTINCT words with a merge table and
     * freeze + measure the result (the vocabulary-granularity recipe:
     * the sequential merge loop runs once per distinct word; see
-    * Bpe.freezeVocab). Shared by the batch packer and the streaming
-    * twin's per-micro-batch encode. */
-  private[graft] def encodeWords(s: SparkSession, d: DataFrame,
+    * Bpe.freezeVocab). */
+  private def encodeWords(s: SparkSession, d: DataFrame,
       merges: Seq[graft.operators.Bpe.Merge]): (DataFrame, Long) =
     graft.operators.Bpe.freezeVocab(
       graft.operators.Bpe.wordSegments(s, d, merges)
@@ -205,10 +184,9 @@ object PackingQueries extends QueryModule {
     * gated by MEASURED vocab size (Bpe.vocabJoin — a raw web corpus
     * has an unbounded word vocabulary), and the global offsets are
     * the two-phase prefix sum (rangeParted + driver-side
-    * prefixFrame). The streaming twin (PackingStream) calls this per
-    * micro-batch and shifts `off` by the persisted tail. */
-  private[graft] def symbolStream(d: DataFrame, ws: DataFrame,
-                                  nVocab: Long): DataFrame = {
+    * prefixFrame). */
+  private def symbolStream(d: DataFrame, ws: DataFrame,
+                           nVocab: Long): DataFrame = {
     val wordRows = d
       .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("wi", "w")))
       .filter(length(col("w")) > 0)
@@ -252,37 +230,42 @@ object PackingQueries extends QueryModule {
       .select(col("sym"), (col("rn") + col("before") - 1).as("token_id"))
   }
 
-  /** The shipped tokenizer artifact pair: the memoized merge table +
-    * the corpus-wide symbol vocab `(sym, token_id)`. The streaming
-    * packer (PackingStream) treats both as FROZEN — new documents
-    * encode against them, exactly like a production tokenizer. */
-  private[graft] def bpeTokenizer(s: SparkSession,
-      dir: String): (Seq[graft.operators.Bpe.Merge], DataFrame) = {
-    val merges = TextQueries.bpeMergesCached(s, dir)
-    val (ws, _) = encodeWords(s, docs(s, dir), merges)
-    (merges, symbolVocab(ws))
-  }
+  /** The reserved out-of-vocabulary token id. Vocab ids are the
+    * 0-based lexicographic ranks, so -1 is provably outside the id
+    * space. A frozen production tokenizer MUST ship one: a symbol
+    * first seen after the vocab froze still consumed its offset, and a
+    * training loader needs a row there, not a hole. */
+  private val UnkTokenId: Long = -1L
 
-  /** Sequence capacity, shared with the streaming packer. */
-  private[graft] val SeqCap: Long = Cap.toLong
-
-  /** The reserved out-of-vocabulary token id, shared by the batch
-    * packer and the streaming twin. Vocab ids are the 0-based
-    * lexicographic ranks, so -1 is provably outside the id space. A
-    * frozen production tokenizer MUST ship one: a symbol first seen
-    * after the vocab froze still consumed its offset, and a training
-    * loader needs a row there, not a hole. */
-  private[graft] val UnkTokenId: Long = -1L
-
+  /** The tokenized-and-packed training stream `(seq_id, position,
+    * token_id)` — `bpe_encode`'s learned tokenizer composed with
+    * `pack_sequences`' concat-and-chunk packer, i.e. the frame a
+    * training job's data loader actually reads. Documents are BPE-
+    * segmented with the shared merge table (broadcast, vocab-sized;
+    * encoding is embarrassingly parallel), token ids come from the
+    * deterministic vocab rank (distinct encoded symbols in
+    * lexicographic order — ASCII corpus, so Spark UTF-16 and DuckDB
+    * memcmp order agree), and each token's GLOBAL stream offset is
+    * its document's two-phase prefix-sum start (the `pack_sequences`
+    * recipe — no whole-corpus single-partition window) plus its
+    * in-document position. `seq_id`/`position` are the offset's
+    * div/mod by [[Cap]]. Both the distinct-word join and the vocab
+    * rank are built for an UNBOUNDED web-corpus vocabulary (size-
+    * gated broadcast via Bpe.vocabJoin; two-phase symbol rank), and
+    * no partition-less window exists anywhere in the plan — the
+    * prefix offsets are driver-side (`prefixFrame`), asserted by
+    * PackingQueriesSpec on the executed plan. Shared by the
+    * `pack_sequences_bpe` gate query and the CorpusWriter
+    * shard-export spec. */
   private[graft] def bpePackedTokens(s: SparkSession, dir: String): DataFrame = {
     val merges = TextQueries.bpeMergesCached(s, dir)
     // the frame is frozen + counted ONCE (freezeVocab) so the corpus
     // join and the symbol-vocab rank read the same materialization
     val (ws, nVocab) = encodeWords(s, docs(s, dir), merges)
     // left join + UNK coalesce: self-trained vocab covers every
-    // symbol here (identical output to an inner join), but the twin
-    // must share the streaming packer's frozen-tokenizer contract —
-    // an out-of-vocab symbol maps to UnkTokenId at its offset
+    // symbol here (identical output to an inner join), but the
+    // frame keeps a frozen tokenizer's contract — an out-of-vocab
+    // symbol maps to UnkTokenId at its offset
     symbolStream(docs(s, dir), ws, nVocab)
       .join(broadcast(symbolVocab(ws)), Seq("sym"), "left_outer")
       .select(expr(s"off div $Cap").as("seq_id"),
@@ -301,9 +284,7 @@ object PackingQueries extends QueryModule {
 
   /** corpus_drift's INPUT frame: per-token occurrence counts in the
     * train vs eval split (doc_id % 10, the decontaminate convention) —
-    * `(token, c_train, c_eval)`. Shared with the streaming monitor
-    * (DriftMonitorStream), whose store accumulates exactly this frame
-    * additively per micro-batch. */
+    * `(token, c_train, c_eval)`. */
   def driftCounts(d: DataFrame): DataFrame =
     d.select((col("doc_id") % 10 === 0).as("is_eval"),
         explode(tokens(col("text"))).as("token"))

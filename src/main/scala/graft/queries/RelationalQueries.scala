@@ -501,8 +501,8 @@ object RelationalQueries extends QueryModule {
     // quantile sketch (QuantileOps — relative-error alpha, merge =
     // bucket-wise count ADDITION, so unlike approx_percentile's GK
     // state the bytes are a maintainable store column: batch build,
-    // streaming union, and rollup re-aggregation all commute exactly;
-    // see QuantileStore + StreamingQuantileSpec). Bound-checked
+    // union of per-chunk sketches, and rollup re-aggregation all
+    // commute exactly; see QuantileSketchSpec). Bound-checked
     // against the exact sort-based percentile; no SQL oracle — sketch
     // internals are engine-specific, like the HLL and GK rows.
     // The sketch-quantile idea under the FULL hash gate (the

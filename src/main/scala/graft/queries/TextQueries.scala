@@ -228,7 +228,7 @@ object TextQueries extends QueryModule {
 
   /** LSH band signatures `(doc_id, band, sig)` of a distinct
     * `(doc_id, s, h)` shingle frame — the per-doc artifact a
-    * signature store persists (MinHashDedupStream's index rows).
+    * signature store would persist.
     * The minhash aggregate is cached: the banding self-join (and the
     * incremental probe) read it from both sides, and uncached Spark
     * recomputes the whole shingle→minhash aggregate per side
@@ -289,8 +289,7 @@ object TextQueries extends QueryModule {
   /** Batch MinHash+LSH near-dup cluster labels for an arbitrary
     * `[doc_id, text]` frame: the dedup_clusters pipeline (shingle →
     * minhash → band collision → exact Jaccard ≥ 0.5 → connected
-    * components) without the per-source memo — the ground truth the
-    * streaming index (MinHashDedupStream) converges to. */
+    * components) without the per-source memo. */
   def minhashClusterLabels(d: DataFrame): DataFrame = {
     val t = tokens(col("text"))
     val sh = d.filter(size(t) >= 3)
@@ -488,20 +487,16 @@ object TextQueries extends QueryModule {
   }
 
   /** Per-source KMV token sketches `(source, sk)` — the one scan that
-    * makes every pairwise overlap question afterwards free. Shared by
-    * `source_overlap_kmv` and the incremental OverlapMonitorStream
-    * (KMV union is associative AND canonical, so the stream's
-    * accumulated sketch bytes are bit-identical to this one-shot
-    * build). */
+    * makes every pairwise overlap question afterwards free. KMV union
+    * is associative AND canonical, so sketches built per chunk and
+    * unioned are bit-identical to this one-shot build. */
   def sourceSketches(d: DataFrame, k: Int = 256): DataFrame = d
     .select(col("source"), explode(tokens(col("text"))).as("token"))
     .groupBy(col("source"))
     .agg(graft.functions.expressions.KmvSketchBuild(col("token"), k).as("sk"))
 
   /** Pairwise overlap estimates over a `(source, sk)` sketch frame —
-    * pure arithmetic, #sources² bounded pairs on a broadcast. One
-    * definition serves the batch query and the streaming monitor's
-    * read path. */
+    * pure arithmetic, #sources² bounded pairs on a broadcast. */
   def sourceOverlap(sk: DataFrame): DataFrame = {
     val a = sk.select(col("source").as("source_a"), col("sk").as("sk_a"))
     val b = sk.select(col("source").as("source_b"), col("sk").as("sk_b"))
@@ -1171,9 +1166,9 @@ object TextQueries extends QueryModule {
     // plan is delta-scoped end to end: band signatures are computed
     // for the delta, candidates come from joining ONLY delta band
     // keys against the full signature side (at 100 TB the base
-    // signatures are the persisted MinHashDedupStream index — build
-    // once, probe per batch; here both sides derive from the same
-    // cached minhash frame), and Jaccard verification touches only
+    // signatures would be a persisted index — build once, probe per
+    // batch; here both sides derive from the same cached minhash
+    // frame), and Jaccard verification touches only
     // collision pairs. Work is O(|delta| + collisions), never
     // O(corpus). Result ≡ the full-batch pipeline filtered to pairs
     // whose newer side is in the delta — which is exactly what the

@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * there, the FULL corpus re-assigns to cells inside every probe; at
   * 100 TB that is a corpus scan per query batch. Here assignment is
   * materialized once into a cell-bucketed store and maintained
-  * incrementally on ingest (the DocDedupStream pattern), and a probe
+  * incrementally on ingest, and a probe
   * reads ONLY the bucket files its nProbe cells hash into
   * ([[BucketedUpsert.readKeys]]) — O(cells probed), not O(corpus).
   *
@@ -37,7 +37,7 @@ object IvfIndexStore {
 
   private[graft] def pivotsTable(p: String): String = p + "_pivots"
   private[graft] def cellsTable(p: String): String = p + "_cells"
-  private[graft] def codebooksTable(p: String): String = p + "_codebooks"
+  private def codebooksTable(p: String): String = p + "_codebooks"
   private[graft] def codesTable(p: String): String = p + "_codes"
 
   private def cosine(a: Column, b: Column): Column =

@@ -9,10 +9,9 @@ import org.apache.spark.sql.types._
 
 /** Streaming revenue-anomaly monitor: the per-(type, day) daily frame
   * behind `revenue_anomaly_mad`, maintained incrementally per ingest
-  * micro-batch — the DriftMonitorStream pattern applied to the
-  * telemetry-analytics family. Each arriving batch of events reduces
-  * to ITS OWN `(event_type, day, n_events, rev)` delta (one map-side-
-  * combined groupBy, O(types×days-touched) rows) and merges
+  * micro-batch. Each arriving batch of events reduces to ITS OWN
+  * `(event_type, day, n_events, rev)` delta (one map-side-combined
+  * groupBy, O(types×days-touched) rows) and merges
   * ADDITIVELY into a day-bucketed store. Counts and DECIMAL sums are
   * associative over disjoint event sets, so the store equals the
   * one-shot batch aggregation after ANY chunking of the feed —
@@ -27,7 +26,7 @@ import org.apache.spark.sql.types._
   *
   * Exactly-once: additive merges are NOT replay-idempotent, so every
   * micro-batch carries its foreachBatch batchId into the store's
-  * replay guard (same contract as DriftMonitorStream/AggStore).
+  * replay guard (the AggStore contract).
   */
 object AnomalyMonitorStream {
 

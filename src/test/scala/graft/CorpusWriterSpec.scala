@@ -198,4 +198,33 @@ class CorpusWriterSpec extends AnyFunSuite {
     val self = CorpusWriter.diff(spark, v1Path, v1Path)
     assert(self.filter(col("status") =!= "unchanged").count() == 0)
   }
+
+  test("assemble -> export -> grow -> re-export -> diff is the release gate") {
+    val (v1, v2) = (tmp(), tmp())
+    val selected = SparkEntry.queries("corpus_assemble")(spark, dir)
+      .join(Tables.documents(spark, dir).select("doc_id", "text"), Seq("doc_id"))
+      .select("doc_id", "source", "score", "n_tok", "text")
+    CorpusWriter.write(selected, v1, Seq("source"), "doc_id",
+      rowsPerFile = 100, tokenCol = Some("n_tok"))
+
+    // v2: one source gains a doc (changed), one vanishes (removed)
+    val grown = selected
+      .filter(col("source") =!= selected.select(min("source")).head().getString(0))
+      .unionByName(selected.limit(1)
+        .withColumn("doc_id", col("doc_id") + 1000000L))
+    CorpusWriter.write(grown, v2, Seq("source"), "doc_id",
+      rowsPerFile = 100, tokenCol = Some("n_tok"))
+
+    val d = CorpusWriter.diff(spark, v1, v2).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(d.values.exists(_ == "removed"), d.toString)
+    assert(d.values.exists(_ == "changed"), d.toString)
+    assert(d.values.count(_ == "unchanged") > 0, d.toString)
+    // the gate answers the release question: what moved, without
+    // scanning either corpus
+    val drift = CorpusWriter.diff(spark, v1, v2)
+      .filter(col("status") === "changed")
+      .select(sum(col("rows_new") - col("rows_old"))).head().getLong(0)
+    assert(drift == 1L, s"one added doc must surface as +1 row, got $drift")
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.TextOps
-import graft.functions.expressions.{CmsEstimate, CmsOps, CountMinAgg}
+import graft.functions.expressions.{CmsEstimate, CmsOps, CmsUnion, CountMinAgg}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -40,6 +40,14 @@ class CountMinSpec extends AnyFunSuite {
       CmsOps.deserialize(sketchOf(3, a)), CmsOps.deserialize(sketchOf(5, b))))
     assert(java.util.Arrays.equals(one, merged),
       "merged half-sketches differ from the one-shot sketch")
+
+    // the same merge through the cms_union expression; the repartition
+    // keeps the optimizer from evaluating it into the local relation
+    val unioned = Seq((sketchOf(3, a), sketchOf(5, b))).toDF("x", "y")
+      .repartition(1).select(CmsUnion(col("x"), col("y")))
+      .head().getAs[Array[Byte]](0)
+    assert(java.util.Arrays.equals(one, unioned),
+      "cms_union of the half-sketches differs from the one-shot sketch")
   }
 
   test("never underestimates; overestimates exist above width cells") {
