@@ -13,7 +13,9 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * `HllUnion` / `HllEstimate` expressions merge and read such columns.
   * Because union is elementwise max, a distinct-count kept as a
   * sketch column is incrementally maintainable: each micro-batch
-  * unions its delta sketch into the stored one (AggStore), and any
+  * unions its delta sketch into the stored one (a `BucketedUpsert`
+  * merge of `HllUnion`, as `BucketedUpsertSpec`'s additive model
+  * test runs it), and any
   * rollup (day → month, user → cohort) is a re-aggregation of bytes,
   * never a recount of 100 TB of raw events.
   */

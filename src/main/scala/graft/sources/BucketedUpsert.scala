@@ -1,11 +1,19 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{InternalRow, TableIdentifier}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BoundReference, GenericInternalRow, InterpretedOrdering, SortOrder, UnsafeProjection, UnsafeRow, Unevaluable}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, Project}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Generic O(delta) upsert into a bucketed generation table — the
-  * storage primitive under GrantStore (last-writer-wins grants) and
-  * AggStore (additive aggregate snapshots).
+  * storage primitive under GrantStore (last-writer-wins grants) and the
+  * additive stores (LM counts, baskets, anomaly baselines).
   *
   * Layout: the served name is a catalog VIEW over the current
   * generation table (`t__a` / `t__b`), bucketed+sorted by `bucketKey`.
@@ -363,15 +371,39 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
   /** The bucket ids the delta's keys land in — Spark's bucketing hash
     * is `pmod(murmur3(key), n)`, identical to the SQL `hash()`
     * function, so the pruning computation matches the writer's
-    * placement exactly. Deduplicated inside each partition rather
-    * than by `distinct()`, so the set costs one job with no shuffle
-    * beyond what computing `delta` itself needs. */
+    * placement exactly. */
   private[graft] def affectedBuckets(delta: DataFrame, bucketKey: String,
                                      buckets: Int): Set[Int] =
-    delta.select(pmod(hash(col(bucketKey)), lit(buckets)))
-      .as(Encoders.scalaInt)
-      .mapPartitions((ids: Iterator[Int]) => ids.toSet.iterator)(Encoders.scalaInt)
-      .collect().toSet
+    deltaBuckets(delta.queryExecution.toRdd, delta.schema, bucketKey, buckets, rowBudget = -1)._1
+
+  /** [[affectedBuckets]] of the rows `delta` of `schema`, and while
+    * there are at most `rowBudget` of them, the rows themselves with
+    * their bucket ids (None past the budget). One job: the bucket id
+    * is the bucketed writer's own expression
+    * (`HashPartitioning(key, buckets).partitionIdExpression`), each
+    * partition deduplicates its ids rather than a `distinct()`
+    * shuffling them, and stops keeping rows once it holds more than
+    * the budget, so the collect is bounded by partitions × budget
+    * whatever the delta's size. */
+  private[graft] def deltaBuckets(delta: RDD[InternalRow], schema: StructType, bucketKey: String,
+                                  buckets: Int, rowBudget: Int)
+      : (Set[Int], Option[Seq[(Int, InternalRow)]]) = {
+    val key = schema.fieldIndex(bucketKey)
+    val bucketOf = HashPartitioning(Seq(BoundReference(key, schema(key).dataType, nullable = true)),
+      buckets).partitionIdExpression
+    val parts = delta.mapPartitions { rows =>
+      val ids = scala.collection.mutable.Set.empty[Int]
+      val kept = scala.collection.mutable.ArrayBuffer.empty[(Int, InternalRow)]
+      rows.foreach { r =>
+        val id = bucketOf.eval(r).asInstanceOf[Int]
+        ids += id
+        if (kept.size <= rowBudget) kept += id -> r.copy()
+      }
+      Iterator(ids.toArray -> kept.toArray)
+    }.collect()
+    val kept = parts.flatMap(_._2)
+    (parts.flatMap(_._1).toSet, Option.when(kept.length <= rowBudget)(kept.toSeq))
+  }
 
   /** The last applied (query id, batch id) recorded on a generation
     * table (the at-least-once replay guard for NON-idempotent merges).
@@ -418,8 +450,10 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
 
   /** Merge `delta` into `table`: rows join on `joinKeys`; every other
     * column combines via `merge(name, existing, delta)` — default
-    * last-writer-wins (`coalesce(delta, existing)`); AggStore passes
-    * an additive merge. Delta schema must equal the table's.
+    * last-writer-wins (`coalesce(delta, existing)`); additive stores
+    * (LM counts, baskets, anomaly baselines) pass a sum. The merge is
+    * any Catalyst column, evaluated as it is on both publish paths
+    * ([[compose]]). Delta schema must equal the table's.
     *
     * `batchId`: foreachBatch is at-least-once — a crash between
     * publish and the stream's commit re-delivers the same micro-batch.
@@ -434,72 +468,99 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
              batchId: Option[Long] = None): Unit = {
     // the merged rows keep the table's column order, whatever position
     // the join keys hold in it
-    val cols = spark.table(table).schema.fieldNames.toSeq
+    val cols = columns(spark, table)
     val valueCols = cols.filterNot(joinKeys.contains)
     // value columns are renamed __delta_* for the merge
     val delta = delta0.select(
       joinKeys.map(col) ++
         valueCols.map(c => col(c).as(s"__delta_$c")): _*)
-    compose(spark, table, delta, joinKeys, bucketKey, buckets, batchId) {
-      existing =>
-        // no broadcast() hint: Spark cannot broadcast-build a FULL
-        // OUTER side (every hint here is ignored with a per-merge
-        // warning). Both sides are delta-bounded anyway — `existing`
-        // is only the touched buckets — so the shuffled join is small
-        // by construction.
-        existing.join(delta, joinKeys, "full_outer")
-          .select(cols.map(c =>
-            if (joinKeys.contains(c)) col(c)
-            else merge(c, col(c), col(s"__delta_$c")).as(c)): _*)
-    }
+    // no broadcast() hint on the Spark path: Spark cannot broadcast-build
+    // a FULL OUTER side (every hint here is ignored with a per-merge
+    // warning). Both sides are delta-bounded anyway — `existing` is
+    // only the touched buckets — so the shuffled join is small by
+    // construction.
+    compose(spark, table, delta, joinKeys, bucketKey, buckets, batchId,
+      Merge("full_outer", cols.map(c =>
+        if (joinKeys.contains(c)) col(c)
+        else merge(c, col(c), col(s"__delta_$c")).as(c))))
   }
 
   /** Delete rows by key — the retention/GDPR path, same O(delta)
     * shape as `upsert`: only the buckets containing `keys0` are
-    * rewritten (as an anti-join against the broadcast key set), every
-    * other bucket file carries forward by link. A key absent from the
-    * table is a no-op, so deletes are replay-idempotent; pass
-    * `batchId` anyway when driven from foreachBatch so a redelivered
-    * tombstone batch skips the rewrite entirely. */
+    * rewritten (as an anti-join against the key set, broadcast on the
+    * Spark path), every other bucket file carries forward by link. A
+    * key absent from the table is a no-op, so deletes are
+    * replay-idempotent; pass `batchId` anyway when driven from
+    * foreachBatch so a redelivered tombstone batch skips the rewrite
+    * entirely. */
   def delete(spark: SparkSession, table: String, keys0: DataFrame,
              joinKeys: Seq[String], bucketKey: String, buckets: Int,
              batchId: Option[Long] = None): Unit = {
     val keys = keys0.select(joinKeys.map(col): _*).distinct()
-    compose(spark, table, keys, joinKeys, bucketKey, buckets, batchId) {
-      existing => existing.join(broadcast(keys), joinKeys, "left_anti")
-    }
+    compose(spark, table, keys, joinKeys, bucketKey, buckets, batchId,
+      Merge("left_anti", columns(spark, table).map(col)))
   }
 
+  /** The served view's columns, from its catalog entry: a metadata
+    * lookup, where `spark.table(table)` analyzes the view. */
+  private def columns(spark: SparkSession, table: String): Seq[String] =
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(table)).schema.fieldNames.toSeq
+
+  /** How a publish combines the touched buckets' rows with the delta:
+    * `existing.join(delta, joinKeys, how)` — "full_outer" or
+    * "left_anti" — then `project` over the join's columns, which puts
+    * the rows back in the table's column order. */
+  private final case class Merge(how: String, project: Seq[Column]) {
+    def outer: Boolean = how == "full_outer"
+  }
+
+  /** The largest delta, in rows, that the bucket-set job hands to the
+    * driver, and the most bytes of touched bucket files that the
+    * driver merges itself. Past either, [[compose]] runs a Spark write
+    * job. A grant micro-batch publishes tens of rows into files of a
+    * few kB; 1,024 rows and 8 MiB keep what the driver decodes per
+    * publish to a few MB of heap. */
+  private[graft] val DriverMergeRows = 1024
+  private[graft] val DriverMergeBytes = 8L << 20
+
   /** The generation-compose core shared by upsert and delete: prune to
-    * the buckets containing `delta`'s keys, rewrite ONLY those via
-    * `transform(existing-touched-rows)`, carry untouched bucket files
-    * forward by hard link, republish the view atomically. `delta` must
-    * contain `joinKeys` (plus whatever the transform needs) and is
-    * persisted here once for the bucket-set collect and the
-    * transform's own reads.
+    * the buckets containing `delta`'s keys, rewrite ONLY those with
+    * `merge`, carry untouched bucket files forward by hard link,
+    * republish the view atomically. `delta` must contain `joinKeys`
+    * (plus whatever the merge reads).
     *
-    * A publish runs two jobs besides the shuffles its plans need: one
-    * computes `delta` and collects its bucket set (empty set = empty
-    * delta, nothing to do), one writes the touched buckets into the
-    * inactive generation — in place, with one task per touched bucket
-    * up to the cluster's parallelism ([[Bucketed.write]]). Everything
-    * else is catalog and filesystem metadata. */
+    * A publish runs one job besides the shuffles that computing
+    * `delta` needs: it computes `delta`, caches its rows, and collects
+    * its bucket set (empty set = empty delta, nothing to do) and, up
+    * to [[DriverMergeRows]], its rows. When those rows came back, the
+    * touched files hold at most [[DriverMergeBytes]] and the inactive
+    * generation already has the merge's layout, the driver rewrites
+    * the touched buckets itself ([[mergeOnDriver]]) and no other job
+    * runs. Otherwise a second job writes them into the inactive
+    * generation — in place, with one task per touched bucket up to the
+    * cluster's parallelism ([[Bucketed.write]]); that is also every
+    * first publish after `materialize`, whose inactive generation does
+    * not exist yet. Everything else is catalog and filesystem
+    * metadata. */
   private def compose(spark: SparkSession, table: String, delta0: DataFrame,
                       joinKeys: Seq[String], bucketKey: String, buckets: Int,
-                      batchId: Option[Long])
-                     (transform: DataFrame => DataFrame): Unit = {
+                      batchId: Option[Long], merge: Merge): Unit = {
     // the delta joins and prunes buckets on the same key; a bucketKey
     // outside joinKeys would surface as an opaque unresolved-column
     // failure deep in affectedBuckets — fail fast with the contract
     require(joinKeys.contains(bucketKey),
       s"bucketKey '$bucketKey' must be one of joinKeys ${joinKeys.mkString("[", ", ", "]")}: " +
         "the merge joins and prunes buckets on the same key")
-    val delta = delta0.persist()
+    // the delta's rows are cached as an RDD, not as a Dataset: adaptive
+    // execution materializes a cached Dataset over a shuffle (a CDC
+    // collapse, a distinct) in a job of its own, ahead of the bucket-set job
+    val cached = delta0.queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // one job folds the delta and collects its buckets; it runs ahead
       // of the replay guard, so a redelivered batch still folds once.
       // Empty or net-zero CDC batches touch nothing and pay no rewrite
-      val touched = affectedBuckets(delta, bucketKey, buckets)
+      val (touched, deltaRows) =
+        deltaBuckets(cached, delta0.schema, bucketKey, buckets, DriverMergeRows)
       if (touched.isEmpty) return
       val gen = inactiveGen(spark, table)
       val (a, b) = generations(table)
@@ -540,14 +601,29 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
         finally listing.close()
         all.partition(p => touched(bucketIdOf(p.getFileName.toString).get))
       }
-      // the transform reads ONLY the touched buckets' files
-      // (bucket-file addressing beats predicate pruning: no scan even
-      // plans over the untouched buckets)
-      val existing =
-        if (touchedFiles.isEmpty) spark.table(table).limit(0)
-        else spark.read.schema(spark.table(table).schema)
-          .parquet(touchedFiles.map(_.toString): _*)
-      Bucketed.write(transform(existing), gen, bucketKey, buckets, touched.size)
+      val onDriver = for {
+        rows <- deltaRows
+        if touchedFiles.iterator.map(java.nio.file.Files.size).sum <= DriverMergeBytes
+        tableSchema = spark.sessionState.catalog.getTableMetadata(TableIdentifier(active)).schema
+        local <- localMerge(spark, gen, tableSchema, delta0.schema, joinKeys, bucketKey,
+          buckets, merge)
+      } yield (rows, tableSchema, local)
+      onDriver match {
+        case Some((rows, tableSchema, local)) =>
+          mergeOnDriver(spark, gen, tableSchema, local, rows, touchedFiles, bucketKey)
+        case None =>
+          val delta = ColumnBridge.ofInternalRows(spark, cached, delta0.schema)
+          // the write job reads ONLY the touched buckets' files
+          // (bucket-file addressing beats predicate pruning: no scan
+          // even plans over the untouched buckets)
+          val existing =
+            if (touchedFiles.isEmpty) spark.table(table).limit(0)
+            else spark.read.schema(spark.table(table).schema)
+              .parquet(touchedFiles.map(_.toString): _*)
+          val right = if (merge.outer) delta else broadcast(delta)
+          Bucketed.write(existing.join(right, joinKeys, merge.how).select(merge.project: _*),
+            gen, bucketKey, buckets, touched.size)
+      }
       // carry untouched buckets forward: link shares the bytes (the
       // "reference" half of generation-compose); copy is the fallback
       // for filesystems without links
@@ -562,6 +638,165 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
       recordBatch(spark, gen, batchId.map(qid -> _))
       spark.sql(s"REFRESH TABLE `$gen`")
       publish(spark, table, gen)
-    } finally delta.unpersist()
+    } finally cached.unpersist(blocking = false)
+  }
+
+  /** One bucket's existing rows and delta rows → its merged rows. */
+  private type BucketMerge = (Seq[InternalRow], Seq[InternalRow]) => Seq[InternalRow]
+
+  /** `merge` made runnable on the driver: its output schema and a
+    * function from one bucket's existing rows and delta rows to its
+    * merged rows. The join is [[localJoin]]; the projection is the
+    * caller's own columns, analyzed and optimized by Catalyst over a
+    * relation laid out as Spark lays out the USING join — the keys,
+    * then the table's other columns, then (full outer) the delta's —
+    * and evaluated by a Catalyst projection. None when the driver
+    * cannot stand in for the write job: a join key whose equality is
+    * not that of its bytes (floating point, a non-binary collation) or
+    * whose type differs between the sides, a projection Catalyst
+    * cannot evaluate outside a plan, or an inactive generation that is
+    * missing or laid out otherwise than the merge's output — the write
+    * job's create path handles those. */
+  private def localMerge(spark: SparkSession, gen: String, tableSchema: StructType,
+                         deltaSchema: StructType, joinKeys: Seq[String], bucketKey: String,
+                         buckets: Int, merge: Merge)
+      : Option[(StructType, BucketMerge)] = {
+    val catalog = spark.sessionState.catalog
+    val bytewise = joinKeys.forall { k =>
+      val t = tableSchema(k).dataType
+      t == deltaSchema(k).dataType && (t match {
+        // StringType equals only the default UTF8_BINARY collation
+        case StringType | ByteType | ShortType | IntegerType | LongType | BooleanType |
+             DateType | TimestampType | TimestampNTZType | BinaryType => true
+        case _ => false
+      })
+    }
+    if (!bytewise || !catalog.tableExists(TableIdentifier(gen))) return None
+    val others = (s: StructType) => s.fields.toSeq.filterNot(f => joinKeys.contains(f.name))
+    val layout = joinKeys.map(tableSchema(_)) ++
+      (if (merge.outer) (others(tableSchema) ++ others(deltaSchema)).map(_.copy(nullable = true))
+       else others(tableSchema))
+    // an RDD leaf, not a LocalRelation, so the optimizer keeps the
+    // projection instead of folding it away over no rows
+    val plan = ColumnBridge.ofInternalRows(spark, spark.sparkContext.emptyRDD[InternalRow],
+      StructType(layout)).select(merge.project: _*).queryExecution.optimizedPlan
+    val (exprs, input) = plan match {
+      case Project(list, leaf: LeafNode) => (list, leaf.output)
+      case leaf: LeafNode => (leaf.output, leaf.output)
+      case _ => return None
+    }
+    // attributes are unevaluable only until the projection binds them
+    val unevaluable = exprs.exists(_.exists {
+      case _: Attribute => false
+      case _: Unevaluable => true
+      case _ => false
+    })
+    if (unevaluable ||
+        !Bucketed.sameLayout(catalog.getTableMetadata(TableIdentifier(gen)),
+          plan.schema, bucketKey, buckets)) return None
+    val project = UnsafeProjection.create(exprs, input)
+    project.initialize(0)
+    val join = localJoin(tableSchema, deltaSchema, joinKeys, merge.outer)
+    Some(plan.schema -> ((existing, delta) => join(existing, delta).map(project(_).copy())))
+  }
+
+  /** Rewrite the touched buckets into the inactive generation `gen`
+    * without a job: per bucket, decode the active generation's file
+    * with Spark's Parquet reader, merge it with the bucket's delta rows
+    * ([[localMerge]]), sort by the bucket key and write the bucket's
+    * one file with Spark's Parquet writer ([[Bucketed.fileWriter]]).
+    * Each file read and write costs a few ms whatever its rows, so
+    * they run on up to one thread per core; the merges, a fraction of
+    * a ms each, run here in bucket order. The generation's directory is
+    * emptied first, as the write job's overwrite empties it. The rows
+    * keep their bucket: both merges pass the join keys through
+    * unchanged. A failure surfaces once every read and write already
+    * started has finished, so a merge that fails leaves the files of
+    * the buckets before it in `gen`, which is not served; the next
+    * publish empties it again. Nothing decoded here outlives the call. */
+  private def mergeOnDriver(spark: SparkSession, gen: String, tableSchema: StructType,
+                            local: (StructType, BucketMerge),
+                            deltaRows: Seq[(Int, InternalRow)],
+                            touchedFiles: Seq[java.nio.file.Path], bucketKey: String): Unit = {
+    val (schema, merge) = local
+    val genMeta = spark.sessionState.catalog.getTableMetadata(TableIdentifier(gen))
+    val read = Bucketed.fileReader(spark, tableSchema)
+    // a store written before one-file-per-bucket can hold several
+    val filesOf = touchedFiles.groupBy(p => bucketIdOf(p.getFileName.toString).get)
+    val key = schema.fieldIndex(bucketKey)
+    val byKey = new InterpretedOrdering(Seq(SortOrder(
+      BoundReference(key, schema(key).dataType, nullable = true), Ascending)))
+    val dir = new org.apache.hadoop.fs.Path(genMeta.location)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.delete(dir, true)
+    fs.mkdirs(dir)
+    val write = Bucketed.fileWriter(spark, dir, schema, genMeta.storage.properties)
+    val perBucket = deltaRows.groupMap(_._1)(_._2).toSeq.sortBy(_._1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(perBucket.size, Runtime.getRuntime.availableProcessors))
+    def async[T](body: => T): java.util.concurrent.Future[T] =
+      pool.submit[T](() => body)
+    def await[T](f: java.util.concurrent.Future[T]): T =
+      try f.get() catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    try {
+      val reads = perBucket.map { case (bucket, _) =>
+        async(filesOf.getOrElse(bucket, Nil).flatMap(p =>
+          read(new org.apache.hadoop.fs.Path(p.toUri), java.nio.file.Files.size(p))))
+      }
+      val writes = scala.collection.mutable.ArrayBuffer.empty[java.util.concurrent.Future[Unit]]
+      val merged = scala.util.Try(perBucket.zip(reads).foreach { case ((bucket, delta), existing) =>
+        val rows = merge(await(existing), delta).sorted(byKey)
+        writes += async(write(bucket, rows))
+      })
+      val failures = merged.failed.toOption ++
+        (reads ++ writes).flatMap(f => scala.util.Try(await(f)).failed.toOption)
+      failures.headOption.foreach(e => throw e)
+    } finally pool.shutdown()
+  }
+
+  /** `existing.join(delta, joinKeys, if (outer) "full_outer" else
+    * "left_anti")` over one bucket's driver-side rows, in the layout
+    * [[localMerge]] declares. Keys match on their bytes, which
+    * localMerge admits only for keys whose equality that is; a key
+    * with a null matches nothing, as in SQL. */
+  private def localJoin(tableSchema: StructType, deltaSchema: StructType,
+                        joinKeys: Seq[String], outer: Boolean)
+      : BucketMerge = {
+    def keyOf(s: StructType) = UnsafeProjection.create(joinKeys.map { k =>
+      BoundReference(s.fieldIndex(k), s(k).dataType, nullable = true)
+    })
+    // a USING join's keys come first, in joinKeys order
+    def keys(s: StructType) = joinKeys.map { k =>
+      val i = s.fieldIndex(k)
+      (r: InternalRow) => r.get(i, s(i).dataType)
+    }
+    def others(s: StructType) = s.fields.toSeq.zipWithIndex
+      .filterNot { case (f, _) => joinKeys.contains(f.name) }
+      .map { case (f, i) => (r: InternalRow) => r.get(i, f.dataType) }
+    val (exKey, dlKey) = (keyOf(tableSchema), keyOf(deltaSchema))
+    val (exKeys, dlKeys) = (keys(tableSchema), keys(deltaSchema))
+    val (exOthers, dlOthers) = (others(tableSchema), others(deltaSchema))
+    def row(keys: Seq[Any], ex: Option[InternalRow], dl: Option[InternalRow]): InternalRow =
+      new GenericInternalRow((keys ++
+        exOthers.map(c => ex.map(c).orNull) ++
+        (if (outer) dlOthers.map(c => dl.map(c).orNull) else Nil)).toArray)
+    (existing, delta) => {
+      val matches = delta.filterNot(dlKey(_).anyNull).groupBy(dlKey(_).copy())
+      val hit = scala.collection.mutable.Set.empty[UnsafeRow]
+      val joined = existing.flatMap { e =>
+        val k = exKey(e)
+        // a key with a null never matches: no such delta key is in `matches`
+        matches.get(k) match {
+          case None => Seq(row(exKeys.map(_(e)), Some(e), None))
+          case Some(_) if !outer => Nil
+          case Some(ds) =>
+            hit += k.copy()
+            ds.map(d => row(exKeys.map(_(e)), Some(e), Some(d)))
+        }
+      }
+      if (!outer) joined
+      else joined ++ delta.filterNot(d => hit.contains(dlKey(d)))
+        .map(d => row(dlKeys.map(_(d)), None, Some(d)))
+    }
   }
 }

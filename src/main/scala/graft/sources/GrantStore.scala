@@ -16,7 +16,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * and is kept current by last-writer-wins upserts from the grant-flip
   * CDC (batch or foreachBatch streaming). Storage mechanics — the
   * generation/view atomic publish and the O(delta) bucket-pruned
-  * merge — live in [[BucketedUpsert]] (shared with AggStore).
+  * merge — live in [[BucketedUpsert]] (shared with every persisted
+  * store).
   */
 object GrantStore {
 

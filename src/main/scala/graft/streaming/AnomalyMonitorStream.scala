@@ -26,7 +26,7 @@ import org.apache.spark.sql.types._
   *
   * Exactly-once: additive merges are NOT replay-idempotent, so every
   * micro-batch carries its foreachBatch batchId into the store's
-  * replay guard (the AggStore contract).
+  * replay guard (`BucketedUpsert.upsert`'s `batchId`).
   */
 object AnomalyMonitorStream {
 

@@ -122,7 +122,8 @@ object LmCountsStream {
 
   /** Streaming sink: `docs.writeStream` → incremental count merges.
     * Run with a checkpointLocation so batch ids are monotone across
-    * restarts (the AggStore writer contract). */
+    * restarts: the replay guard matches on (query id, batch id), and
+    * only a checkpoint keeps both stable across a restart. */
   def writer(docs: DataFrame, prefix: String = "",
              buckets: Int = DefaultBuckets): DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.outputMode("append")

@@ -20,4 +20,13 @@ object ColumnBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** DataFrame over already-computed rows of `schema`
+    * (internalCreateDataFrame is private[sql]). */
+  def ofInternalRows(spark: SparkSession,
+                     rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+                     schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema, isStreaming = false)
 }

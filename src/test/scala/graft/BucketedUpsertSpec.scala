@@ -12,7 +12,11 @@ import scala.jdk.CollectionConverters._
   * of upserts must leave the table exactly equal to a driver-side map
   * model, in both last-writer-wins and additive modes, across
   * generation flips (odd AND even upsert counts — the even case is
-  * what exposed the cross-session relation-cache staleness). */
+  * what exposed the cross-session relation-cache staleness). Each
+  * model test runs both publish paths: the driver merge (small deltas
+  * once the inactive generation exists) and the write job (the first
+  * publish after `materialize`, and one delta past
+  * `BucketedUpsert.DriverMergeRows`). */
 class BucketedUpsertSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -26,9 +30,19 @@ class BucketedUpsertSpec extends AnyFunSuite {
       var model = (1 to 40).map(i => i.toLong -> rnd.nextInt(100)).toMap
       BucketedUpsert.materialize(
         model.toSeq.toDF("k", "v"), table, "k", 8)
-      for (step <- 1 to 4) {
-        val delta = Seq.fill(1 + rnd.nextInt(6))(
-          (rnd.nextInt(60).toLong + 1, rnd.nextInt(100))).distinctBy(_._1)
+      for (step <- 1 to 5) {
+        val delta =
+          if (step == 5) (1L to BucketedUpsert.DriverMergeRows + 1L).map(k => (k, rnd.nextInt(100)))
+          else Seq.fill(1 + rnd.nextInt(6))(
+            (rnd.nextInt(60).toLong + 1, rnd.nextInt(100))).distinctBy(_._1)
+        if (step == 3) {
+          // a generation from before one file per bucket: a merge must
+          // read every fragment of a touched bucket
+          val gen = BucketedUpsert.activeGen(spark, table).get
+          model.toSeq.toDF("k", "v").repartition(4).write.mode("overwrite")
+            .bucketBy(8, "k").sortBy("k").format("parquet").saveAsTable(gen)
+          assert(bucketFiles(gen).values.exists(_.size > 1))
+        }
         model = model ++ delta.toMap
         BucketedUpsert.upsert(spark, table, delta.toDF("k", "v"),
           Seq("k"), "k", 8)
@@ -41,26 +55,56 @@ class BucketedUpsertSpec extends AnyFunSuite {
 
   test("additive merge sequences match a summing model") {
     import spark.implicits._
+    import graft.functions.expressions.{HllSketchBuild, HllUnion}
     val table = "bu_add"
     BucketedUpsert.drop(spark, table)
     try {
       val rnd = new scala.util.Random(13)
       var model = Map.empty[Long, Long]
-      BucketedUpsert.materialize(
-        Seq.empty[(Long, Long)].toDF("k", "v"), table, "k", 8)
-      for (step <- 1 to 4) {
-        val delta = Seq.fill(1 + rnd.nextInt(8))(
-          (rnd.nextInt(20).toLong, rnd.nextInt(10).toLong + 1)).distinctBy(_._1)
+      // `s` is an HLL sketch column: each delta row carries the sketch
+      // of a few values, which the merge unions into the stored one
+      val xs = new scala.util.Random(14)
+      var seen = Map.empty[Long, Set[Long]]
+      def sketches(values: Seq[(Long, Long)]) =
+        values.toDF("k", "x").groupBy("k").agg(HllSketchBuild(col("x")).as("s"))
+      def publish(delta: Seq[(Long, Long)], values: Seq[(Long, Long)], step: String): Unit = {
         model = delta.foldLeft(model) { case (m, (k, v)) =>
           m.updated(k, m.getOrElse(k, 0L) + v)
         }
-        BucketedUpsert.upsert(spark, table, delta.toDF("k", "v"),
+        seen = values.foldLeft(seen) { case (m, (k, x)) => m.updated(k, m.getOrElse(k, Set.empty) + x) }
+        BucketedUpsert.upsert(spark, table,
+          delta.toDF("k", "v").join(sketches(values), "k").select("k", "v", "s"),
           Seq("k"), "k", 8,
-          merge = (_, ex, dl) => coalesce(ex, lit(0L)) + coalesce(dl, lit(0L)))
-        val got = BucketedUpsert.read(spark, table).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+          merge = (name, ex, dl) =>
+            if (name == "s") when(ex.isNull, dl).when(dl.isNull, ex).otherwise(HllUnion(ex, dl))
+            else coalesce(ex, lit(0L)) + coalesce(dl, lit(0L)))
+        val stored = BucketedUpsert.read(spark, table).collect()
+        val got = stored.map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(got == model, s"diverged at step $step")
+        val oneShot = sketches(seen.toSeq.flatMap { case (k, v) => v.map(k -> _) })
+          .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
+        assert(stored.map(r => r.getLong(0) -> r.getAs[Array[Byte]](2).toSeq).toMap == oneShot,
+          s"batched sketch union differs from the one-shot sketch at step $step")
       }
+      BucketedUpsert.materialize(
+        Seq.empty[(Long, Long, Array[Byte])].toDF("k", "v", "s"), table, "k", 8)
+      var last = (Seq.empty[(Long, Long)], Seq.empty[(Long, Long)])
+      for (step <- 1 to 5) {
+        val delta =
+          if (step == 5) (0L to BucketedUpsert.DriverMergeRows.toLong).map(k => (k, k % 7 + 1))
+          else Seq.fill(1 + rnd.nextInt(8))(
+            (rnd.nextInt(20).toLong, rnd.nextInt(10).toLong + 1)).distinctBy(_._1)
+        // overlapping values across batches: a union that double-counted
+        // or dropped registers would not equal the one-shot sketch
+        val values = delta.flatMap { case (k, _) =>
+          Seq.fill(1 + xs.nextInt(3))(k -> xs.nextInt(10).toLong)
+        }
+        publish(delta, values, step.toString)
+        if (step == 4) last = (delta, values)
+      }
+      // an unguarded replay of a small batch: the sums count it twice,
+      // the sketch union is idempotent
+      publish(last._1, last._2, "replay")
     } finally BucketedUpsert.drop(spark, table)
   }
 
@@ -109,6 +153,29 @@ class BucketedUpsertSpec extends AnyFunSuite {
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
       assert(after == Map(1L -> 10, 2L -> 21),
         s"orphan generation must be fully replaced, got $after")
+      // a driver merge that dies part-way: the merge fails on the delta
+      // row of the highest bucket it reaches, after the lower buckets'
+      // new files are written and before the publish
+      val keys = 3L to 40L
+      val last = keys.maxBy(k => bucketsOf(Seq(k), 8).head)
+      val target = BucketedUpsert.inactiveGen(spark, table)
+      val stale = bucketFiles(target).values.flatten.map(_.getFileName).toSet
+      intercept[Exception](BucketedUpsert.upsert(spark, table,
+        keys.map(k => (k, if (k == last) -1 else k.toInt)).toDF("k", "v"), Seq("k"), "k", 8,
+        merge = (_, ex, dl) =>
+          when(dl === -1, raise_error(lit("injected crash"))).otherwise(coalesce(dl, ex))))
+      val partial = bucketFiles(target).values.flatten.map(_.getFileName).toSet
+      assert(partial.nonEmpty && partial.intersect(stale).isEmpty,
+        s"the crash must come after the driver wrote new bucket files: $partial")
+      assert(BucketedUpsert.inactiveGen(spark, table) == target, "nothing was published")
+      assert(BucketedUpsert.read(spark, table).collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap == after)
+      // past the driver's row budget: a write job replaces the partial
+      // generation wholesale
+      val big = (1L to BucketedUpsert.DriverMergeRows + 1L).map(k => (k, k.toInt))
+      BucketedUpsert.upsert(spark, table, big.toDF("k", "v"), Seq("k"), "k", 8)
+      assert(BucketedUpsert.read(spark, table).collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap == big.toMap)
     } finally BucketedUpsert.drop(spark, table)
   }
 
@@ -143,6 +210,12 @@ class BucketedUpsertSpec extends AnyFunSuite {
       // deleting an absent key is a no-op, not an error
       BucketedUpsert.delete(spark, table, Seq(999L).toDF("k"), Seq("k"), "k", 8)
       assert(BucketedUpsert.read(spark, table).count() == 62)
+      // past the driver's row budget: a write job deletes
+      BucketedUpsert.delete(spark, table,
+        ((10L to 20L) ++ (1000L to 1000L + BucketedUpsert.DriverMergeRows)).toDF("k"),
+        Seq("k"), "k", 8)
+      assert(BucketedUpsert.read(spark, table).collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap == rows.toMap -- Seq(3L, 7L) -- (10L to 20L))
     } finally BucketedUpsert.drop(spark, table)
   }
 
@@ -245,9 +318,12 @@ class BucketedUpsertSpec extends AnyFunSuite {
         var model = (1L to 24L).map(k => k -> (k * 100)).toMap
         BucketedUpsert.materialize(
           model.toSeq.map { case (k, v) => (v, k) }.toDF("v", "k"), table, "k", 8)
-        for (step <- 1 to 4) {
-          val delta = Seq.fill(3 + rnd.nextInt(5))(
-            (rnd.nextInt(40).toLong + 1, rnd.nextInt(1000).toLong)).distinctBy(_._1)
+        for (step <- 1 to 5) {
+          val delta =
+            if (step == 5)
+              (1L to BucketedUpsert.DriverMergeRows + 1L).map(k => (k, rnd.nextInt(1000).toLong))
+            else Seq.fill(3 + rnd.nextInt(5))(
+              (rnd.nextInt(40).toLong + 1, rnd.nextInt(1000).toLong)).distinctBy(_._1)
           model = delta.foldLeft(model) { case (m, (k, v)) =>
             m.updated(k, if (additive) m.getOrElse(k, 0L) + v else v)
           }
@@ -274,8 +350,10 @@ class BucketedUpsertSpec extends AnyFunSuite {
     try {
       var model = (1L to 400L).map(k => k -> k).toMap
       BucketedUpsert.materialize(model.toSeq.toDF("k", "v"), table, "k", buckets)
-      // one bucket, then more buckets than cores
-      for (keys <- Seq(Seq(7L), (1L to 400L by 19L) :+ 1000L)) {
+      // one bucket, then more buckets than cores, then more rows than
+      // the driver merges: the first and the last run a write job
+      for (keys <- Seq(Seq(7L), (1L to 400L by 19L) :+ 1000L,
+                       1L to BucketedUpsert.DriverMergeRows + 1L)) {
         val t = bucketsOf(keys, buckets).size
         val delta = keys.map(k => k -> -k)
         model = model ++ delta
@@ -354,6 +432,98 @@ class BucketedUpsertSpec extends AnyFunSuite {
       BucketedUpsert.materialize((1L to 8L).map(k => (k, k)).toDF("k", "v"), table, "k", 8)
       assert(BucketedUpsert.activeGen(spark, table).contains(a))
       assert(BucketedUpsert.appliedBatch(spark, a).isEmpty)
+      // the batch above ran the write job (first publish after
+      // materialize); a small batch now merges on the driver, one past
+      // the driver's row budget runs the write job: both replay as no-ops
+      for ((rows, id) <- Seq((1L to 3L, 7L), (1L to BucketedUpsert.DriverMergeRows + 1L, 8L))) {
+        val again = rows.map(k => (k, 10L)).toDF("k", "v")
+        BucketedUpsert.upsert(spark, table, again, Seq("k"), "k", 8, merge = sum, batchId = Some(id))
+        val once = BucketedUpsert.read(spark, table).as[(Long, Long)].collect().toMap
+        val written = Seq(a, b).map(bytes)
+        BucketedUpsert.upsert(spark, table, again, Seq("k"), "k", 8, merge = sum, batchId = Some(id))
+        assert(Seq(a, b).map(bytes) == written, s"batch $id: a replay must not rewrite any generation")
+        assert(BucketedUpsert.read(spark, table).as[(Long, Long)].collect().toMap == once)
+      }
+      assert(BucketedUpsert.read(spark, table).as[(Long, Long)].collect().toMap ==
+        (1L to BucketedUpsert.DriverMergeRows + 1L).map(k =>
+          k -> ((if (k <= 8) k else 0L) + (if (k <= 3) 10L else 0L) + 10L)).toMap)
     } finally BucketedUpsert.drop(spark, table)
+  }
+
+  test("a delta under the driver's budget publishes with one job and no write stage") {
+    import spark.implicits._
+    val table = "bu_one_job"
+    val buckets = 32
+    BucketedUpsert.drop(spark, table)
+    try {
+      var model = (1L to 400L).map(k => k -> k).toMap
+      BucketedUpsert.materialize(model.toSeq.toDF("k", "v"), table, "k", buckets)
+      // the first publish creates the inactive generation with a write job
+      BucketedUpsert.upsert(spark, table, Seq((1L, 1L)).toDF("k", "v"), Seq("k"), "k", buckets)
+      def linked(gen: String): Map[Int, Object] = bucketFiles(gen).map { case (b, fs) =>
+        b -> java.nio.file.Files.readAttributes(fs.head,
+          classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
+      }
+      val upsert = Seq(3L, 77L, 150L, 151L, 1000L)
+      val delete = Seq(5L, 77L, 2000L)
+      for ((keys, publish) <- Seq[(Seq[Long], () => Unit)](
+             upsert -> (() => BucketedUpsert.upsert(spark, table,
+               upsert.map(k => (k, -k)).toDF("k", "v"), Seq("k"), "k", buckets)),
+             delete -> (() => BucketedUpsert.delete(spark, table,
+               delete.toDF("k"), Seq("k"), "k", buckets)))) {
+        val before = linked(BucketedUpsert.activeGen(spark, table).get)
+        val stages = resultStages(publish())
+        assert(stages.size == 1, s"result stages (tasks) $stages")
+        model = if (keys == delete) model -- delete else model ++ upsert.map(k => k -> -k)
+        assert(BucketedUpsert.read(spark, table).as[(Long, Long)].collect().toMap == model)
+        val after = bucketFiles(BucketedUpsert.activeGen(spark, table).get)
+        assert(after.values.forall(_.size == 1), s"$after")
+        assert(after.keySet == bucketsOf(model.keys.toSeq, buckets))
+        // untouched buckets carry forward by link; touched ones are new
+        val touched = bucketsOf(keys, buckets)
+        val now = linked(BucketedUpsert.activeGen(spark, table).get)
+        assert((before -- touched) == (now -- touched))
+        assert(touched.forall(b => now.get(b).forall(!before.get(b).contains(_))))
+      }
+    } finally BucketedUpsert.drop(spark, table)
+  }
+
+  test("driver-written bucket files round-trip through snapshot, rollback and adopt") {
+    import spark.implicits._
+    val table = "bu_driver_files"
+    BucketedUpsert.drop(spark, table)
+    val pin = java.nio.file.Files.createTempDirectory("bu_pin").resolve("pin")
+    try {
+      BucketedUpsert.materialize((1L to 40L).map(k => (k, k)).toDF("k", "v"), table, "k", 8)
+      BucketedUpsert.upsert(spark, table, Seq((1L, 10L)).toDF("k", "v"), Seq("k"), "k", 8)
+      val first = BucketedUpsert.read(spark, table).as[(Long, Long)].collect().toMap
+      // a driver merge, recorded with a batch id
+      BucketedUpsert.upsert(spark, table, Seq((2L, 20L), (50L, 500L)).toDF("k", "v"),
+        Seq("k"), "k", 8, batchId = Some(3L))
+      val second = BucketedUpsert.read(spark, table).as[(Long, Long)].collect().toMap
+      assert(second == first ++ Map(2L -> 20L, 50L -> 500L))
+      val gen = BucketedUpsert.activeGen(spark, table).get
+      BucketedUpsert.snapshot(spark, table, pin.toString)
+      assert(BucketedUpsert.readSnapshot(spark, pin.toString, Some(table))
+        .as[(Long, Long)].collect().toMap == second)
+      assert(BucketedUpsert.rollback(spark, table) != gen)
+      assert(BucketedUpsert.read(spark, table).as[(Long, Long)].collect().toMap == first)
+      assert(BucketedUpsert.rollback(spark, table) == gen)
+      // a restart: the catalog entries go, the bytes and the marker stay
+      val (a, b) = BucketedUpsert.generations(table)
+      val dirs = Seq(a, b).map(g => BucketedUpsert.tableDir(spark, g))
+      dirs.foreach(d => java.nio.file.Files.move(d, d.resolveSibling(d.getFileName.toString + ".keep")))
+      spark.sql(s"DROP VIEW IF EXISTS `$table`")
+      Seq(a, b).foreach(g => spark.sql(s"DROP TABLE IF EXISTS `$g`"))
+      dirs.foreach(d => java.nio.file.Files.move(d.resolveSibling(d.getFileName.toString + ".keep"), d))
+      assert(BucketedUpsert.adopt(spark, table))
+      assert(BucketedUpsert.read(spark, table).as[(Long, Long)].collect().toMap == second)
+      assert(BucketedUpsert.readKeys(spark, table, Seq(50L).toDF("k"), "k", 8)
+        .filter(col("k") === 50L).as[(Long, Long)].collect().toSeq == Seq(50L -> 500L))
+      assert(BucketedUpsert.appliedBatch(spark, gen).contains((BucketedUpsert.BatchCaller, 3L)))
+    } finally {
+      BucketedUpsert.drop(spark, table)
+      org.apache.commons.io.FileUtils.deleteDirectory(pin.getParent.toFile)
+    }
   }
 }
