@@ -56,14 +56,4 @@ object GraftSession {
     builder(s"local[$cores]", cores)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-
-  /** Streaming-at-scale additions: RocksDB state store (keyed state
-    * larger than heap — the lifetime per-user aggregates of the grant
-    * pipeline grow with the user universe) + changelog checkpointing.
-    * Apply on top of `builder(...)` for streaming jobs. */
-  def withRocksDbState(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
 }

@@ -281,31 +281,16 @@ object Windowed {
       .groupBy(col("feature"))
       .agg(max_by(col("circuit_open"), col("win_start")).as("circuit_open"))
 
-  /** Streaming circuit breaker: sliding-window distinct-user denial
-    * rate over an unbounded source, watermark bounding window state
-    * (the reference trims its deque manually, user_feature.py:63-69;
-    * the watermark is the principled version). Exact distinct counts
-    * are not available in streaming aggregation, so the stream uses
-    * HLL++ (`approx_count_distinct`, exact in sparse mode at small
-    * per-window cardinalities); the batch `circuit` is the exactness
-    * contract. Append mode emits each window once it is final. */
-  def circuitStream(events: DataFrame, threshold: Double = 0.05,
-                    watermark: String = "15 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "10 minutes", "5 minutes"))
-      .agg(approx_count_distinct(col("user_id"), 0.01).as("n_users"),
-        approx_count_distinct(
-          when(col("event_type") === "error", col("user_id")), 0.01)
-          .as("n_denied_users"))
-      .select(col("window.start").as("win_start"), col("n_users"),
-        col("n_denied_users"),
-        (safeRate > lit(threshold)).as("circuit_open"))
-
   /** Per-feature streaming breaker over the access-attempt stream:
     * state is keyed (feature, window), so a burst of denied users
     * against one feature finalizes `circuit_open = true` for that
-    * feature's windows only. */
+    * feature's windows only. The watermark bounds window state (the
+    * reference trims its deque by hand, user_feature.py:63-69).
+    * Streaming aggregation has no exact distinct count, so the stream
+    * uses HLL++ (`approx_count_distinct`, exact in sparse mode at
+    * small per-window cardinalities); the batch [[featureCircuit]] is
+    * the exactness contract. Append mode emits each window once it is
+    * final. */
   def featureCircuitStream(attempts: DataFrame, threshold: Double = 0.05,
                            watermark: String = "15 minutes",
                            size: String = "10 minutes",

@@ -11,11 +11,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * finalized windows; each batch upserts every feature's LATEST window
   * verdict, so `AccessService(grants = GrantStore.read, circuits =
   * CircuitStore.read)` serves live state across restarts. The table is
-  * n_features rows — the merge cost is nil — and publishes through the
-  * same generation-table + CREATE OR REPLACE VIEW pointer as
-  * GrantStore: the repoint is one catalog operation, so readers never
-  * see a missing table and a crash mid-publish leaves the old
-  * generation served. */
+  * n_features rows in one bucket — the merge cost is nil — and
+  * publishes through [[BucketedUpsert]] like GrantStore: the repoint is
+  * one catalog operation, so readers never see a missing table and a
+  * crash mid-publish leaves the old generation served. */
 object CircuitStore {
 
   val DefaultTable = "graft_circuits"
@@ -42,41 +41,25 @@ object CircuitStore {
   def cadence(referenceCadence: Boolean): Cadence =
     if (referenceCadence) ReferenceCadence else DefaultCadence
 
-  private def publish(spark: SparkSession, table: String, gen: String): Unit =
-    spark.sql(s"CREATE OR REPLACE VIEW `$table` AS SELECT * FROM `$gen`")
-
   /** Drop the view and both generations (test/cleanup utility). */
-  def drop(spark: SparkSession, table: String): Unit = {
-    val (a, b) = BucketedUpsert.generations(table)
-    spark.sql(s"DROP VIEW IF EXISTS `$table`")
-    spark.sql(s"DROP TABLE IF EXISTS `$a`")
-    spark.sql(s"DROP TABLE IF EXISTS `$b`")
-  }
+  def drop(spark: SparkSession, table: String): Unit =
+    BucketedUpsert.drop(spark, table)
 
   def read(spark: SparkSession, table: String = DefaultTable): DataFrame =
     spark.table(table)
 
   /** Upsert the latest window verdict per feature from a batch of
-    * breaker windows `[feature, win_start, ..., circuit_open]`. */
+    * breaker windows `[feature, win_start, ..., circuit_open]`: the
+    * first batch materializes the store, later ones merge
+    * last-writer-wins, so a feature absent from the batch keeps its
+    * verdict. */
   def upsert(spark: SparkSession, windows: DataFrame,
              table: String = DefaultTable): Unit = {
     val latest = windows.groupBy(col("feature"))
-      .agg(max_by(col("circuit_open"), col("win_start")).as("new_open"))
-      .persist()
-    try {
-      if (latest.isEmpty) return
-      val merged =
-        if (!spark.catalog.tableExists(table))
-          latest.select(col("feature"), col("new_open").as("circuit_open"))
-        else spark.table(table)
-          .join(broadcast(latest), Seq("feature"), "full_outer")
-          .select(col("feature"),
-            coalesce(col("new_open"), col("circuit_open")).as("circuit_open"))
-      val gen = BucketedUpsert.inactiveGen(spark, table)
-      merged.write.format("parquet")
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).saveAsTable(gen)
-      publish(spark, table, gen)
-    } finally latest.unpersist()
+      .agg(max_by(col("circuit_open"), col("win_start")).as("circuit_open"))
+    if (!spark.catalog.tableExists(table))
+      BucketedUpsert.materialize(latest, table, "feature", 1)
+    else BucketedUpsert.upsert(spark, table, latest, Seq("feature"), "feature", 1)
   }
 
   /** Streaming sink over the per-feature breaker output. */

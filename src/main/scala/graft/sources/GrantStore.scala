@@ -1,9 +1,7 @@
 package graft.sources
 
-import graft.streaming.EventPipeline.GrantChange
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Materialized grants table — the storage layer of the serve path
   * (BASELINE north star: "Spark SQL feature transformations +
@@ -71,19 +69,6 @@ object GrantStore {
                   batchId: Option[Long] = None): Unit =
     BucketedUpsert.delete(spark, table, users.select(col("user_id")),
       Seq("user_id"), "user_id", buckets, batchId = batchId)
-
-  /** Streaming sink: grant-flip CDC → incremental table upserts. The
-    * micro-batch id feeds the replay guard, so a batch redelivered
-    * after a crash-between-publish-and-commit skips the bucket
-    * rewrite instead of re-running it (the merge itself is
-    * last-writer-wins idempotent — the guard saves the I/O and the
-    * generation flip, it does not protect correctness here). */
-  def writer(changes: Dataset[GrantChange], table: String = DefaultTable,
-             buckets: Int = 32): DataStreamWriter[GrantChange] =
-    changes.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[GrantChange], id: Long) =>
-        upsert(batch.sparkSession, batch.toDF(), table, buckets, Some(id))
-      }
 
   /** Serve-path lookup join: grants for a keyed frame of user_ids.
     * When `users` is bucketed by user_id with the same bucket count,

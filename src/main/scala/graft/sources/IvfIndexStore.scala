@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Persisted IVF (inverted-file) ANN index — the build-once/probe-many
   * shape the per-query variant (EmbeddingQueries.ivfTopKWith) lacks:
@@ -128,14 +127,6 @@ object IvfIndexStore {
     }
   }
 
-  /** Streaming sink: vector stream → incremental index maintenance. */
-  def writer(vecs: DataFrame, prefix: String,
-             buckets: Int = DefaultBuckets): DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        upsertBatch(batch.sparkSession, batch, prefix, buckets, Some(id))
-      }
-
   /** The materialized index: `(cell, vec_id, emb)`. */
   def read(spark: SparkSession, prefix: String): DataFrame =
     BucketedUpsert.read(spark, cellsTable(prefix))
@@ -182,15 +173,6 @@ object IvfIndexStore {
       merge = (_, existing, delta) => coalesce(existing, delta),
       batchId = batchId)
   }
-
-  /** Streaming sink: vector stream → incremental code maintenance
-    * (compose with [[writer]] for cells+codes in one ingest). */
-  def pqWriter(vecs: DataFrame, prefix: String,
-               buckets: Int = DefaultBuckets): DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        upsertPqBatch(batch.sparkSession, batch, prefix, buckets, Some(id))
-      }
 
   /** IVFADC-style probe over the PERSISTED codes: LUT against the
     * frozen codebooks (broadcast, M·|codebook| rows per query), ADC

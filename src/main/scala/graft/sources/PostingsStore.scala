@@ -1,9 +1,8 @@
 package graft.sources
 
 import graft.functions.TextOps
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Persisted inverted index for lexical (BM25) retrieval — the
   * build-once/probe-many serving shape [[IvfIndexStore]] gives the
@@ -124,15 +123,6 @@ object PostingsStore {
         merge = (_, ex, dlt) => coalesce(ex, dlt), batchId = batchId)
     } finally fresh.unpersist()
   }
-
-  /** Streaming sink: document stream → incremental index maintenance
-    * (the [[IvfIndexStore.writer]] shape). */
-  def writer(docs: DataFrame, prefix: String,
-             buckets: Int = DefaultBuckets): DataStreamWriter[Row] =
-    docs.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        upsertBatch(batch.sparkSession, batch, prefix, buckets, Some(id))
-      }
 
   /** Retention/GDPR path: remove documents from the index — the
     * O(delta) twin of [[upsertBatch]]. The caller passes `(doc_id,

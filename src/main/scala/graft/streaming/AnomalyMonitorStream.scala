@@ -4,7 +4,6 @@ import graft.queries.AnalyticsQueries
 import graft.sources.BucketedUpsert
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
 /** Streaming revenue-anomaly monitor: the per-(type, day) daily frame
@@ -71,14 +70,6 @@ object AnomalyMonitorStream {
       Seq("event_type", "day"), "day", buckets,
       merge = (_, ex, dl) => coalesce(ex, lit(0)) + coalesce(dl, lit(0)),
       batchId = batchId)
-
-  /** Streaming sink: `events.writeStream` → incremental daily merges. */
-  def writer(events: DataFrame, table: String = DefaultTable,
-             buckets: Int = DefaultBuckets): DataStreamWriter[Row] =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        upsertBatch(batch.sparkSession, batch, table, buckets, Some(id))
-      }
 
   /** The accumulated daily frame — equals the one-shot
     * [[AnalyticsQueries.dailyRevenue]] over everything ingested. */

@@ -4,7 +4,6 @@ import graft.queries.AnalyticsQueries
 import graft.sources.BucketedUpsert
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Incremental maintenance of the market-basket stores — the ingest
   * path of `copurchase_cosine` / `basket_rules`. The batch queries
@@ -142,16 +141,6 @@ object BasketStream {
                   prefix: String = "", buckets: Int = DefaultBuckets,
                   batchId: Option[Long] = None): Unit =
     merge(spark, deltas(batch, -1), prefix, buckets, batchId)
-
-  /** Streaming sink: `lines.writeStream` → incremental basket merges.
-    * Run with a checkpointLocation so batch ids are monotone across
-    * restarts. */
-  def writer(lines: DataFrame, prefix: String = "",
-             buckets: Int = DefaultBuckets): DataStreamWriter[org.apache.spark.sql.Row] =
-    lines.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        upsertBatch(batch.sparkSession, batch, prefix, buckets, Some(id))
-      }
 
   private def served(spark: SparkSession, prefix: String):
       (DataFrame, DataFrame, DataFrame) = (

@@ -3,7 +3,9 @@ package graft.streaming
 import graft.config._
 import graft.operators.RuleEval
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, from_json}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{MapType, StringType}
 
 /** The reference's write path as Structured Streaming
   * (SURVEY.md §3.1): events → per-user incremental aggregates →
@@ -15,11 +17,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * cross-key parallel, no locks, arbitrarily many executors.
   *
   * State shape mirrors the reference accumulators
-  * (models/aggregate.py:41-83): seen-uuid set for dedup, count/sum
-  * scalars, distinct-value sets, plus the current grants
-  * (user_feature.py:22). Seen-id state is unbounded exactly like the
-  * reference's in [[grantChanges]]; [[grantChangesBounded]] is the
-  * production shape, deduping within the watermark inside the fold.
+  * (models/aggregate.py:41-83): count/sum scalars, distinct-value
+  * sets, plus the current grants (user_feature.py:22). The
+  * reference's seen-uuid set grows forever; [[grantChangesBounded]],
+  * the one grant fold, dedups event ids within the watermark on a
+  * stream and over the whole input on a static frame.
   */
 object EventPipeline {
 
@@ -36,38 +38,23 @@ object EventPipeline {
       event_id: Long, ts: java.sql.Timestamp, user_id: Long,
       event_type: String, value: Double, props: Map[String, String])
 
-  /** The typed-props projection every pipeline variant applies before
-    * its stateful operator. */
-  private def typed(events: Dataset[EventRow]): Dataset[TypedEventRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.types.{MapType, StringType}
-    events.toDF()
-      .withColumn("props", org.apache.spark.sql.functions.from_json(
-        org.apache.spark.sql.functions.col("props"),
-        MapType(StringType, StringType)))
-      .as[TypedEventRow]
-  }
-
   /** Emitted only when a grant flips (reference user_feature.py:32-44);
     * the notification payload of S3. */
   final case class GrantChange(user_id: Long, feature: String, has_grant: Boolean)
 
   final case class UserAggState(
-      seenIds: Map[Long, Boolean],
       counts: Map[String, Long],
       sums: Map[String, Double],
       distincts: Map[String, Map[String, Boolean]],
       grants: Map[String, Boolean])
 
   private[graft] def emptyState: UserAggState =
-    UserAggState(Map.empty, Map.empty, Map.empty, Map.empty, Map.empty)
+    UserAggState(Map.empty, Map.empty, Map.empty, Map.empty)
 
-  /** The shared per-user fold: apply the batch's events in event-time
-    * order, re-evaluate grants after each, collect flips. Both
-    * flatMapGroupsWithState pipelines ([[grantChanges]] and
-    * [[grantChangesBounded]]) wrap exactly this, which is what makes
-    * their parity a code invariant rather than a test hope.
+  /** The per-user fold: apply the batch's events in event-time order,
+    * re-evaluate grants after each, collect flips. The caller hands it
+    * deduplicated events: [[grantChangesBounded]] drops repeated event
+    * ids before the fold, on a stream and on a static frame alike.
     *
     * This is the ingest tier's hot loop — it runs once per EVENT on
     * every executor — so it works on mutable accumulators and the
@@ -80,8 +67,7 @@ object EventPipeline {
     * missing aggregate ⇒ 0, default grant TRUE (StreamingParitySpec
     * pins batch/stream parity). */
   private[graft] def foldEvents(cfg: EngineConfig, userId: Long, st0: UserAggState,
-                         events: Iterator[TypedEventRow],
-                         trackSeen: Boolean = true): (UserAggState, Seq[GrantChange]) = {
+                         events: Iterator[TypedEventRow]): (UserAggState, Seq[GrantChange]) = {
     import scala.collection.mutable
     val cc = RuleEval.compiled(cfg)
     val counts = mutable.HashMap.empty[String, Long]; counts ++= st0.counts
@@ -91,7 +77,6 @@ object EventPipeline {
       val s = mutable.HashSet.empty[String]; s ++= m.keysIterator; distincts(k) = s
     }
     val grants = mutable.HashMap.empty[String, Boolean]; grants ++= st0.grants
-    var seen = st0.seenIds
     val changes = mutable.ArrayBuffer.empty[GrantChange]
     def aggValue(name: String): Double = {
       val c = counts.get(name)
@@ -112,77 +97,61 @@ object EventPipeline {
       if (c != 0) c else java.lang.Long.compare(a.event_id, b.event_id)
     })
     arr.foreach { e =>
-      val dup = trackSeen && seen.contains(e.event_id) // uuid dedup (aggregate.py:54,57)
-      if (!dup) {
-        if (trackSeen) seen = seen.updated(e.event_id, true)
-        cc.aggsByType.get(e.event_type).foreach { as =>
-          var i = 0
-          while (i < as.length) {
-            val a = as(i)
-            a.aggType match {
-              case AggregateType.Count =>
-                counts.update(a.name, counts.getOrElse(a.name, 0L) + 1L)
-              case AggregateType.Sum => cc.fieldRefs(a.name) match {
-                case RuleEval.ValueField =>
-                  sums.update(a.name, sums.getOrElse(a.name, 0.0) + e.value)
-                case RuleEval.PropsField(key) =>
-                  if (e.props != null) e.props.get(key).foreach { v =>
-                    sums.update(a.name, sums.getOrElse(a.name, 0.0) + v.toDouble)
-                  }
-                case RuleEval.NoField => ()
-              }
-              case AggregateType.DistinctCount => cc.fieldRefs(a.name) match {
-                case RuleEval.ValueField =>
-                  distincts.getOrElseUpdate(a.name,
-                    scala.collection.mutable.HashSet.empty) += e.value.toString
-                case RuleEval.PropsField(key) =>
-                  if (e.props != null) e.props.get(key).foreach { v =>
-                    distincts.getOrElseUpdate(a.name,
-                      scala.collection.mutable.HashSet.empty) += v
-                  }
-                case RuleEval.NoField => ()
-              }
+      cc.aggsByType.get(e.event_type).foreach { as =>
+        var i = 0
+        while (i < as.length) {
+          val a = as(i)
+          a.aggType match {
+            case AggregateType.Count =>
+              counts.update(a.name, counts.getOrElse(a.name, 0L) + 1L)
+            case AggregateType.Sum => cc.fieldRefs(a.name) match {
+              case RuleEval.ValueField =>
+                sums.update(a.name, sums.getOrElse(a.name, 0.0) + e.value)
+              case RuleEval.PropsField(key) =>
+                if (e.props != null) e.props.get(key).foreach { v =>
+                  sums.update(a.name, sums.getOrElse(a.name, 0.0) + v.toDouble)
+                }
+              case RuleEval.NoField => ()
             }
-            i += 1
+            case AggregateType.DistinctCount => cc.fieldRefs(a.name) match {
+              case RuleEval.ValueField =>
+                distincts.getOrElseUpdate(a.name,
+                  scala.collection.mutable.HashSet.empty) += e.value.toString
+              case RuleEval.PropsField(key) =>
+                if (e.props != null) e.props.get(key).foreach { v =>
+                  distincts.getOrElseUpdate(a.name,
+                    scala.collection.mutable.HashSet.empty) += v
+                }
+              case RuleEval.NoField => ()
+            }
           }
-        }
-        // re-evaluate every feature (rules.py re-checks on each event);
-        // default grant is TRUE (rules.py:112), flips are the CDC output
-        var fi = 0
-        while (fi < cc.featureNames.length) {
-          val rules = cc.featureRules(fi)
-          var granted = true
-          var ri = 0
-          while (granted && ri < rules.length) {
-            granted = RuleEval.abides(rules(ri), aggFn)
-            ri += 1
-          }
-          val name = cc.featureNames(fi)
-          if (grants.getOrElse(name, true) != granted)
-            changes += GrantChange(userId, name, granted)
-          grants.update(name, granted)
-          fi += 1
+          i += 1
         }
       }
+      // re-evaluate every feature (rules.py re-checks on each event);
+      // default grant is TRUE (rules.py:112), flips are the CDC output
+      var fi = 0
+      while (fi < cc.featureNames.length) {
+        val rules = cc.featureRules(fi)
+        var granted = true
+        var ri = 0
+        while (granted && ri < rules.length) {
+          granted = RuleEval.abides(rules(ri), aggFn)
+          ri += 1
+        }
+        val name = cc.featureNames(fi)
+        if (grants.getOrElse(name, true) != granted)
+          changes += GrantChange(userId, name, granted)
+        grants.update(name, granted)
+        fi += 1
+      }
     }
-    val st = UserAggState(seen, counts.toMap, sums.toMap,
+    val st = UserAggState(counts.toMap, sums.toMap,
       distincts.iterator.map { case (k, s) =>
         k -> s.iterator.map(_ -> true).toMap
       }.toMap,
       grants.toMap)
     (st, changes.toSeq)
-  }
-
-  /** Per-user state update (flatMapGroupsWithState shape). Default
-    * grant is TRUE (rules.py:112), so the first emission happens when a
-    * rule first revokes. */
-  def updateUser(cfg: EngineConfig)(
-      userId: Long, events: Iterator[TypedEventRow],
-      state: GroupState[UserAggState]): Iterator[GrantChange] = {
-    val (st, changes) = foldEvents(cfg, userId,
-      state.getOption.getOrElse(emptyState), events)
-    state.update(st)
-    changes.iterator
   }
 
   /** Backlog/observability surface (SURVEY.md S5: the reference's
@@ -204,29 +173,22 @@ object EventPipeline {
     }.getOrElse(Map("batch_id" -> -1L))
   }
 
-  /** Wire the pipeline over any Dataset[EventRow] — a streaming source
-    * (MemoryStream, Kafka, file) or a static frame (batch mode runs the
-    * same code path: the batch/stream parity guarantee). */
-  def grantChanges(spark: SparkSession, events: Dataset[EventRow],
-                   cfg: EngineConfig): Dataset[GrantChange] = {
-    import spark.implicits._
-    typed(events).groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        updateUser(cfg))
-  }
-
   /** Bounded per-user state for [[grantChangesBounded]]: the
     * accumulators plus a watermark-evicted `event_id → event-time ms`
     * dedup map. */
   final case class BoundedUserState(agg: UserAggState, seenTs: Map[Long, Long])
 
-  /** Bounded-state variant: uuid dedup keeps only ids seen WITHIN the
-    * watermark, evicted as it advances — the per-user state is then
-    * O(aggregates + in-flight window), not O(events seen), closing the
-    * one unbounded-state hole the default pipeline inherits from the
-    * reference's dicts. The trade is the reference's exact forever-
-    * dedup narrows to duplicates arriving within the watermark, the
-    * standard production contract.
+  /** The engine's grant fold. On a stream, uuid dedup keeps only ids
+    * seen WITHIN the watermark, evicted as it advances — the per-user
+    * state is then O(aggregates + in-flight window), not O(events
+    * seen), where the reference's dicts keep every id forever. The
+    * trade is the reference's exact forever-dedup narrows to
+    * duplicates arriving within the watermark, the standard production
+    * contract. On a static frame (batch mode runs the same code path:
+    * the batch/stream parity guarantee) there is no watermark: no row
+    * is late, and each user's one pass sees the whole input, so the
+    * dedup covers all of it. Which of the two applies is decided once,
+    * here, from `events.isStreaming`.
     *
     * The dedup lives INSIDE the per-user fold rather than as an
     * upstream `dropDuplicatesWithinWatermark`: a duplicate event
@@ -240,13 +202,15 @@ object EventPipeline {
     * Late rows (event time older than the watermark) are dropped
     * before the fold, exactly as the upstream dedup operator did.
     *
-    * CHECKPOINT COMPATIBILITY: round 15 changed the state type from
-    * `UserAggState` to [[BoundedUserState]] (and removed the upstream
-    * dedup operator), so a checkpoint written by the pre-r15 pipeline
-    * does NOT restore into this one — a long-lived deployment
-    * upgrading across that boundary must restart from a fresh
-    * checkpoint (and re-feed or accept the watermark-bounded gap),
-    * not debug a state-deserialization failure.
+    * CHECKPOINT COMPATIBILITY: the state type has changed twice. Round
+    * 15 moved it from `UserAggState` to [[BoundedUserState]] (and
+    * removed the upstream dedup operator); later `UserAggState` lost
+    * its seen-id map, always empty here, with the unbounded
+    * forever-dedup pipeline that filled it. A checkpoint written
+    * before either change does NOT restore into this pipeline — a
+    * long-lived deployment upgrading across one must restart from a
+    * fresh checkpoint (and re-feed or accept the watermark-bounded
+    * gap), not debug a state-deserialization failure.
     *
     * State-store provider: per-user state rides whatever
     * `spark.sql.streaming.stateStore.providerClass` the session
@@ -261,13 +225,17 @@ object EventPipeline {
                           cfg: EngineConfig,
                           watermark: String = "15 minutes"): Dataset[GrantChange] = {
     import spark.implicits._
-    typed(events)
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
+    val typed = events.toDF()
+      .withColumn("props", from_json(col("props"), MapType(StringType, StringType)))
+      .as[TypedEventRow]
+    // batch planning drops a watermark, and reading one then throws
+    val streaming = events.isStreaming
+    val in = if (streaming) typed.withWatermark("ts", watermark) else typed
+    in.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (userId: Long, evs: Iterator[TypedEventRow], state: GroupState[BoundedUserState]) => {
           val st0 = state.getOption.getOrElse(BoundedUserState(emptyState, Map.empty))
-          val wm = state.getCurrentWatermarkMs()
+          val wm = if (streaming) state.getCurrentWatermarkMs() else Long.MinValue
           // late-data filter + prior-batch dedup (point lookups) +
           // in-batch dedup (duplicate rows are identical — keeping any
           // one is exact)
@@ -275,8 +243,7 @@ object EventPipeline {
             .filter(e => e.ts.getTime >= wm)
             .filterNot(e => st0.seenTs.contains(e.event_id))
             .toSeq.distinctBy(_.event_id)
-          val (st, changes) = foldEvents(cfg, userId, st0.agg,
-            fresh.iterator, trackSeen = false)
+          val (st, changes) = foldEvents(cfg, userId, st0.agg, fresh.iterator)
           // watermark eviction of the dedup map, then record this
           // batch's ids
           val seen = st0.seenTs.filter(_._2 >= wm) ++

@@ -4,7 +4,6 @@ import graft.operators.NgramLm
 import graft.sources.BucketedUpsert
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Incremental maintenance of the stupid-backoff LM count stores —
   * the ingest path of `lm_perplexity_fp`. Batch `NgramLm.train`
@@ -119,17 +118,6 @@ object LmCountsStream {
       neg(c.totals, "n_tok").select(lit(0L).as("k"), col("n_tok")),
       Seq("k"), "k", 1, merge = additive, batchId = batchId)
   }
-
-  /** Streaming sink: `docs.writeStream` → incremental count merges.
-    * Run with a checkpointLocation so batch ids are monotone across
-    * restarts: the replay guard matches on (query id, batch id), and
-    * only a checkpoint keeps both stable across a restart. */
-  def writer(docs: DataFrame, prefix: String = "",
-             buckets: Int = DefaultBuckets): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        upsertBatch(batch.sparkSession, batch, prefix, buckets, Some(id))
-      }
 
   /** The accumulated counts as a [[NgramLm.Counts]] — drop-in for
     * `NgramLm.score`, which is how the store serves. Filtered to

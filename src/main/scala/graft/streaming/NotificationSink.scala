@@ -87,5 +87,5 @@ object NotificationSink {
             events: Dataset[EventPipeline.EventRow],
             cfg: graft.config.EngineConfig,
             transport: Transport): StreamingQuery =
-    writer(EventPipeline.grantChanges(spark, events, cfg), transport).start()
+    writer(EventPipeline.grantChangesBounded(spark, events, cfg), transport).start()
 }

@@ -10,10 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * compiled-plan/mutable-accumulator [[EventPipeline.foldEvents]] must
   * be EXTENSIONALLY IDENTICAL to the naive specification below (the
   * pre-round-15 implementation: immutable maps, name lookups, a fresh
-  * grants Map per event — modulo one documented benign deviation on
-  * duplicate events, see naiveFold) on every input — same final state, same flip
-  * sequence — across randomized configs, event streams, duplicate
-  * patterns, and prior states. The hot loop gets rewritten for speed;
+  * grants Map per event) on every input — same final state, same flip
+  * sequence — across randomized configs, event streams, repeated ids
+  * and prior states. Dedup is the pipeline's job, not the fold's
+  * (StreamingParitySpec pins it). The hot loop gets rewritten for speed;
   * this spec is what keeps "for speed" from quietly becoming "and
   * slightly different".
   */
@@ -27,31 +27,26 @@ class FoldParitySpec extends AnyFunSuite {
     else if (field == "value") Some(e.value.toString)
     else None
 
-  private def applyEvent(cfg: EngineConfig, st: UserAggState, e: TypedEventRow,
-                         trackSeen: Boolean): UserAggState = {
-    if (trackSeen && st.seenIds.contains(e.event_id)) st
-    else {
-      var counts = st.counts
-      var sums = st.sums
-      var distincts = st.distincts
-      cfg.aggregates.filter(_.eventType == e.event_type).foreach { a =>
-        a.aggType match {
-          case AggregateType.Count =>
-            counts = counts.updated(a.name, counts.getOrElse(a.name, 0L) + 1L)
-          case AggregateType.Sum =>
-            fieldValue(e, a.field.get).foreach { v =>
-              sums = sums.updated(a.name, sums.getOrElse(a.name, 0.0) + v.toDouble)
-            }
-          case AggregateType.DistinctCount =>
-            fieldValue(e, a.field.get).foreach { v =>
-              val set = distincts.getOrElse(a.name, Map.empty[String, Boolean])
-              distincts = distincts.updated(a.name, set.updated(v, true))
-            }
-        }
+  private def applyEvent(cfg: EngineConfig, st: UserAggState, e: TypedEventRow): UserAggState = {
+    var counts = st.counts
+    var sums = st.sums
+    var distincts = st.distincts
+    cfg.aggregates.filter(_.eventType == e.event_type).foreach { a =>
+      a.aggType match {
+        case AggregateType.Count =>
+          counts = counts.updated(a.name, counts.getOrElse(a.name, 0L) + 1L)
+        case AggregateType.Sum =>
+          fieldValue(e, a.field.get).foreach { v =>
+            sums = sums.updated(a.name, sums.getOrElse(a.name, 0.0) + v.toDouble)
+          }
+        case AggregateType.DistinctCount =>
+          fieldValue(e, a.field.get).foreach { v =>
+            val set = distincts.getOrElse(a.name, Map.empty[String, Boolean])
+            distincts = distincts.updated(a.name, set.updated(v, true))
+          }
       }
-      val seen = if (trackSeen) st.seenIds.updated(e.event_id, true) else st.seenIds
-      UserAggState(seen, counts, sums, distincts, st.grants)
     }
+    UserAggState(counts, sums, distincts, st.grants)
   }
 
   private def aggValue(st: UserAggState)(name: String): Double =
@@ -61,28 +56,16 @@ class FoldParitySpec extends AnyFunSuite {
       .getOrElse(0.0)
 
   private def naiveFold(cfg: EngineConfig, userId: Long, st0: UserAggState,
-                        events: Seq[TypedEventRow],
-                        trackSeen: Boolean): (UserAggState, Seq[GrantChange]) = {
+                        events: Seq[TypedEventRow]): (UserAggState, Seq[GrantChange]) = {
     var st = st0
     val changes = scala.collection.mutable.ArrayBuffer[GrantChange]()
     events.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-      // Deliberate (benign) deviation from the literal pre-r15 code:
-      // the historical fold recomputed grants and st.copy(grants=...)
-      // for DUPLICATE events too; this spec copy skips them. The two
-      // agree whenever the prior state's grants map is consistent with
-      // its aggregates — true for every fold-produced state, which is
-      // the only kind this spec feeds (prior states are naiveFold
-      // prefixes). The guard keeps the spec honest on states where a
-      // dup must not re-derive grants from unchanged aggregates.
-      val dup = trackSeen && st.seenIds.contains(e.event_id)
-      st = applyEvent(cfg, st, e, trackSeen)
-      if (!dup) {
-        val newGrants = RuleEval.grants(cfg, aggValue(st))
-        newGrants.foreach { case (f, g) =>
-          if (st.grants.getOrElse(f, true) != g) changes += GrantChange(userId, f, g)
-        }
-        st = st.copy(grants = newGrants)
+      st = applyEvent(cfg, st, e)
+      val newGrants = RuleEval.grants(cfg, aggValue(st))
+      newGrants.foreach { case (f, g) =>
+        if (st.grants.getOrElse(f, true) != g) changes += GrantChange(userId, f, g)
       }
+      st = st.copy(grants = newGrants)
     }
     (st, changes.toSeq)
   }
@@ -123,7 +106,7 @@ class FoldParitySpec extends AnyFunSuite {
 
   private def randomEvents(rnd: scala.util.Random, n: Int): Seq[TypedEventRow] =
     (0 until n).map { _ =>
-      val id = rnd.nextInt(n / 2 + 1).toLong // force duplicate ids
+      val id = rnd.nextInt(n / 2 + 1).toLong // repeated ids: equal sort keys keep input order
       TypedEventRow(id,
         new java.sql.Timestamp(1700000000000L + rnd.nextInt(1000) * 1000L),
         1L, Seq("a", "b", "c", "d")(rnd.nextInt(4)),
@@ -137,28 +120,13 @@ class FoldParitySpec extends AnyFunSuite {
     (1 to 60).foreach { trial =>
       val cfg = randomConfig(rnd)
       val events = randomEvents(rnd, 1 + rnd.nextInt(120))
-      val trackSeen = rnd.nextBoolean()
       // random prior state: replay a prefix through the naive fold
       val prefix = randomEvents(rnd, rnd.nextInt(40))
-      val (st0, _) = naiveFold(cfg, 7L, EventPipeline.emptyState, prefix, trackSeen)
-      val (wantSt, wantCh) = naiveFold(cfg, 7L, st0, events, trackSeen)
-      val (gotSt, gotCh) = EventPipeline.foldEvents(cfg, 7L, st0,
-        events.iterator, trackSeen)
+      val (st0, _) = naiveFold(cfg, 7L, EventPipeline.emptyState, prefix)
+      val (wantSt, wantCh) = naiveFold(cfg, 7L, st0, events)
+      val (gotSt, gotCh) = EventPipeline.foldEvents(cfg, 7L, st0, events.iterator)
       assert(gotSt == wantSt, s"trial $trial: state diverged\ncfg=$cfg")
       assert(gotCh == wantCh, s"trial $trial: flip sequence diverged\ncfg=$cfg")
     }
-  }
-
-  test("duplicate ids within one batch are folded exactly once (trackSeen=true)") {
-    // (with trackSeen=false the CALLERS own dedup — grantChangesBounded
-    // filters against its watermark map + distinctBy before the fold)
-    val cfg = DefaultConfig.config
-    val t = new java.sql.Timestamp(1700000000000L)
-    val e = TypedEventRow(1L, t, 1L, "purchase", 5.0, Map("k" -> "1"))
-    val (st1, _) = EventPipeline.foldEvents(cfg, 1L,
-      EventPipeline.emptyState, Iterator(e, e, e), trackSeen = true)
-    val (st2, _) = EventPipeline.foldEvents(cfg, 1L,
-      EventPipeline.emptyState, Iterator(e), trackSeen = true)
-    assert(st1 == st2)
   }
 }

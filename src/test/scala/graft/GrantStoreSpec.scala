@@ -2,9 +2,6 @@ package graft
 
 import graft.operators.AccessService
 import graft.sources.{Bucketed, BucketedUpsert, GrantStore}
-import graft.streaming.EventPipeline
-import graft.streaming.EventPipeline.EventRow
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Materialized grants table: round-trip, CDC upsert semantics, the
@@ -158,32 +155,6 @@ class GrantStoreSpec extends AnyFunSuite {
         GrantStore.read(spark, table), circuits)
       assert(!svc3.canAccess(7L, "purchase"))
       assert(svc2.canAccess(7L, "purchase"))
-    } finally drop(table)
-  }
-
-  test("streaming grant CDC upserts into the table via foreachBatch") {
-    import spark.implicits._
-    val table = "gs_stream"
-    drop(table)
-    try {
-      GrantStore.materialize(Seq((3L, "purchase", true), (3L, "message", true))
-        .toDF("user_id", "feature", "has_grant"), table, buckets = 4)
-      val ms = MemoryStream[EventRow](spark)
-      val q = GrantStore.writer(
-        EventPipeline.grantChanges(spark, ms.toDS(), graft.config.DefaultConfig.config),
-        table, buckets = 4).start()
-      try {
-        ms.addData(Seq(
-          EventRow(1, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"),
-            3, "purchase", 600.0, """{"k":1}"""),
-          EventRow(2, java.sql.Timestamp.valueOf("2024-01-01 00:02:00"),
-            3, "error", 900.0, """{"k":1}"""))) // ratio 1.5 → revoke purchase
-        q.processAllAvailable()
-      } finally q.stop()
-      val got = GrantStore.read(spark, table).collect()
-        .map(r => (r.getLong(0), r.getString(1)) -> r.getBoolean(2)).toMap
-      assert(got((3L, "purchase")) == false)
-      assert(got((3L, "message")) == true)
     } finally drop(table)
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import graft.sources.{BucketedUpsert, IvfIndexStore, Tables}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -42,12 +41,10 @@ class IvfIndexStoreSpec extends AnyFunSuite {
       IvfIndexStore.upsertBatch(spark, vecs, full, 8)
 
       val rows = vecs.as[Vec].collect()
-      val ms = MemoryStream[Vec](spark)
-      val q = IvfIndexStore.writer(ms.toDF(), inc, buckets = 8)
-        .queryName("ivf_inc_q").start()
-      try rows.grouped(math.max(1, rows.length / 3)).foreach { c =>
-        ms.addData(c.toSeq); q.processAllAvailable()
-      } finally q.stop()
+      // one micro-batch id per chunk, as a stream's foreachBatch passes it
+      rows.grouped(math.max(1, rows.length / 3)).zipWithIndex.foreach { case (c, id) =>
+        IvfIndexStore.upsertBatch(spark, c.toSeq.toDF(), inc, 8, Some(id.toLong))
+      }
 
       assert(cellSet(inc) == cellSet(full))
       assert(cellSet(inc).size == rows.length, "every vector indexed exactly once")
@@ -105,12 +102,10 @@ class IvfIndexStoreSpec extends AnyFunSuite {
       IvfIndexStore.upsertPqBatch(spark, vecs, full, 8)
 
       val rows = vecs.as[Vec].collect()
-      val ms = MemoryStream[Vec](spark)
-      val q = IvfIndexStore.pqWriter(ms.toDF(), inc, buckets = 8)
-        .queryName("pq_inc_q").start()
-      try rows.grouped(math.max(1, rows.length / 3)).foreach { c =>
-        ms.addData(c.toSeq); q.processAllAvailable()
-      } finally q.stop()
+      // one micro-batch id per chunk, as a stream's foreachBatch passes it
+      rows.grouped(math.max(1, rows.length / 3)).zipWithIndex.foreach { case (c, id) =>
+        IvfIndexStore.upsertPqBatch(spark, c.toSeq.toDF(), inc, 8, Some(id.toLong))
+      }
 
       def codeSet(p: String): Set[(Long, Int, Long)] =
         BucketedUpsert.read(spark, IvfIndexStore.codesTable(p)).collect()

@@ -2,7 +2,6 @@ package graft
 
 import graft.sources.{BucketedUpsert, PostingsStore, Tables}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -53,12 +52,10 @@ class PostingsStoreSpec extends AnyFunSuite {
       PostingsStore.upsertBatch(spark, docs, full, 8)
 
       val rows = docs.as[Doc].collect()
-      val ms = MemoryStream[Doc](spark)
-      val q = PostingsStore.writer(ms.toDF(), inc, buckets = 8)
-        .queryName("bm25_inc_q").start()
-      try rows.grouped(math.max(1, rows.length / 3)).foreach { c =>
-        ms.addData(c.toSeq); q.processAllAvailable()
-      } finally q.stop()
+      // one micro-batch id per chunk, as a stream's foreachBatch passes it
+      rows.grouped(math.max(1, rows.length / 3)).zipWithIndex.foreach { case (c, id) =>
+        PostingsStore.upsertBatch(spark, c.toSeq.toDF(), inc, 8, Some(id.toLong))
+      }
 
       assert(postingsSet(inc) == postingsSet(full))
       assert(statsRow(inc) == statsRow(full))

@@ -3,7 +3,6 @@ package graft
 import graft.sources.Tables
 import graft.streaming.AnomalyMonitorStream
 import graft.streaming.EventPipeline.EventRow
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Incremental anomaly monitor vs the batch ground truth: the
@@ -30,12 +29,10 @@ class StreamingAnomalySpec extends AnyFunSuite {
     try {
       val events = Tables.events(spark, sf).as[EventRow].collect()
         .sortBy(_.event_id)
-      val ms = MemoryStream[EventRow](spark)
-      val q = AnomalyMonitorStream.writer(ms.toDF(), table, buckets = 4)
-        .queryName("anom_converge_q").start()
-      try events.grouped(math.max(1, events.length / 3)).foreach { c =>
-        ms.addData(c.toSeq); q.processAllAvailable()
-      } finally q.stop()
+      // one micro-batch id per chunk, as a stream's foreachBatch passes it
+      events.grouped(math.max(1, events.length / 3)).zipWithIndex.foreach { case (c, id) =>
+        AnomalyMonitorStream.upsertBatch(spark, c.toSeq.toDF(), table, 4, Some(id.toLong))
+      }
 
       val batch = SparkEntry.queries("revenue_anomaly_mad")(spark, sf)
         .collect()

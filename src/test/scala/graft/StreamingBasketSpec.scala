@@ -2,7 +2,6 @@ package graft
 
 import graft.streaming.BasketStream
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,11 +37,10 @@ class StreamingBasketSpec extends AnyFunSuite {
       // whole baskets per chunk: orders hash to 3 disjoint batches
       val all = lines.as[Line].collect().toSeq
       val batches = all.groupBy(_.o % 3).toSeq.sortBy(_._1).map(_._2)
-      val ms = MemoryStream[Line](spark)
-      val q = BasketStream.writer(ms.toDF(), prefix, buckets = 4)
-        .queryName("basket_counts_q").start()
-      try batches.foreach { b => ms.addData(b); q.processAllAvailable() }
-      finally q.stop()
+      // one micro-batch id per chunk, as a stream's foreachBatch passes it
+      batches.zipWithIndex.foreach { case (b, id) =>
+        BasketStream.upsertBatch(spark, b.toDF(), prefix, 4, Some(id.toLong))
+      }
 
       assert(rowsOf(BasketStream.cosine(spark, prefix)) ==
         rowsOf(SparkEntry.queries("copurchase_cosine")(spark, sf)))

@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.NgramLm
 import graft.streaming.LmCountsStream
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming LM count maintenance ([[graft.streaming.LmCountsStream]]):
@@ -37,11 +36,10 @@ class StreamingLmSpec extends AnyFunSuite {
     LmCountsStream.init(spark, prefix, buckets = 4)
     try {
       val batches = corpus.grouped(11).toSeq // 11 + 11 + 8, uneven on purpose
-      val ms = MemoryStream[Doc](spark)
-      val q = LmCountsStream.writer(ms.toDF(), prefix, buckets = 4)
-        .queryName("lm_counts_q").start()
-      try batches.foreach { b => ms.addData(b); q.processAllAvailable() }
-      finally q.stop()
+      // one micro-batch id per chunk, as a stream's foreachBatch passes it
+      batches.zipWithIndex.foreach { case (b, id) =>
+        LmCountsStream.upsertBatch(spark, b.toDF(), prefix, 4, Some(id.toLong))
+      }
 
       val ref = NgramLm.train(corpus.toDF("doc_id", "text"))
       val got = LmCountsStream.readCounts(spark, prefix)

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The engine's core quality invariant (SURVEY.md §7.5 #5): the
   * incremental streaming path (flatMapGroupsWithState keyed state) and
   * the batch compiler produce the SAME grants on the same events —
-  * including uuid dedup across micro-batches. */
+  * including uuid dedup within and across micro-batches — and the same
+  * pipeline runs on a static frame. */
 class StreamingParitySpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -30,7 +31,7 @@ class StreamingParitySpec extends AnyFunSuite {
       ev(3, 1, "purchase", 200.0, 3)) // ratio 700/800 < 1.0 → re-grant
 
     val ms = MemoryStream[EventRow](spark)
-    val q = EventPipeline.grantChanges(spark, ms.toDS(), cfg)
+    val q = EventPipeline.grantChangesBounded(spark, ms.toDS(), cfg)
       .writeStream.format("memory").queryName("flips").outputMode("append").start()
     try {
       ms.addData(batch1); q.processAllAvailable()
@@ -66,6 +67,7 @@ class StreamingParitySpec extends AnyFunSuite {
       assert(EventPipeline.queueMetrics(q)("batch_id") == -1L)
       ms.addData(Seq(
         ev(1, 4, "purchase", 600.0, 1),
+        ev(1, 4, "purchase", 600.0, 1), // in-batch duplicate: folded twice, 1200 would keep purchase
         ev(2, 4, "error", 700.0, 2)))  // revoke purchase
       q.processAllAvailable()
       ms.addData(Seq(
@@ -187,8 +189,9 @@ class StreamingParitySpec extends AnyFunSuite {
     import spark.implicits._
     val events = Seq(
       ev(1, 5, "purchase", 600.0, 1),
+      ev(1, 5, "purchase", 600.0, 1), // duplicate: folded twice, 1200 would keep purchase
       ev(2, 5, "error", 900.0, 2)).toDS()
-    val flips = EventPipeline.grantChanges(spark, events, cfg).collect()
+    val flips = EventPipeline.grantChangesBounded(spark, events, cfg).collect()
     assert(flips.toSeq == Seq(GrantChange(5, "purchase", false)))
   }
 }

@@ -7,6 +7,7 @@ import graft.streaming.EventPipeline
 import graft.streaming.EventPipeline.{EventRow, GrantChange}
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Checkpoint/restart recovery of the bounded grant-flip pipeline:
@@ -27,6 +28,15 @@ object StreamingRecoverySpec {
   // divergence, without confusing legitimate duplicate flips INSIDE
   // one batch (a key flipping F→T→F emits false twice).
   val flipLog = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[GrantChange])]()
+
+  /** The per-user state of the pre-r15 pipeline: a forever seen-id
+    * set beside the accumulators. */
+  final case class LegacyUserState(
+      seenIds: Map[Long, Boolean],
+      counts: Map[String, Long],
+      sums: Map[String, Double],
+      distincts: Map[String, Map[String, Boolean]],
+      grants: Map[String, Boolean])
 }
 
 class StreamingRecoverySpec extends AnyFunSuite {
@@ -144,9 +154,10 @@ class StreamingRecoverySpec extends AnyFunSuite {
     // restart dies with Spark's state-schema incompatibility error —
     // a clear, immediate signal to restart from a fresh checkpoint —
     // rather than deserializing garbage into silently wrong state.
-    // grantChanges (the unbounded variant) still carries the pre-r15
-    // state type, so it stands in for the old pipeline here.
+    // A flatMapGroupsWithState over the pre-r15 state shape, keyed by
+    // user like the bounded fold, stands in for the old pipeline here.
     import spark.implicits._
+    import StreamingRecoverySpec.LegacyUserState
     val events = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
     val rows = events.as[EventRow].collect().sortBy(e => (e.ts.getTime, e.event_id))
     val (first, rest) = rows.splitAt(rows.length / 2)
@@ -157,7 +168,14 @@ class StreamingRecoverySpec extends AnyFunSuite {
       // foreachBatch sinks, not memory: the memory sink refuses ANY
       // checkpoint recovery, which would short-circuit before the
       // state-schema check under test
-      val q1 = EventPipeline.grantChanges(spark, ms.toDS(), cfg)
+      val q1 = ms.toDS().groupByKey(_.user_id)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+          (_: Long, evs: Iterator[EventRow], state: GroupState[LegacyUserState]) => {
+            val st0 = state.getOption.getOrElse(
+              LegacyUserState(Map.empty, Map.empty, Map.empty, Map.empty, Map.empty))
+            state.update(st0.copy(seenIds = st0.seenIds ++ evs.map(_.event_id -> true)))
+            Iterator.empty[GrantChange]
+          })
         .writeStream.queryName("mig_legacy")
         .option("checkpointLocation", ckpt).outputMode("append")
         .foreachBatch { (b: Dataset[GrantChange], _: Long) =>
