@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
@@ -97,11 +99,13 @@ object Bucketed {
 
   /** Spark's own Parquet decoder for whole bucket files, run on the
     * driver: no job, no task. `schema` is the table's. Building it
-    * broadcasts the Hadoop conf, so build it once per publish; calls
+    * broadcasts the session's Hadoop conf, so it is built once per
+    * session and schema ([[SessionCache]]) and reused by every publish;
+    * Parquet options set on the session later do not reach it. Calls
     * may run on several threads at once. Each call decodes one file
     * and copies its rows out of the Parquet reader's reused buffers. */
   private[sources] def fileReader(spark: SparkSession, schema: StructType)
-      : (Path, Long) => Array[InternalRow] = {
+      : (Path, Long) => Array[InternalRow] = readers(spark, schema) {
     val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
       new StructType(), schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
       spark.sessionState.newHadoopConf())
@@ -116,6 +120,19 @@ object Bucketed {
         case _ =>
       }
     }
+  }
+
+  private val readers = new SessionCache[StructType, (Path, Long) => Array[InternalRow]]
+
+  /** Values built once per session and key, for the driver-side
+    * publish. Sessions are held weakly, so a stopped session's entries
+    * go with it — which holds only while no value references its
+    * session. */
+  private[sources] final class SessionCache[K, V] {
+    private val bySession = new java.util.WeakHashMap[SparkSession, TrieMap[K, V]]()
+    def apply(spark: SparkSession, key: K)(build: => V): V =
+      bySession.synchronized(bySession.computeIfAbsent(spark, _ => TrieMap.empty[K, V]))
+        .getOrElseUpdate(key, build)
   }
 
   /** Spark's own Parquet writer (`prepareWrite` → `OutputWriterFactory`)

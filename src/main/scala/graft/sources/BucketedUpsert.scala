@@ -3,9 +3,11 @@ package graft.sources
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{InternalRow, TableIdentifier}
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BoundReference, GenericInternalRow, InterpretedOrdering, SortOrder, UnsafeProjection, UnsafeRow, Unevaluable}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BoundReference, GenericInternalRow, InterpretedOrdering, NamedExpression, SortOrder, UnsafeProjection, UnsafeRow, Unevaluable}
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, Project}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.classic.ClassicConversions
+import org.apache.spark.sql.execution.command.CommandUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
@@ -42,15 +44,49 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     * metadata lookup; `SHOW CREATE TABLE` ran a command per publish. */
   private[graft] def inactiveGen(spark: SparkSession, table: String): String = {
     val (a, b) = generations(table)
-    val served = if (!spark.catalog.tableExists(table)) None
-      else spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table)).viewText
+    val catalog = spark.sessionState.catalog
+    val served = Option.when(catalog.tableExists(TableIdentifier(table)))(
+      catalog.getTableMetadata(TableIdentifier(table)).viewText).flatten
     if (served.exists(_.contains(s"`$a`"))) b else a
   }
 
+  /** Serve `gen` through the view `table` and record it in the marker.
+    * The view's text stays `SELECT * FROM `gen`` ([[inactiveGen]] and
+    * `SHOW CREATE TABLE` read the generation from it). An existing view
+    * over a generation of the same columns is repointed through the
+    * session catalog, as `ALTER VIEW … AS` does it, with no SQL
+    * statement: first every cached frame over the view is uncached,
+    * with cascade — what `CREATE OR REPLACE VIEW` did to them — then
+    * `alterTable` swaps its text, which also drops the view from this
+    * session's relation cache. Creating the view, or repointing it
+    * across a change of columns, runs `CREATE OR REPLACE VIEW`: the
+    * first `materialize`, `adopt`, a layout change. */
   private[graft] def publish(spark: SparkSession, table: String, gen: String): Unit = {
-    spark.sql(s"CREATE OR REPLACE VIEW `$table` AS SELECT * FROM `$gen`")
+    val catalog = spark.sessionState.catalog
+    val view = TableIdentifier(table)
+    val text = s"SELECT * FROM `$gen`"
+    Option.when(catalog.tableExists(view))(catalog.getTableRawMetadata(view))
+      .filter(_.schema.catalogString ==
+        catalog.getTableRawMetadata(TableIdentifier(gen)).schema.catalogString) match {
+      case Some(meta) =>
+        CommandUtils.uncacheTableOrView(ClassicConversions.castToImpl(spark), meta.identifier)
+        catalog.alterTable(meta.copy(viewText = Some(text), viewOriginalText = Some(text)))
+      case None => spark.sql(s"CREATE OR REPLACE VIEW `$table` AS $text")
+    }
     writeMarker(spark, table, gen)
+  }
+
+  /** What `REFRESH TABLE gen` did after its files changed, without
+    * analyzing it or listing its files: drop it from this session's
+    * relation cache, so the next resolution lists them again, and
+    * recache every cached frame that reads its directory (refreshing
+    * that frame's own file listing). */
+  private def refreshGen(spark: SparkSession, gen: String): Unit = {
+    val catalog = spark.sessionState.catalog
+    catalog.invalidateCachedTable(TableIdentifier(gen))
+    val s = ClassicConversions.castToImpl(spark)
+    s.sharedState.cacheManager.recacheByPath(s,
+      catalog.getTableMetadata(TableIdentifier(gen)).location.toString)
   }
 
   /** Durable publish marker `<warehouse>/<table>.graft_store`: which
@@ -62,7 +98,7 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     * `t__b` and must rebuild from the corpus ([[adopt]] is the read
     * side). Written on EVERY publish (tiny, atomic), so the marker
     * always describes the last served state; a crash between
-    * CREATE VIEW and the marker move leaves the previous marker,
+    * the view swap and the marker move leaves the previous marker,
     * i.e. adoption resurrects the pre-merge publish — exactly the
     * at-least-once replay the (queryId, batchId) guard absorbs. */
   private[graft] def markerPath(spark: SparkSession, table: String): java.nio.file.Path = {
@@ -76,7 +112,7 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     p.setProperty("version", "1")
     p.setProperty("active", active)
     val (a, b) = generations(table)
-    val present = Seq(a, b).filter(spark.catalog.tableExists)
+    val present = Seq(a, b).filter(g => spark.sessionState.catalog.tableExists(TableIdentifier(g)))
     p.setProperty("gens", present.mkString(","))
     present.foreach { g =>
       val m = spark.sessionState.catalog
@@ -261,17 +297,20 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
 
   /** Read through the view. Spark's table-relation cache is
     * per-session: a foreachBatch upsert runs in the micro-batch's
-    * CLONED session, whose `REFRESH TABLE` cannot invalidate a reader
+    * CLONED session, whose generation refresh cannot invalidate a reader
     * session's cached file listing of a generation it resolved
     * earlier (observed: a reader that had seen `t__a` empty kept
-    * seeing it empty after the stream republished it). Refreshing the
-    * view and both generations here makes every read see the latest
-    * publish, at pure-metadata cost; a shared metastore + snapshot
-    * table format versions this automatically on real deployments. */
+    * seeing it empty after the stream republished it). Refreshing both
+    * generations in the reader's session ([[refreshGen]], as a publish
+    * does) makes every read see the latest publish, at pure-metadata
+    * cost: the view resolves to a generation, whose relation this
+    * session then lists afresh, and frames cached over either are
+    * recached. A shared metastore + snapshot table format versions
+    * this automatically on real deployments. */
   def read(spark: SparkSession, table: String): DataFrame = {
     val (a, b) = generations(table)
-    Seq(table, a, b).foreach { t =>
-      if (spark.catalog.tableExists(t)) spark.catalog.refreshTable(t)
+    Seq(a, b).foreach { g =>
+      if (spark.sessionState.catalog.tableExists(TableIdentifier(g))) refreshGen(spark, g)
     }
     spark.table(table)
   }
@@ -384,13 +423,13 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     * partition deduplicates its ids rather than a `distinct()`
     * shuffling them, and stops keeping rows once it holds more than
     * the budget, so the collect is bounded by partitions × budget
-    * whatever the delta's size. */
+    * whatever the delta's size. Every partition is still read to its
+    * end: a stateful operator upstream (the grant fold) commits its
+    * state only then. */
   private[graft] def deltaBuckets(delta: RDD[InternalRow], schema: StructType, bucketKey: String,
                                   buckets: Int, rowBudget: Int)
       : (Set[Int], Option[Seq[(Int, InternalRow)]]) = {
-    val key = schema.fieldIndex(bucketKey)
-    val bucketOf = HashPartitioning(Seq(BoundReference(key, schema(key).dataType, nullable = true)),
-      buckets).partitionIdExpression
+    val bucketOf = bucketExpr(schema, bucketKey, buckets)
     val parts = delta.mapPartitions { rows =>
       val ids = scala.collection.mutable.Set.empty[Int]
       val kept = scala.collection.mutable.ArrayBuffer.empty[(Int, InternalRow)]
@@ -403,6 +442,14 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     }.collect()
     val kept = parts.flatMap(_._2)
     (parts.flatMap(_._1).toSet, Option.when(kept.length <= rowBudget)(kept.toSeq))
+  }
+
+  /** The bucket a row of `schema` lands in: the bucketed writer's own
+    * expression, `HashPartitioning(key, buckets).partitionIdExpression`. */
+  private def bucketExpr(schema: StructType, bucketKey: String, buckets: Int) = {
+    val key = schema.fieldIndex(bucketKey)
+    HashPartitioning(Seq(BoundReference(key, schema(key).dataType, nullable = true)),
+      buckets).partitionIdExpression
   }
 
   /** The last applied (query id, batch id) recorded on a generation
@@ -438,14 +485,22 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     * holds none. Generations are overwritten in place, which keeps
     * their table properties, so a write without a batch id must clear
     * the entry an earlier batch left — a stale one would describe a
-    * state the generation no longer holds. */
+    * state the generation no longer holds. The properties are set and
+    * cleared with the session catalog's `alterTable`, then `gen` is
+    * dropped from this session's relation cache: what `ALTER TABLE …
+    * SET / UNSET TBLPROPERTIES` does, without a SQL statement. */
   private def recordBatch(spark: SparkSession, gen: String,
-                          applied: Option[(String, Long)]): Unit = applied match {
-    case Some((qid, id)) => spark.sql(
-      s"ALTER TABLE `$gen` SET TBLPROPERTIES(" +
-        s"'graft.batchId'='$id', 'graft.queryId'='$qid')")
-    case None => if (appliedBatch(spark, gen).isDefined) spark.sql(
-      s"ALTER TABLE `$gen` UNSET TBLPROPERTIES IF EXISTS ('graft.batchId', 'graft.queryId')")
+                          applied: Option[(String, Long)]): Unit = {
+    val catalog = spark.sessionState.catalog
+    val meta = catalog.getTableRawMetadata(TableIdentifier(gen))
+    val kept = meta.properties -- Seq("graft.batchId", "graft.queryId")
+    val props = applied.fold(kept) { case (qid, id) =>
+      kept ++ Map("graft.batchId" -> id.toString, "graft.queryId" -> qid)
+    }
+    if (props != meta.properties) {
+      catalog.alterTable(meta.copy(properties = props))
+      catalog.invalidateCachedTable(TableIdentifier(gen))
+    }
   }
 
   /** Merge `delta` into `table`: rows join on `joinKeys`; every other
@@ -466,23 +521,57 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
              merge: (String, Column, Column) => Column =
                (_, ex, dl) => coalesce(dl, ex),
              batchId: Option[Long] = None): Unit = {
-    // the merged rows keep the table's column order, whatever position
-    // the join keys hold in it
-    val cols = columns(spark, table)
-    val valueCols = cols.filterNot(joinKeys.contains)
+    val (cols, upsertMerge) = outerMerge(spark, table, joinKeys, merge)
     // value columns are renamed __delta_* for the merge
     val delta = delta0.select(
       joinKeys.map(col) ++
-        valueCols.map(c => col(c).as(s"__delta_$c")): _*)
-    // no broadcast() hint on the Spark path: Spark cannot broadcast-build
-    // a FULL OUTER side (every hint here is ignored with a per-merge
-    // warning). Both sides are delta-bounded anyway — `existing` is
-    // only the touched buckets — so the shuffled join is small by
-    // construction.
-    compose(spark, table, delta, joinKeys, bucketKey, buckets, batchId,
-      Merge("full_outer", cols.map(c =>
-        if (joinKeys.contains(c)) col(c)
-        else merge(c, col(c), col(s"__delta_$c")).as(c))))
+        cols.filterNot(joinKeys.contains).map(c => col(c).as(s"__delta_$c")): _*)
+    compose(spark, table, delta, joinKeys, bucketKey, buckets, batchId, upsertMerge)
+  }
+
+  /** The view's columns and [[upsert]]'s merge over them. The merged
+    * rows keep the table's column order, whatever position the join
+    * keys hold in it. No broadcast() hint on the Spark path: Spark
+    * cannot broadcast-build a FULL OUTER side (every hint here is
+    * ignored with a per-merge warning). Both sides are delta-bounded
+    * anyway — `existing` is only the touched buckets — so the shuffled
+    * join is small by construction. */
+  private def outerMerge(spark: SparkSession, table: String, joinKeys: Seq[String],
+                         merge: (String, Column, Column) => Column): (Seq[String], Merge) = {
+    val cols = columns(spark, table)
+    cols -> Merge("full_outer", cols.map(c =>
+      if (joinKeys.contains(c)) col(c)
+      else merge(c, col(c), col(s"__delta_$c")).as(c)))
+  }
+
+  /** Last-writer-wins [[upsert]] of a delta the caller already holds on
+    * the driver: at most [[DriverMergeRows]] `rows` of `schema`, which
+    * has the table's columns (in any order). Their buckets are computed
+    * here with the writer's expression, so publishing them runs no job
+    * when the driver merges ([[publishDelta]]). Where it cannot — past
+    * [[DriverMergeBytes]], or on the first publish after `materialize`
+    * — the write job reads the rows from a one-partition RDD. */
+  private[sources] def upsertRows(spark: SparkSession, table: String, schema: StructType,
+                                  rows: Seq[InternalRow], joinKeys: Seq[String],
+                                  bucketKey: String, buckets: Int,
+                                  batchId: Option[Long]): Unit = {
+    require(rows.size <= DriverMergeRows, s"upsertRows: ${rows.size} rows > $DriverMergeRows")
+    val (cols, upsertMerge) = outerMerge(spark, table, joinKeys, (_, ex, dl) => coalesce(dl, ex))
+    // the delta's layout as upsert's select makes it
+    val fields = (joinKeys ++ cols.filterNot(joinKeys.contains)).map(c => schema.fieldIndex(c))
+    val deltaSchema = StructType(fields.map(schema(_)).map(f =>
+      if (joinKeys.contains(f.name)) f else f.copy(name = s"__delta_${f.name}")))
+    val project = UnsafeProjection.create(fields.map(i =>
+      BoundReference(i, schema(i).dataType, nullable = true)))
+    val bucketOf = bucketExpr(deltaSchema, bucketKey, buckets)
+    val delta = rows.map { r =>
+      val d = project(r).copy()
+      bucketOf.eval(d).asInstanceOf[Int] -> (d: InternalRow)
+    }
+    publishDelta(spark, table, deltaSchema, delta.map(_._1).toSet, Some(delta),
+      () => ColumnBridge.ofInternalRows(spark,
+        spark.sparkContext.parallelize(delta.map(_._2), 1), deltaSchema),
+      joinKeys, bucketKey, buckets, batchId, upsertMerge)
   }
 
   /** Delete rows by key — the retention/GDPR path, same O(delta)
@@ -515,7 +604,8 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
   }
 
   /** The largest delta, in rows, that the bucket-set job hands to the
-    * driver, and the most bytes of touched bucket files that the
+    * driver (for `GrantStore.upsert`, the largest batch of raw flips it
+    * collects), and the most bytes of touched bucket files that the
     * driver merges itself. Past either, [[compose]] runs a Spark write
     * job. A grant micro-batch publishes tens of rows into files of a
     * few kB; 1,024 rows and 8 MiB keep what the driver decodes per
@@ -541,104 +631,122 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     * cluster's parallelism ([[Bucketed.write]]); that is also every
     * first publish after `materialize`, whose inactive generation does
     * not exist yet. Everything else is catalog and filesystem
-    * metadata. */
+    * metadata, done through the session catalog with no SQL statement
+    * ([[recordBatch]], [[refreshGen]], [[publish]]); only a publish
+    * that creates the view runs one. [[upsertRows]] enters at the
+    * publish half ([[publishDelta]]) with rows already on the driver,
+    * and runs no job at all when the driver merges. */
   private def compose(spark: SparkSession, table: String, delta0: DataFrame,
                       joinKeys: Seq[String], bucketKey: String, buckets: Int,
                       batchId: Option[Long], merge: Merge): Unit = {
-    // the delta joins and prunes buckets on the same key; a bucketKey
-    // outside joinKeys would surface as an opaque unresolved-column
-    // failure deep in affectedBuckets — fail fast with the contract
-    require(joinKeys.contains(bucketKey),
-      s"bucketKey '$bucketKey' must be one of joinKeys ${joinKeys.mkString("[", ", ", "]")}: " +
-        "the merge joins and prunes buckets on the same key")
     // the delta's rows are cached as an RDD, not as a Dataset: adaptive
     // execution materializes a cached Dataset over a shuffle (a CDC
     // collapse, a distinct) in a job of its own, ahead of the bucket-set job
     val cached = delta0.queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // one job folds the delta and collects its buckets; it runs ahead
-      // of the replay guard, so a redelivered batch still folds once.
-      // Empty or net-zero CDC batches touch nothing and pay no rewrite
+      // of the replay guard, so a redelivered batch still folds once
       val (touched, deltaRows) =
         deltaBuckets(cached, delta0.schema, bucketKey, buckets, DriverMergeRows)
-      if (touched.isEmpty) return
-      val gen = inactiveGen(spark, table)
-      val (a, b) = generations(table)
-      val active = if (gen == a) b else a
-      // a merge under the wrong bucket count would prune the wrong
-      // buckets AND link carried-forward files into a generation whose
-      // catalog declares a different layout — corrupt both ways
-      catalogBuckets(spark, active).foreach(n => require(n == buckets,
-        s"upsert: caller assumes $buckets buckets but '$table' is bucketed " +
-          s"into $n — refusing a mixed-layout merge"))
-      // replay guard: this (query, batch) already merged into the
-      // served generation → re-delivery is a no-op. A recorded query
-      // id of "" can only come from a table written before query ids
-      // were recorded (batch callers record the BatchCaller sentinel),
-      // so it matches any current query for the same batch id —
-      // otherwise the first redelivery after an upgrade would re-apply
-      // a non-idempotent additive batch.
-      val qid = currentQueryId(spark)
-      val alreadyApplied = batchId.exists { id =>
-        appliedBatch(spark, active).exists { case (recQid, recId) =>
-          val hit = recId == id && (recQid == qid || recQid.isEmpty)
-          if (hit && recQid.isEmpty)
-            logWarning(s"BucketedUpsert: legacy table '$table' " +
-              s"has no recorded query id; skipping batch $id for query '$qid' " +
-              "via the pre-upgrade wildcard")
-          hit
-        }
-      }
-      if (alreadyApplied) return
-      val srcDir = tableDir(spark, active)
-      val (touchedFiles, untouchedFiles) = {
-        import scala.jdk.CollectionConverters._
-        val listing = java.nio.file.Files.list(srcDir)
-        // Files.list holds an open directory handle — close it or a
-        // once-per-micro-batch caller leaks fds until GC
-        val all = try listing.iterator().asScala
-          .filter(p => bucketIdOf(p.getFileName.toString).isDefined).toSeq
-        finally listing.close()
-        all.partition(p => touched(bucketIdOf(p.getFileName.toString).get))
-      }
-      val onDriver = for {
-        rows <- deltaRows
-        if touchedFiles.iterator.map(java.nio.file.Files.size).sum <= DriverMergeBytes
-        tableSchema = spark.sessionState.catalog.getTableMetadata(TableIdentifier(active)).schema
-        local <- localMerge(spark, gen, tableSchema, delta0.schema, joinKeys, bucketKey,
-          buckets, merge)
-      } yield (rows, tableSchema, local)
-      onDriver match {
-        case Some((rows, tableSchema, local)) =>
-          mergeOnDriver(spark, gen, tableSchema, local, rows, touchedFiles, bucketKey)
-        case None =>
-          val delta = ColumnBridge.ofInternalRows(spark, cached, delta0.schema)
-          // the write job reads ONLY the touched buckets' files
-          // (bucket-file addressing beats predicate pruning: no scan
-          // even plans over the untouched buckets)
-          val existing =
-            if (touchedFiles.isEmpty) spark.table(table).limit(0)
-            else spark.read.schema(spark.table(table).schema)
-              .parquet(touchedFiles.map(_.toString): _*)
-          val right = if (merge.outer) delta else broadcast(delta)
-          Bucketed.write(existing.join(right, joinKeys, merge.how).select(merge.project: _*),
-            gen, bucketKey, buckets, touched.size)
-      }
-      // carry untouched buckets forward: link shares the bytes (the
-      // "reference" half of generation-compose); copy is the fallback
-      // for filesystems without links
-      val dstDir = tableDir(spark, gen)
-      untouchedFiles.foreach { f =>
-        val dst = dstDir.resolve(f.getFileName.toString)
-        try java.nio.file.Files.createLink(dst, f)
-        catch { case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-          java.nio.file.Files.copy(f, dst)
-        }
-      }
-      recordBatch(spark, gen, batchId.map(qid -> _))
-      spark.sql(s"REFRESH TABLE `$gen`")
-      publish(spark, table, gen)
+      publishDelta(spark, table, delta0.schema, touched, deltaRows,
+        () => ColumnBridge.ofInternalRows(spark, cached, delta0.schema),
+        joinKeys, bucketKey, buckets, batchId, merge)
     } finally cached.unpersist(blocking = false)
+  }
+
+  /** The publish half of [[compose]], once the delta's bucket set
+    * `touched` is known, and — under [[DriverMergeRows]] — its rows
+    * with their bucket ids. `frame` is the delta as a DataFrame of
+    * `schema`, read only by the write job. Runs no job when the driver
+    * merges, and no SQL statement unless the view must be created. */
+  private def publishDelta(spark: SparkSession, table: String, schema: StructType,
+                           touched: Set[Int], deltaRows: Option[Seq[(Int, InternalRow)]],
+                           frame: () => DataFrame, joinKeys: Seq[String], bucketKey: String,
+                           buckets: Int, batchId: Option[Long], merge: Merge): Unit = {
+    // the delta joins and prunes buckets on the same key; a bucketKey
+    // outside joinKeys would surface as an opaque unresolved-column
+    // failure deep in affectedBuckets — fail fast with the contract
+    require(joinKeys.contains(bucketKey),
+      s"bucketKey '$bucketKey' must be one of joinKeys ${joinKeys.mkString("[", ", ", "]")}: " +
+        "the merge joins and prunes buckets on the same key")
+    // empty or net-zero CDC batches touch nothing and pay no rewrite
+    if (touched.isEmpty) return
+    val gen = inactiveGen(spark, table)
+    val (a, b) = generations(table)
+    val active = if (gen == a) b else a
+    // a merge under the wrong bucket count would prune the wrong
+    // buckets AND link carried-forward files into a generation whose
+    // catalog declares a different layout — corrupt both ways
+    catalogBuckets(spark, active).foreach(n => require(n == buckets,
+      s"upsert: caller assumes $buckets buckets but '$table' is bucketed " +
+        s"into $n — refusing a mixed-layout merge"))
+    // replay guard: this (query, batch) already merged into the
+    // served generation → re-delivery is a no-op. A recorded query
+    // id of "" can only come from a table written before query ids
+    // were recorded (batch callers record the BatchCaller sentinel),
+    // so it matches any current query for the same batch id —
+    // otherwise the first redelivery after an upgrade would re-apply
+    // a non-idempotent additive batch.
+    val qid = currentQueryId(spark)
+    val alreadyApplied = batchId.exists { id =>
+      appliedBatch(spark, active).exists { case (recQid, recId) =>
+        val hit = recId == id && (recQid == qid || recQid.isEmpty)
+        if (hit && recQid.isEmpty)
+          logWarning(s"BucketedUpsert: legacy table '$table' " +
+            s"has no recorded query id; skipping batch $id for query '$qid' " +
+            "via the pre-upgrade wildcard")
+        hit
+      }
+    }
+    if (alreadyApplied) return
+    val srcDir = tableDir(spark, active)
+    val (touchedFiles, untouchedFiles) = {
+      import scala.jdk.CollectionConverters._
+      val listing = java.nio.file.Files.list(srcDir)
+      // Files.list holds an open directory handle — close it or a
+      // once-per-micro-batch caller leaks fds until GC
+      val all = try listing.iterator().asScala
+        .filter(p => bucketIdOf(p.getFileName.toString).isDefined).toSeq
+      finally listing.close()
+      all.partition(p => touched(bucketIdOf(p.getFileName.toString).get))
+    }
+    val onDriver = for {
+      rows <- deltaRows
+      if touchedFiles.iterator.map(java.nio.file.Files.size).sum <= DriverMergeBytes
+      tableSchema = spark.sessionState.catalog.getTableMetadata(TableIdentifier(active)).schema
+      local <- localMerge(spark, gen, tableSchema, schema, joinKeys, bucketKey,
+        buckets, merge)
+    } yield (rows, tableSchema, local)
+    onDriver match {
+      case Some((rows, tableSchema, local)) =>
+        mergeOnDriver(spark, gen, tableSchema, local, rows, touchedFiles, bucketKey)
+      case None =>
+        val delta = frame()
+        // the write job reads ONLY the touched buckets' files
+        // (bucket-file addressing beats predicate pruning: no scan
+        // even plans over the untouched buckets)
+        val existing =
+          if (touchedFiles.isEmpty) spark.table(table).limit(0)
+          else spark.read.schema(spark.table(table).schema)
+            .parquet(touchedFiles.map(_.toString): _*)
+        val right = if (merge.outer) delta else broadcast(delta)
+        Bucketed.write(existing.join(right, joinKeys, merge.how).select(merge.project: _*),
+          gen, bucketKey, buckets, touched.size)
+    }
+    // carry untouched buckets forward: link shares the bytes (the
+    // "reference" half of generation-compose); copy is the fallback
+    // for filesystems without links
+    val dstDir = tableDir(spark, gen)
+    untouchedFiles.foreach { f =>
+      val dst = dstDir.resolve(f.getFileName.toString)
+      try java.nio.file.Files.createLink(dst, f)
+      catch { case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
+        java.nio.file.Files.copy(f, dst)
+      }
+    }
+    recordBatch(spark, gen, batchId.map(qid -> _))
+    refreshGen(spark, gen)
+    publish(spark, table, gen)
   }
 
   /** One bucket's existing rows and delta rows → its merged rows. */
@@ -647,21 +755,41 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
   /** `merge` made runnable on the driver: its output schema and a
     * function from one bucket's existing rows and delta rows to its
     * merged rows. The join is [[localJoin]]; the projection is the
-    * caller's own columns, analyzed and optimized by Catalyst over a
-    * relation laid out as Spark lays out the USING join — the keys,
-    * then the table's other columns, then (full outer) the delta's —
-    * and evaluated by a Catalyst projection. None when the driver
-    * cannot stand in for the write job: a join key whose equality is
-    * not that of its bytes (floating point, a non-binary collation) or
-    * whose type differs between the sides, a projection Catalyst
-    * cannot evaluate outside a plan, or an inactive generation that is
-    * missing or laid out otherwise than the merge's output — the write
-    * job's create path handles those. */
+    * caller's own columns ([[mergePlan]]), evaluated by a Catalyst
+    * projection. None when the driver cannot stand in for the write
+    * job: a merge [[mergePlan]] refuses, or an inactive generation that
+    * is missing or laid out otherwise than the merge's output — the
+    * write job's create path handles those. */
   private def localMerge(spark: SparkSession, gen: String, tableSchema: StructType,
                          deltaSchema: StructType, joinKeys: Seq[String], bucketKey: String,
                          buckets: Int, merge: Merge)
       : Option[(StructType, BucketMerge)] = {
     val catalog = spark.sessionState.catalog
+    for {
+      (schema, exprs, input) <- mergePlans(spark, (tableSchema, deltaSchema, joinKeys, merge))(
+        mergePlan(spark, tableSchema, deltaSchema, joinKeys, merge))
+      if catalog.tableExists(TableIdentifier(gen)) &&
+        Bucketed.sameLayout(catalog.getTableMetadata(TableIdentifier(gen)), schema, bucketKey, buckets)
+    } yield {
+      val project = UnsafeProjection.create(exprs, input)
+      project.initialize(0)
+      val join = localJoin(tableSchema, deltaSchema, joinKeys, merge.outer)
+      schema -> ((existing, delta) => join(existing, delta).map(project(_).copy()))
+    }
+  }
+
+  /** `merge.project` analyzed and optimized by Catalyst over a relation
+    * laid out as Spark lays out the USING join — the keys, then the
+    * table's other columns, then (full outer) the delta's: the output
+    * schema, the optimized expressions and the attributes they read.
+    * None for a join key whose equality is not that of its bytes
+    * (floating point, a non-binary collation) or whose type differs
+    * between the sides, or a projection Catalyst cannot evaluate
+    * outside a plan. Planned once per session and merge
+    * ([[Bucketed.SessionCache]]). */
+  private def mergePlan(spark: SparkSession, tableSchema: StructType, deltaSchema: StructType,
+                        joinKeys: Seq[String], merge: Merge)
+      : Option[(StructType, Seq[NamedExpression], Seq[Attribute])] = {
     val bytewise = joinKeys.forall { k =>
       val t = tableSchema(k).dataType
       t == deltaSchema(k).dataType && (t match {
@@ -671,7 +799,7 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
         case _ => false
       })
     }
-    if (!bytewise || !catalog.tableExists(TableIdentifier(gen))) return None
+    if (!bytewise) return None
     val others = (s: StructType) => s.fields.toSeq.filterNot(f => joinKeys.contains(f.name))
     val layout = joinKeys.map(tableSchema(_)) ++
       (if (merge.outer) (others(tableSchema) ++ others(deltaSchema)).map(_.copy(nullable = true))
@@ -691,14 +819,11 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
       case _: Unevaluable => true
       case _ => false
     })
-    if (unevaluable ||
-        !Bucketed.sameLayout(catalog.getTableMetadata(TableIdentifier(gen)),
-          plan.schema, bucketKey, buckets)) return None
-    val project = UnsafeProjection.create(exprs, input)
-    project.initialize(0)
-    val join = localJoin(tableSchema, deltaSchema, joinKeys, merge.outer)
-    Some(plan.schema -> ((existing, delta) => join(existing, delta).map(project(_).copy())))
+    Option.when(!unevaluable)((plan.schema, exprs, input))
   }
+
+  private val mergePlans = new Bucketed.SessionCache[(StructType, StructType, Seq[String], Merge),
+    Option[(StructType, Seq[NamedExpression], Seq[Attribute])]]
 
   /** Rewrite the touched buckets into the inactive generation `gen`
     * without a job: per bucket, decode the active generation's file

@@ -45,8 +45,11 @@ object CircuitStore {
   def drop(spark: SparkSession, table: String): Unit =
     BucketedUpsert.drop(spark, table)
 
+  /** Through [[BucketedUpsert.read]]: a breaker stream publishes from
+    * its own session, whose publishes a bare `spark.table` here would
+    * not see (a stale file listing of a rewritten generation). */
   def read(spark: SparkSession, table: String = DefaultTable): DataFrame =
-    spark.table(table)
+    BucketedUpsert.read(spark, table)
 
   /** Upsert the latest window verdict per feature from a batch of
     * breaker windows `[feature, win_start, ..., circuit_open]`: the

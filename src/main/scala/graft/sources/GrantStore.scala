@@ -1,7 +1,12 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Materialized grants table — the storage layer of the serve path
   * (BASELINE north star: "Spark SQL feature transformations +
@@ -46,15 +51,69 @@ object GrantStore {
       .select(col("user_id"), col("feature"),
         (col("nt") > col("nf")).as("has_grant"))
 
+  /** [[collapse]] over a batch already on the driver: `changes` are
+    * rows of `schema`, which has the `user_id`, `feature` and
+    * `has_grant` columns; the result's rows are `[user_id, feature,
+    * has_grant]` ([[collapsedSchema]]). Same parity rule: per (user,
+    * feature), as many true as false flips drops the key, otherwise the
+    * majority wins; a null flip counts as neither. */
+  private[graft] def collapseLocal(changes: Seq[InternalRow], schema: StructType): Seq[InternalRow] = {
+    val Seq(u, f, g) = Seq("user_id", "feature", "has_grant").map(schema.fieldIndex)
+    // (user, feature) as bytes: what groupBy compares for these types
+    val key = UnsafeProjection.create(Seq(u, f).map(i =>
+      BoundReference(i, schema(i).dataType, nullable = true)))
+    val net = scala.collection.mutable.LinkedHashMap.empty[UnsafeRow, Int]
+    changes.foreach { r =>
+      if (!r.isNullAt(g)) {
+        val k = key(r).copy()
+        net(k) = net.getOrElse(k, 0) + (if (r.getBoolean(g)) 1 else -1)
+      }
+    }
+    net.iterator.collect { case (k, n) if n != 0 =>
+      new GenericInternalRow(Array[Any](k.get(0, schema(u).dataType),
+        k.get(1, schema(f).dataType), n > 0)): InternalRow
+    }.toSeq
+  }
+
+  /** The layout of [[collapse]]'s and [[collapseLocal]]'s rows. */
+  private[graft] def collapsedSchema(changes: StructType): StructType =
+    StructType(Seq(changes("user_id"), changes("feature"),
+      StructField("has_grant", BooleanType, nullable = false)))
+
   /** Last-writer-wins upsert of a CDC batch, O(delta): the collapsed
     * net flips merge through BucketedUpsert's bucket-pruned
     * generation-compose — only buckets containing delta keys are read
-    * and rewritten, untouched bucket files carry forward by link. */
+    * and rewritten, untouched bucket files carry forward by link.
+    *
+    * One Spark job: the batch's raw flips are cached as an RDD and
+    * collected, while there are at most `DriverMergeRows` (1,024) of
+    * them, by the job that computes them (`BucketedUpsert.deltaBuckets`)
+    * — for a stream, the fold, whose last stage is then the result
+    * stage. The driver collapses them
+    * ([[collapseLocal]]) and publishes the net flips with no further
+    * job when it merges the touched buckets itself
+    * (`BucketedUpsert.upsertRows`); the write job runs instead past its
+    * byte budget and on the first publish after `materialize`. Past the
+    * row budget, [[collapse]] runs as a DataFrame over the cached flips,
+    * then the bucket-set job and the publish (`BucketedUpsert.upsert`).
+    * The collect runs ahead of the replay guard, so a redelivered batch
+    * still folds once. */
   def upsert(spark: SparkSession, changes: DataFrame,
              table: String = DefaultTable, buckets: Int = 32,
-             batchId: Option[Long] = None): Unit =
-    BucketedUpsert.upsert(spark, table, collapse(changes),
-      Seq("user_id", "feature"), "user_id", buckets, batchId = batchId)
+             batchId: Option[Long] = None): Unit = {
+    val keys = Seq("user_id", "feature")
+    val flips = changes.queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+    try BucketedUpsert.deltaBuckets(flips, changes.schema, "user_id", buckets,
+        BucketedUpsert.DriverMergeRows)._2 match {
+      case Some(rows) =>
+        BucketedUpsert.upsertRows(spark, table, collapsedSchema(changes.schema),
+          collapseLocal(rows.map(_._2), changes.schema), keys, "user_id", buckets, batchId)
+      case None =>
+        BucketedUpsert.upsert(spark, table,
+          collapse(ColumnBridge.ofInternalRows(spark, flips, changes.schema)),
+          keys, "user_id", buckets, batchId = batchId)
+    } finally flips.unpersist(blocking = false)
+  }
 
   /** Delete every grant row for the given users — the account-wipe /
     * retention path (GDPR "right to erasure" applied to the grants

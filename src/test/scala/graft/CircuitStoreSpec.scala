@@ -104,4 +104,50 @@ class CircuitStoreSpec extends AnyFunSuite {
       assert(got == Map("purchase" -> false, "message" -> false))
     } finally CircuitStore.drop(spark, table)
   }
+
+  test("read sees publishes made from another session") {
+    val table = "cs_stale"
+    CircuitStore.drop(spark, table)
+    def windows(s: org.apache.spark.sql.SparkSession, open: Boolean, m: Int) = {
+      import s.implicits._
+      Seq(("purchase", t(m), open), ("message", t(m), !open))
+        .toDF("feature", "win_start", "circuit_open")
+    }
+    def served() = CircuitStore.read(spark, table).collect()
+      .map(r => r.getString(0) -> r.getBoolean(1)).toMap
+    try {
+      CircuitStore.upsert(spark, windows(spark, open = true, 0), table)
+      assert(served() == Map("purchase" -> true, "message" -> false))
+      // a breaker stream's foreachBatch publishes from a session of its
+      // own; two publishes rewrite the generation `spark` last resolved
+      val other = spark.newSession()
+      CircuitStore.upsert(other, windows(other, open = false, 5), table)
+      CircuitStore.upsert(other, windows(other, open = true, 10), table)
+      assert(served() == Map("purchase" -> true, "message" -> false))
+      CircuitStore.upsert(other, windows(other, open = false, 15), table)
+      assert(served() == Map("purchase" -> false, "message" -> true))
+    } finally CircuitStore.drop(spark, table)
+  }
+
+  test("a steady publish runs no SQL or catalog command") {
+    import spark.implicits._
+    val table = "cs_no_sql"
+    CircuitStore.drop(spark, table)
+    def windows(open: Boolean, m: Int) =
+      Seq(("purchase", t(m), open), ("message", t(m), !open))
+        .toDF("feature", "win_start", "circuit_open")
+    try {
+      CircuitStore.upsert(spark, windows(open = true, 0), table)  // materialize
+      CircuitStore.upsert(spark, windows(open = false, 5), table) // write job
+      val probe = PublishProbe(spark) {
+        CircuitStore.upsert(spark, windows(open = true, 10), table)
+      }
+      assert(probe.executions.isEmpty, s"SQL/catalog commands: ${probe.executions}")
+      val got = CircuitStore.read(spark, table).collect()
+        .map(r => r.getString(0) -> r.getBoolean(1)).toMap
+      assert(got == Map("purchase" -> true, "message" -> false))
+      assert(spark.sql(s"SHOW CREATE TABLE `$table`").head().getString(0)
+        .contains(s"`${graft.sources.BucketedUpsert.activeGen(spark, table).get}`"))
+    } finally CircuitStore.drop(spark, table)
+  }
 }

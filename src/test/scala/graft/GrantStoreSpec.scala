@@ -157,4 +157,103 @@ class GrantStoreSpec extends AnyFunSuite {
       assert(svc2.canAccess(7L, "purchase"))
     } finally drop(table)
   }
+
+  private def grantsOf(table: String): Map[(Long, String), Boolean] =
+    GrantStore.read(spark, table).collect()
+      .map(r => (r.getLong(0), r.getString(1)) -> r.getBoolean(2)).toMap
+
+  /** Raw flips: per key, `n` alternating flips starting from `first`,
+    * and the store after they apply over `before`: an odd run ends on
+    * `first`, an even one where it started. */
+  private def flipsOver(before: Map[(Long, String), Boolean],
+                        keys: Seq[((Long, String), Boolean, Int)])
+      : (Seq[(Long, String, Boolean)], Map[(Long, String), Boolean]) = {
+    val flips = keys.flatMap { case ((u, f), first, n) =>
+      (0 until n).map(i => (u, f, if (i % 2 == 0) first else !first))
+    }
+    val after = keys.foldLeft(before) { case (m, (k, first, n)) =>
+      if (n % 2 == 1) m + (k -> first) else m
+    }
+    (flips, after)
+  }
+
+  test("a small CDC batch publishes with one job of one stage and no SQL command") {
+    import spark.implicits._
+    val table = "gs_one_job"
+    drop(table)
+    try {
+      val base = (1L to 400L).map(u => (u, "purchase") -> (u % 2 == 0)).toMap
+      GrantStore.materialize(base.toSeq.map { case ((u, f), g) => (u, f, g) }
+        .toDF("user_id", "feature", "has_grant"), table, buckets = 32)
+      // the first publish after materialize creates the inactive
+      // generation with a write job
+      GrantStore.upsert(spark, Seq((1L, "purchase", true))
+        .toDF("user_id", "feature", "has_grant"), table, buckets = 32)
+      val warm = base + ((1L, "purchase") -> true)
+      // 40 raw flips over 17 keys: some net-zero, some net flips, some new
+      val (flips, want) = flipsOver(warm, (1L to 17L).map(u =>
+        ((u * 23, if (u % 3 == 0) "message" else "purchase"), u % 2 == 0, 1 + (u % 4).toInt)))
+      val changes = flips.toDF("user_id", "feature", "has_grant")
+      val probe = PublishProbe(spark) {
+        GrantStore.upsert(spark, changes, table, buckets = 32, batchId = Some(9L))
+      }
+      assert(probe.jobStages == Seq(1), s"jobs (stages each): ${probe.jobStages}")
+      assert(probe.executions.isEmpty, s"SQL/catalog commands: ${probe.executions}")
+      assert(grantsOf(table) == want)
+      val gen = BucketedUpsert.activeGen(spark, table).get
+      assert(BucketedUpsert.appliedBatch(spark, gen)
+        .contains((BucketedUpsert.BatchCaller, 9L)))
+      assert(spark.sql(s"SHOW CREATE TABLE `$table`").head().getString(0).contains(s"`$gen`"))
+    } finally drop(table)
+  }
+
+  test("a batch past the driver's row budget publishes the same rows through Spark") {
+    import spark.implicits._
+    val table = "gs_past_budget"
+    drop(table)
+    try {
+      val base = (1L to 300L).map(u => (u, "purchase") -> (u % 3 != 0)).toMap
+      GrantStore.materialize(base.toSeq.map { case ((u, f), g) => (u, f, g) }
+        .toDF("user_id", "feature", "has_grant"), table, buckets = 8)
+      GrantStore.upsert(spark, Seq((2L, "purchase", false))
+        .toDF("user_id", "feature", "has_grant"), table, buckets = 8)
+      val warm = base + ((2L, "purchase") -> false)
+      // 1,100 raw flips over 400 keys, most of them net-zero
+      val (flips, want) = flipsOver(warm, (1L to 400L).map(u =>
+        ((u * 3, if (u % 5 == 0) "message" else "purchase"), u % 2 == 1,
+          if (u <= 300) 3 + (u % 2).toInt else 2)))
+      assert(flips.size > BucketedUpsert.DriverMergeRows)
+      val probe = PublishProbe(spark) {
+        GrantStore.upsert(spark, flips.toDF("user_id", "feature", "has_grant"), table, buckets = 8)
+      }
+      // the collect, then the collapse as a DataFrame and its bucket-set job
+      assert(probe.jobStages.size >= 3, s"jobs (stages each): ${probe.jobStages}")
+      assert(grantsOf(table) == want)
+    } finally drop(table)
+  }
+
+  test("a frame cached over GrantStore.read keeps its rows across a publish") {
+    import spark.implicits._
+    val table = "gs_cached_read"
+    drop(table)
+    try {
+      val base = (1L to 100L).map(u => (u, "purchase") -> true).toMap
+      GrantStore.materialize(base.toSeq.map { case ((u, f), g) => (u, f, g) }
+        .toDF("user_id", "feature", "has_grant"), table, buckets = 4)
+      GrantStore.upsert(spark, Seq((1L, "purchase", false))
+        .toDF("user_id", "feature", "has_grant"), table, buckets = 4)
+      val before = grantsOf(table)
+      // as AccessService caches its grants frame
+      val cached = GrantStore.read(spark, table).cache()
+      assert(cached.count() == 100)
+      GrantStore.upsert(spark, Seq((2L, "purchase", false), (500L, "purchase", false))
+        .toDF("user_id", "feature", "has_grant"), table, buckets = 4)
+      // repointing the view uncaches every frame over it
+      assert(cached.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      assert(cached.collect().map(r => (r.getLong(0), r.getString(1)) -> r.getBoolean(2))
+        .toMap == before)
+      assert(grantsOf(table) == before ++ Map((2L, "purchase") -> false, (500L, "purchase") -> false))
+      cached.unpersist()
+    } finally drop(table)
+  }
 }

@@ -131,8 +131,9 @@ class PropertySpec extends AnyFunSuite {
         case (u, f, first, n) =>
           (0 until n).map(i => (u, f, if (i % 2 == 0) first else !first))
       }
+      val changes = flips.toDF("user_id", "feature", "has_grant")
       val got = graft.sources.GrantStore
-        .collapse(flips.toDF("user_id", "feature", "has_grant"))
+        .collapse(changes)
         .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getBoolean(2))
         .toMap
       // replay: last flip wins; net no-ops (even count) must be absent
@@ -140,6 +141,12 @@ class PropertySpec extends AnyFunSuite {
         case (k, fs) if fs.length % 2 == 1 => k -> fs.last._3
       }
       assert(got == want, s"flips=$flips")
+      // the driver collapse of the same rows, shuffled
+      val rows = scala.util.Random.shuffle(
+        changes.queryExecution.toRdd.map(_.copy()).collect().toSeq)
+      val local = graft.sources.GrantStore.collapseLocal(rows, changes.schema)
+        .map(r => (r.getLong(0), r.getUTF8String(1).toString) -> r.getBoolean(2))
+      assert(local.size == local.toMap.size && local.toMap == want, s"flips=$flips")
     }
   }
 
