@@ -37,18 +37,28 @@ object EventAggregates {
       get_json_object(col("props"), "$." + field.stripPrefix("props."))
     else col(field)
 
-  private[graft] def aggExpr(s: AggregateSpec): Column = {
+  /** An aggregate's input: the event's value for it, NULL unless the
+    * event has the aggregate's type. COUNT reads the event id, SUM the
+    * field as a double, DISTINCT_COUNT the field as a long. Both the
+    * batch plan ([[aggExpr]]) and the grant fold
+    * (`EventPipeline.grantChangesBounded`) read fields through it, so
+    * the two paths cast alike; the `when` keeps the JSON parse of a
+    * `props.` field to the events of that type. */
+  def aggInput(s: AggregateSpec): Column = {
     val matches = col("event_type") === lit(s.eventType)
     s.aggType match {
-      // Post-dedup, count of distinct uuids == plain conditional count;
-      // avoids a needless Expand in the plan.
-      case AggregateType.Count =>
-        count(when(matches, col("event_id"))).as(s.name)
-      case AggregateType.DistinctCount =>
-        countDistinct(when(matches, fieldCol(s.field.get).cast("long"))).as(s.name)
-      case AggregateType.Sum =>
-        coalesce(sum(when(matches, fieldCol(s.field.get).cast("double"))), lit(0.0)).as(s.name)
+      case AggregateType.Count => when(matches, col("event_id"))
+      case AggregateType.DistinctCount => when(matches, fieldCol(s.field.get).cast("long"))
+      case AggregateType.Sum => when(matches, fieldCol(s.field.get).cast("double"))
     }
+  }
+
+  private[graft] def aggExpr(s: AggregateSpec): Column = s.aggType match {
+    // Post-dedup, count of distinct uuids == plain conditional count;
+    // avoids a needless Expand in the plan.
+    case AggregateType.Count => count(aggInput(s)).as(s.name)
+    case AggregateType.DistinctCount => countDistinct(aggInput(s)).as(s.name)
+    case AggregateType.Sum => coalesce(sum(aggInput(s)), lit(0.0)).as(s.name)
   }
 
   /** events → one row per user_id with one column per aggregate.

@@ -14,28 +14,28 @@ import graft.config._
   */
 object RuleEval {
 
-  /** Rule scalar value; None models SQL NULL (Grants.ruleValue). */
-  def ruleValue(r: RuleSpec, agg: String => Double): Option[Double] = r.op match {
-    case RuleOperation.Value => Some(agg(r.aggregate1))
-    case RuleOperation.Divide =>
-      val denom = agg(r.aggregate2.get)
-      if (denom == 0.0) None else Some(agg(r.aggregate1) / denom)
-  }
-
-  /** Mirror of Grants.ruleAbides. */
-  def abides(r: RuleSpec, agg: String => Double): Boolean = {
-    val base = ruleValue(r, agg) match {
-      case None => true
-      case Some(v) => r.condition match {
-        case RuleCondition.Gt => v > r.threshold
-        case RuleCondition.Lt => v < r.threshold
-      }
+  /** Mirror of Grants.ruleAbides, given the values of the rule's
+    * aggregates (`agg2` is read only by DIVIDE rules). */
+  def abides(r: RuleSpec, agg1: Double, agg2: Double): Boolean = {
+    val base = r.op match {
+      case RuleOperation.Value => cond(r, agg1)
+      // x/0 is NULL, and a NULL value abides
+      case RuleOperation.Divide => agg2 == 0.0 || cond(r, agg1 / agg2)
     }
     r.denomMin match {
-      case Some(dm) if agg(r.aggregate2.get) < dm => true
+      case Some(dm) if agg2 < dm => true
       case _ => base
     }
   }
+
+  private def cond(r: RuleSpec, v: Double): Boolean = r.condition match {
+    case RuleCondition.Gt => v > r.threshold
+    case RuleCondition.Lt => v < r.threshold
+  }
+
+  /** [[abides]] with the aggregates read by name. */
+  def abides(r: RuleSpec, agg: String => Double): Boolean =
+    abides(r, agg(r.aggregate1), r.aggregate2.fold(0.0)(agg))
 
   /** Mirror of Grants.featureGranted for every feature. */
   def grants(cfg: EngineConfig, agg: String => Double): Map[String, Boolean] =
@@ -43,37 +43,44 @@ object RuleEval {
       f.name -> f.rules.forall(rn => abides(cfg.rule(rn), agg))
     }.toMap
 
-  /** How a Sum/DistinctCount aggregate reads its event field, resolved
-    * ONCE per config instead of string-prefix-parsed per event. */
-  sealed trait FieldRef
-  case object ValueField extends FieldRef
-  final case class PropsField(key: String) extends FieldRef
-  case object NoField extends FieldRef
+  /** A rule with its aggregates resolved to slots (`agg2` is -1 for a
+    * VALUE rule). */
+  final case class SlotRule(spec: RuleSpec, agg1: Int, agg2: Int) {
+    def abides(values: Array[Double]): Boolean =
+      RuleEval.abides(spec, values(agg1), if (agg2 < 0) 0.0 else values(agg2))
+  }
 
   /** Pre-resolved evaluation plan for a config — the streaming fold
-    * runs per EVENT, and the naive path paid a linear `cfg.rule(name)`
-    * scan per rule reference, a `filter` allocation per event, and a
-    * fresh grants Map per event (~250 µs/event of fold CPU measured at
-    * sf0.1, the dominant streaming cost). Everything name-shaped is
-    * resolved to arrays here; semantics are untouched — the fold still
-    * calls [[abides]] per rule. Cached per config (configs are tiny
-    * case classes; a session holds a handful). */
+    * runs per EVENT, so everything name-shaped is resolved to slots
+    * here and the fold never looks a name up. Aggregate slot `i` is
+    * `cfg.aggregates(i)`; [[kindSlot]] places it among the aggregates
+    * of its type, which index the grant fold's count, sum and distinct
+    * arrays. Feature slot `j` is `cfg.features(j)`. Cached per config
+    * (configs are tiny case classes; a session holds a handful). */
   final class Compiled private[RuleEval] (cfg: EngineConfig) {
-    val aggsByType: Map[String, Array[AggregateSpec]] =
-      cfg.aggregates.groupBy(_.eventType)
-        .map { case (t, as) => t -> as.toArray }
-    val fieldRefs: Map[String, FieldRef] =
-      cfg.aggregates.map { a =>
-        a.name -> (a.field match {
-          case Some("value") => ValueField
-          case Some(f) if f.startsWith("props.") =>
-            PropsField(f.stripPrefix("props."))
-          case _ => NoField
-        })
-      }.toMap
+    val aggTypes: Array[AggregateType] = cfg.aggregates.map(_.aggType).toArray
+    val kindSlot: Array[Int] = {
+      val seen = scala.collection.mutable.Map.empty[AggregateType, Int]
+      aggTypes.map { t => val k = seen.getOrElse(t, 0); seen(t) = k + 1; k }
+    }
+    private def countOf(t: AggregateType) = aggTypes.count(_ == t)
+    val counts: Int = countOf(AggregateType.Count)
+    val sums: Int = countOf(AggregateType.Sum)
+    val distincts: Int = countOf(AggregateType.DistinctCount)
+    private val slotOf: Map[String, Int] = cfg.aggregates.map(_.name).zipWithIndex.toMap
     val featureNames: Array[String] = cfg.features.map(_.name).toArray
-    val featureRules: Array[Array[RuleSpec]] =
-      cfg.features.map(_.rules.map(cfg.rule).toArray).toArray
+    /** A fingerprint of the slot layout: each aggregate's name, type,
+      * event type and field in slot order, then the feature names. A
+      * state laid out under one config is read under another only when
+      * their layouts agree (rules may change: grants are re-evaluated). */
+    val layout: Int = scala.util.hashing.MurmurHash3.stringHash(
+      (cfg.aggregates.map(a => s"${a.name}:${a.aggType}:${a.eventType}:${a.field.getOrElse("")}") ++
+        cfg.features.map(f => s"feature:${f.name}")).mkString("\n"))
+    val featureRules: Array[Array[SlotRule]] =
+      cfg.features.map(_.rules.map { rn =>
+        val r = cfg.rule(rn)
+        SlotRule(r, slotOf(r.aggregate1), r.aggregate2.fold(-1)(slotOf))
+      }.toArray).toArray
   }
 
   private val compiledCache =

@@ -1,11 +1,17 @@
 package graft.streaming
 
+import java.nio.ByteBuffer
+
+import scala.collection.mutable
+import scala.reflect.ClassTag
+
 import graft.config._
-import graft.operators.RuleEval
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.{col, from_json}
+import graft.operators.{EventAggregates, RuleEval}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.{Codec, ExpressionEncoder}
+import org.apache.spark.sql.catalyst.encoders.AgnosticEncoders.{BinaryEncoder, TransformingEncoder}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.{MapType, StringType}
 
 /** The reference's write path as Structured Streaming
   * (SURVEY.md §3.1): events → per-user incremental aggregates →
@@ -16,10 +22,12 @@ import org.apache.spark.sql.types.{MapType, StringType}
   * fall out of hash-partitioning by user_id — per-key serial updates,
   * cross-key parallel, no locks, arbitrarily many executors.
   *
-  * State shape mirrors the reference accumulators
-  * (models/aggregate.py:41-83): count/sum scalars, distinct-value
-  * sets, plus the current grants (user_feature.py:22). The
-  * reference's seen-uuid set grows forever; [[grantChangesBounded]],
+  * The state holds the reference accumulators
+  * (models/aggregate.py:41-83): counts, sums, distinct-value sets,
+  * plus the current grants (user_feature.py:22), as flat arrays
+  * indexed by the config's slots ([[BoundedUserState]]) where the
+  * reference keys dicts by name. The reference's seen-uuid set grows
+  * forever; [[grantChangesBounded]],
   * the one grant fold, dedups event ids within the watermark on a
   * stream and over the whole input on a static frame.
   */
@@ -29,129 +37,250 @@ object EventPipeline {
       event_id: Long, ts: java.sql.Timestamp, user_id: Long,
       event_type: String, value: Double, props: String)
 
-  /** EventRow with props parsed to a typed map BEFORE the stateful
-    * fold — `from_json` runs codegen'd upstream of groupByKey, so the
-    * per-key state update reads typed fields instead of re-parsing
-    * JSON per event (and malformed props strictly parse to null
-    * rather than fuzzy-matching a regex). */
-  final case class TypedEventRow(
-      event_id: Long, ts: java.sql.Timestamp, user_id: Long,
-      event_type: String, value: Double, props: Map[String, String])
-
   /** Emitted only when a grant flips (reference user_feature.py:32-44);
     * the notification payload of S3. */
   final case class GrantChange(user_id: Long, feature: String, has_grant: Boolean)
 
-  final case class UserAggState(
-      counts: Map[String, Long],
-      sums: Map[String, Double],
-      distincts: Map[String, Map[String, Boolean]],
-      grants: Map[String, Boolean])
+  /** The grant fold's per-user state: flat primitive arrays indexed by
+    * the slots of [[RuleEval.Compiled]], so no aggregate or feature
+    * name is stored in a row.
+    *  - `layout`: the config's slot-layout fingerprint
+    *    ([[RuleEval.Compiled.layout]]); the fold refuses a state laid
+    *    out under another config;
+    *  - `counts`, `sums`: one entry per COUNT / SUM slot;
+    *  - `grants`: one flag per feature slot;
+    *  - `distinctValues`: each DISTINCT_COUNT slot's values as one
+    *    sorted run, slot `k` ending at `distinctEnds(k)`;
+    *  - `seenIds`, `seenTs`: the watermark dedup, event ids sorted
+    *    ascending with each id's event time (ms) beside it. */
+  final case class BoundedUserState(
+      layout: Int,
+      counts: Array[Long],
+      sums: Array[Double],
+      grants: Array[Boolean],
+      distinctEnds: Array[Int],
+      distinctValues: Array[Long],
+      seenIds: Array[Long],
+      seenTs: Array[Long])
 
-  private[graft] def emptyState: UserAggState =
-    UserAggState(Map.empty, Map.empty, Map.empty, Map.empty)
+  object BoundedUserState {
+    /** A user with no events yet: zeros, no values, every feature granted. */
+    def empty(cc: RuleEval.Compiled): BoundedUserState = BoundedUserState(cc.layout,
+      new Array[Long](cc.counts), new Array[Double](cc.sums),
+      Array.fill(cc.featureNames.length)(true), new Array[Int](cc.distincts),
+      Array.emptyLongArray, Array.emptyLongArray, Array.emptyLongArray)
+
+    /** The state store holds a state as one binary column. Spark's
+      * product encoder decodes a primitive array through a `MapObjects`
+      * lambda whose variable id is drawn anew each time the encoder is
+      * resolved, and a stateful operator resolves its state encoder once
+      * per micro-batch: the decoder would be new generated code in every
+      * batch, compiled while the batch's tasks wait on the codegen
+      * cache's lock. A binary column decodes with no lambda, so the
+      * cache serves its code after the first batch.
+      *
+      * Built from Spark's encoder internals (`TransformingEncoder`,
+      * `Codec`), which carry no stability promise: after a Spark
+      * upgrade, run `GrantFoldCodegenSpec` first. */
+    lazy val encoder: Encoder[BoundedUserState] = ExpressionEncoder(
+      TransformingEncoder(ClassTag(classOf[BoundedUserState]), BinaryEncoder, () => Packed))
+
+    /** The layout, then each array as its length and its elements. */
+    private object Packed extends Codec[BoundedUserState, Array[Byte]] {
+      def encode(s: BoundedUserState): Array[Byte] = {
+        val b = ByteBuffer.allocate(4 * 8 + 8 * (s.counts.length + s.sums.length +
+          s.distinctValues.length + s.seenIds.length + s.seenTs.length) +
+          4 * s.distinctEnds.length + s.grants.length)
+        b.putInt(s.layout)
+        b.putInt(s.counts.length); s.counts.foreach(b.putLong)
+        b.putInt(s.sums.length); s.sums.foreach(b.putDouble)
+        b.putInt(s.grants.length); s.grants.foreach(g => b.put(if (g) 1.toByte else 0.toByte))
+        b.putInt(s.distinctEnds.length); s.distinctEnds.foreach(b.putInt)
+        Seq(s.distinctValues, s.seenIds, s.seenTs).foreach { a =>
+          b.putInt(a.length); a.foreach(b.putLong)
+        }
+        b.array()
+      }
+      def decode(bytes: Array[Byte]): BoundedUserState = {
+        val b = ByteBuffer.wrap(bytes)
+        def longs() = Array.fill(b.getInt())(b.getLong())
+        BoundedUserState(b.getInt(), longs(), Array.fill(b.getInt())(b.getDouble()),
+          Array.fill(b.getInt())(b.get() != 0), Array.fill(b.getInt())(b.getInt()),
+          longs(), longs(), longs())
+      }
+    }
+  }
+
+  // Column positions in the fold's input rows (see foldInput).
+  private val IdCol = 1
+  private val TsCol = 2
+  private val FirstSlotCol = 3
+
+  /** The fold's input: `user_id`, `event_id`, `ts`, then one
+    * [[EventAggregates.aggInput]] per aggregate slot. The batch plan
+    * reads fields through the same expressions, so both paths cast a
+    * field alike (a DISTINCT_COUNT over `value` counts distinct longs in
+    * both), and only the event types an aggregate reads parse `props`. */
+  private[graft] def foldInput(events: DataFrame, cfg: EngineConfig): DataFrame =
+    events.select(col("user_id") +: col("event_id") +: col("ts") +:
+      cfg.aggregates.zipWithIndex.map { case (a, i) =>
+        EventAggregates.aggInput(a).as(s"agg_$i")
+      }: _*)
+
+  /** The value each aggregate slot of `st` feeds the rules. */
+  private[graft] def aggValues(cc: RuleEval.Compiled, st: BoundedUserState): Array[Double] =
+    Array.tabulate(cc.aggTypes.length) { i =>
+      val k = cc.kindSlot(i)
+      cc.aggTypes(i) match {
+        case AggregateType.Count => st.counts(k).toDouble
+        case AggregateType.Sum => st.sums(k)
+        case AggregateType.DistinctCount =>
+          (st.distinctEnds(k) - (if (k == 0) 0 else st.distinctEnds(k - 1))).toDouble
+      }
+    }
 
   /** The per-user fold: apply the batch's events in event-time order,
     * re-evaluate grants after each, collect flips. The caller hands it
-    * deduplicated events: [[grantChangesBounded]] drops repeated event
-    * ids before the fold, on a stream and on a static frame alike.
+    * deduplicated rows of [[foldInput]]: [[grantChangesBounded]] drops
+    * repeated event ids before the fold, on a stream and on a static
+    * frame alike. The returned state carries `st0`'s dedup arrays.
     *
     * This is the ingest tier's hot loop — it runs once per EVENT on
-    * every executor — so it works on mutable accumulators and the
-    * pre-resolved [[RuleEval.Compiled]] plan, converting to the
-    * immutable state shape once per (user, batch). The naive
-    * immutable-maps-per-event version measured ~250 µs/event of fold
-    * CPU at sf0.1 (a linear rule-name scan per rule reference, a
-    * filtered Seq and a fresh grants Map per event); semantics are
-    * bit-identical — null field ⇒ no update, divide-by-zero ⇒ abides,
-    * missing aggregate ⇒ 0, default grant TRUE (StreamingParitySpec
+    * every executor — so it works on the state's slot arrays with the
+    * rules resolved to slots ([[RuleEval.Compiled]]): no name lookup
+    * and no map rebuilt per user. Semantics: null input ⇒ no update,
+    * divide-by-zero ⇒ abides, default grant TRUE (FoldParitySpec pins
+    * the fold to a naive name-keyed specification, StreamingParitySpec
     * pins batch/stream parity). */
-  private[graft] def foldEvents(cfg: EngineConfig, userId: Long, st0: UserAggState,
-                         events: Iterator[TypedEventRow]): (UserAggState, Seq[GrantChange]) = {
-    import scala.collection.mutable
+  private[graft] def foldEvents(cfg: EngineConfig, userId: Long, st0: BoundedUserState,
+                                events: Array[Row]): (BoundedUserState, Seq[GrantChange]) = {
     val cc = RuleEval.compiled(cfg)
-    val counts = mutable.HashMap.empty[String, Long]; counts ++= st0.counts
-    val sums = mutable.HashMap.empty[String, Double]; sums ++= st0.sums
-    val distincts = mutable.HashMap.empty[String, mutable.HashSet[String]]
-    st0.distincts.foreach { case (k, m) =>
-      val s = mutable.HashSet.empty[String]; s ++= m.keysIterator; distincts(k) = s
+    val nFeatures = cc.featureNames.length
+    require(st0.layout == cc.layout,
+      "grant fold state was laid out under another config's aggregates or features: " +
+        "restart from a fresh checkpoint")
+    val counts = st0.counts.clone()
+    val sums = st0.sums.clone()
+    val grants = st0.grants.clone()
+    // one growable sorted run per DISTINCT_COUNT slot
+    val runs = new Array[Array[Long]](cc.distincts)
+    val runLen = new Array[Int](cc.distincts)
+    var k = 0
+    while (k < cc.distincts) {
+      val from = if (k == 0) 0 else st0.distinctEnds(k - 1)
+      val to = st0.distinctEnds(k)
+      runs(k) = java.util.Arrays.copyOfRange(st0.distinctValues, from, to)
+      runLen(k) = to - from
+      k += 1
     }
-    val grants = mutable.HashMap.empty[String, Boolean]; grants ++= st0.grants
-    val changes = mutable.ArrayBuffer.empty[GrantChange]
-    def aggValue(name: String): Double = {
-      val c = counts.get(name)
-      if (c.isDefined) c.get.toDouble
-      else {
-        val s = sums.get(name)
-        if (s.isDefined) s.get
-        else distincts.get(name) match {
-          case Some(set) => set.size.toDouble
-          case None => 0.0
-        }
+    def addDistinct(k: Int, v: Long): Unit = {
+      val run = runs(k)
+      val len = runLen(k)
+      val at = java.util.Arrays.binarySearch(run, 0, len, v)
+      if (at < 0) {
+        val ins = -at - 1
+        val dst = if (len == run.length) java.util.Arrays.copyOf(run, math.max(4, 2 * len)) else run
+        System.arraycopy(run, ins, dst, ins + 1, len - ins)
+        dst(ins) = v
+        runs(k) = dst
+        runLen(k) = len + 1
       }
     }
-    val aggFn: String => Double = aggValue
-    val arr = events.toArray
-    java.util.Arrays.sort(arr, (a: TypedEventRow, b: TypedEventRow) => {
-      val c = java.lang.Long.compare(a.ts.getTime, b.ts.getTime)
-      if (c != 0) c else java.lang.Long.compare(a.event_id, b.event_id)
+    val values = aggValues(cc, st0)
+    val changes = mutable.ArrayBuffer.empty[GrantChange]
+    val arr = events.clone()
+    java.util.Arrays.sort(arr, (a: Row, b: Row) => {
+      val c = java.lang.Long.compare(a.getTimestamp(TsCol).getTime, b.getTimestamp(TsCol).getTime)
+      if (c != 0) c else java.lang.Long.compare(a.getLong(IdCol), b.getLong(IdCol))
     })
     arr.foreach { e =>
-      cc.aggsByType.get(e.event_type).foreach { as =>
-        var i = 0
-        while (i < as.length) {
-          val a = as(i)
-          a.aggType match {
+      var i = 0
+      while (i < values.length) {
+        val c = FirstSlotCol + i
+        if (!e.isNullAt(c)) {
+          val k = cc.kindSlot(i)
+          cc.aggTypes(i) match {
             case AggregateType.Count =>
-              counts.update(a.name, counts.getOrElse(a.name, 0L) + 1L)
-            case AggregateType.Sum => cc.fieldRefs(a.name) match {
-              case RuleEval.ValueField =>
-                sums.update(a.name, sums.getOrElse(a.name, 0.0) + e.value)
-              case RuleEval.PropsField(key) =>
-                if (e.props != null) e.props.get(key).foreach { v =>
-                  sums.update(a.name, sums.getOrElse(a.name, 0.0) + v.toDouble)
-                }
-              case RuleEval.NoField => ()
-            }
-            case AggregateType.DistinctCount => cc.fieldRefs(a.name) match {
-              case RuleEval.ValueField =>
-                distincts.getOrElseUpdate(a.name,
-                  scala.collection.mutable.HashSet.empty) += e.value.toString
-              case RuleEval.PropsField(key) =>
-                if (e.props != null) e.props.get(key).foreach { v =>
-                  distincts.getOrElseUpdate(a.name,
-                    scala.collection.mutable.HashSet.empty) += v
-                }
-              case RuleEval.NoField => ()
-            }
+              counts(k) += 1L
+              values(i) = counts(k).toDouble
+            case AggregateType.Sum =>
+              sums(k) += e.getDouble(c)
+              values(i) = sums(k)
+            case AggregateType.DistinctCount =>
+              addDistinct(k, e.getLong(c))
+              values(i) = runLen(k).toDouble
           }
-          i += 1
         }
+        i += 1
       }
       // re-evaluate every feature (rules.py re-checks on each event);
       // default grant is TRUE (rules.py:112), flips are the CDC output
       var fi = 0
-      while (fi < cc.featureNames.length) {
+      while (fi < nFeatures) {
         val rules = cc.featureRules(fi)
         var granted = true
         var ri = 0
         while (granted && ri < rules.length) {
-          granted = RuleEval.abides(rules(ri), aggFn)
+          granted = rules(ri).abides(values)
           ri += 1
         }
-        val name = cc.featureNames(fi)
-        if (grants.getOrElse(name, true) != granted)
-          changes += GrantChange(userId, name, granted)
-        grants.update(name, granted)
+        if (grants(fi) != granted) {
+          changes += GrantChange(userId, cc.featureNames(fi), granted)
+          grants(fi) = granted
+        }
         fi += 1
       }
     }
-    val st = UserAggState(counts.toMap, sums.toMap,
-      distincts.iterator.map { case (k, s) =>
-        k -> s.iterator.map(_ -> true).toMap
-      }.toMap,
-      grants.toMap)
+    val ends = runLen.scanLeft(0)(_ + _).tail
+    val distinctValues = new Array[Long](ends.lastOption.getOrElse(0))
+    k = 0
+    while (k < cc.distincts) {
+      System.arraycopy(runs(k), 0, distinctValues, ends(k) - runLen(k), runLen(k))
+      k += 1
+    }
+    val st = st0.copy(counts = counts, sums = sums, grants = grants,
+      distinctEnds = ends, distinctValues = distinctValues)
     (st, changes.toSeq)
+  }
+
+  /** The rows of one user's batch that the fold has not seen: rows
+    * under the watermark dropped (late), ids in the state's dedup
+    * arrays dropped, one row kept per id (duplicate rows are identical,
+    * so keeping any one is exact). */
+  private def freshEvents(st0: BoundedUserState, rows: Iterator[Row], wm: Long): Array[Row] = {
+    val fresh = mutable.ArrayBuffer.empty[Row]
+    val ids = mutable.HashSet.empty[Long]
+    rows.foreach { r =>
+      val id = r.getLong(IdCol)
+      if (r.getTimestamp(TsCol).getTime >= wm &&
+          java.util.Arrays.binarySearch(st0.seenIds, id) < 0 && ids.add(id))
+        fresh += r
+    }
+    fresh.toArray
+  }
+
+  /** `st`'s dedup arrays moved on: ids whose event time is under the
+    * watermark evicted, the batch's fresh ids added, still sorted. */
+  private def remember(st: BoundedUserState, fresh: Array[Row], wm: Long): BoundedUserState = {
+    val add = fresh.sortBy(_.getLong(IdCol))
+    val kept = st.seenTs.count(_ >= wm)
+    val ids = new Array[Long](kept + add.length)
+    val ts = new Array[Long](ids.length)
+    var i = 0
+    var j = 0
+    var o = 0
+    while (o < ids.length) {
+      if (i < st.seenIds.length && st.seenTs(i) < wm) i += 1
+      else {
+        if (j == add.length || (i < st.seenIds.length && st.seenIds(i) < add(j).getLong(IdCol))) {
+          ids(o) = st.seenIds(i); ts(o) = st.seenTs(i); i += 1
+        } else {
+          ids(o) = add(j).getLong(IdCol); ts(o) = add(j).getTimestamp(TsCol).getTime; j += 1
+        }
+        o += 1
+      }
+    }
+    st.copy(seenIds = ids, seenTs = ts)
   }
 
   /** Backlog/observability surface (SURVEY.md S5: the reference's
@@ -172,11 +301,6 @@ object EventPipeline {
         "state_rows" -> p.stateOperators.map(_.numRowsTotal).sum)
     }.getOrElse(Map("batch_id" -> -1L))
   }
-
-  /** Bounded per-user state for [[grantChangesBounded]]: the
-    * accumulators plus a watermark-evicted `event_id → event-time ms`
-    * dedup map. */
-  final case class BoundedUserState(agg: UserAggState, seenTs: Map[Long, Long])
 
   /** The engine's grant fold. On a stream, uuid dedup keeps only ids
     * seen WITHIN the watermark, evicted as it advances — the per-user
@@ -202,15 +326,24 @@ object EventPipeline {
     * Late rows (event time older than the watermark) are dropped
     * before the fold, exactly as the upstream dedup operator did.
     *
-    * CHECKPOINT COMPATIBILITY: the state type has changed twice. Round
-    * 15 moved it from `UserAggState` to [[BoundedUserState]] (and
-    * removed the upstream dedup operator); later `UserAggState` lost
-    * its seen-id map, always empty here, with the unbounded
-    * forever-dedup pipeline that filled it. A checkpoint written
-    * before either change does NOT restore into this pipeline — a
-    * long-lived deployment upgrading across one must restart from a
-    * fresh checkpoint (and re-feed or accept the watermark-bounded
-    * gap), not debug a state-deserialization failure.
+    * CHECKPOINT COMPATIBILITY: the state type has changed three
+    * times. Round 15 moved it from `UserAggState` to a
+    * `BoundedUserState` of nested name-keyed maps (and removed the
+    * upstream dedup operator); later `UserAggState` lost its seen-id
+    * map, always empty here, with the unbounded forever-dedup pipeline
+    * that filled it; then the flat slot-indexed [[BoundedUserState]]
+    * replaced the nested maps. A checkpoint written before any of these
+    * changes does NOT restore into this pipeline: Spark's state-schema
+    * check refuses it at the first batch (StreamingRecoverySpec pins
+    * this for the two earlier shapes). A long-lived deployment
+    * upgrading across one must restart from a fresh checkpoint (and
+    * re-feed or accept the watermark-bounded gap), not debug a
+    * state-deserialization failure. The flat state is also indexed by
+    * the config's slot order: a restart under a config whose
+    * aggregates or features differ (reordered, renamed, retyped, or
+    * reading another field) needs a fresh checkpoint too, and the fold
+    * fails the first batch that meets a state of the old layout
+    * (StreamingRecoverySpec pins this).
     *
     * State-store provider: per-user state rides whatever
     * `spark.sql.streaming.stateStore.providerClass` the session
@@ -225,31 +358,19 @@ object EventPipeline {
                           cfg: EngineConfig,
                           watermark: String = "15 minutes"): Dataset[GrantChange] = {
     import spark.implicits._
-    val typed = events.toDF()
-      .withColumn("props", from_json(col("props"), MapType(StringType, StringType)))
-      .as[TypedEventRow]
+    val input = foldInput(events.toDF(), cfg)
     // batch planning drops a watermark, and reading one then throws
     val streaming = events.isStreaming
-    val in = if (streaming) typed.withWatermark("ts", watermark) else typed
-    in.groupByKey(_.user_id)
+    val in = if (streaming) input.withWatermark("ts", watermark) else input
+    in.groupBy(col("user_id")).as[Long, Row](Encoders.scalaLong, Encoders.row(input.schema))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (userId: Long, evs: Iterator[TypedEventRow], state: GroupState[BoundedUserState]) => {
-          val st0 = state.getOption.getOrElse(BoundedUserState(emptyState, Map.empty))
+        (userId: Long, rows: Iterator[Row], state: GroupState[BoundedUserState]) => {
+          val st0 = state.getOption.getOrElse(BoundedUserState.empty(RuleEval.compiled(cfg)))
           val wm = if (streaming) state.getCurrentWatermarkMs() else Long.MinValue
-          // late-data filter + prior-batch dedup (point lookups) +
-          // in-batch dedup (duplicate rows are identical — keeping any
-          // one is exact)
-          val fresh = evs
-            .filter(e => e.ts.getTime >= wm)
-            .filterNot(e => st0.seenTs.contains(e.event_id))
-            .toSeq.distinctBy(_.event_id)
-          val (st, changes) = foldEvents(cfg, userId, st0.agg, fresh.iterator)
-          // watermark eviction of the dedup map, then record this
-          // batch's ids
-          val seen = st0.seenTs.filter(_._2 >= wm) ++
-            fresh.iterator.map(e => e.event_id -> e.ts.getTime)
-          state.update(BoundedUserState(st, seen))
+          val fresh = freshEvents(st0, rows, wm)
+          val (st, changes) = foldEvents(cfg, userId, st0, fresh)
+          state.update(remember(st, fresh, wm))
           changes.iterator
-        })
+        })(BoundedUserState.encoder, implicitly[Encoder[GrantChange]])
   }
 }

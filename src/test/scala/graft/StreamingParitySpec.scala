@@ -1,6 +1,6 @@
 package graft
 
-import graft.config.DefaultConfig
+import graft.config._
 import graft.operators.{EventAggregates, Grants}
 import graft.streaming.EventPipeline
 import graft.streaming.EventPipeline.{EventRow, GrantChange}
@@ -54,6 +54,68 @@ class StreamingParitySpec extends AnyFunSuite {
       (1L, f.name) -> last.map(_.has_grant).getOrElse(true)
     }.toMap
     assert(streamFinal == batchGrants)
+  }
+
+  test("fractional values and varied props: stream and batch cast fields alike") {
+    // A DISTINCT_COUNT over `value` counts the value cast to long in the
+    // batch plan, so 1.2 and 1.7 are one value; the stream must count
+    // the same. props.k varies per click, and feeds a SUM and a
+    // DISTINCT_COUNT read through the same expressions.
+    import spark.implicits._
+    import AggregateType._, RuleOperation._, RuleCondition._
+    val fracCfg = EngineConfig(
+      aggregates = Seq(
+        AggregateSpec("distinct_amounts", "purchase", DistinctCount, Some("value")),
+        AggregateSpec("purchase_total", "purchase", Sum, Some("value")),
+        AggregateSpec("distinct_click_keys", "click", DistinctCount, Some("props.k")),
+        AggregateSpec("click_key_total", "click", Sum, Some("props.k")),
+        AggregateSpec("errors", "error", Count)),
+      rules = Seq(
+        RuleSpec("few_amounts", Value, "distinct_amounts", None, Lt, 3.0),
+        RuleSpec("spend_per_amount", Divide, "purchase_total", Some("distinct_amounts"), Gt, 3.0),
+        RuleSpec("key_spread", Divide, "distinct_click_keys", Some("click_key_total"), Gt, 0.25,
+          denomMin = Some(2.0)),
+        RuleSpec("few_errors", Value, "errors", None, Lt, 3.0)),
+      features = Seq(
+        FeatureSpec("buy", Seq("few_amounts", "spend_per_amount")),
+        FeatureSpec("click", Seq("key_spread", "few_errors"))))
+    def fev(id: Long, user: Long, typ: String, value: Double, k: Int, minute: Int) =
+      EventRow(id, java.sql.Timestamp.valueOf(f"2024-01-01 00:$minute%02d:00"),
+        user, typ, value, s"""{"k": $k}""")
+    // user 1: four amounts, two distinct longs (1 and 2): "buy" stays
+    // granted; counted as four strings it would flip off
+    val pinned = Seq(
+      fev(1, 1, "purchase", 1.2, 0, 1), fev(2, 1, "purchase", 1.7, 0, 2),
+      fev(3, 1, "purchase", 2.4, 0, 3), fev(4, 1, "purchase", 2.9, 0, 4))
+    val rnd = new scala.util.Random(20261020L)
+    val types = Seq("purchase", "click", "error", "signup")
+    val random = (5L to 400L).map { id =>
+      fev(id, 2L + rnd.nextInt(30), types(rnd.nextInt(types.size)),
+        rnd.nextInt(40) / 8.0, rnd.nextInt(6), rnd.nextInt(50))
+    }
+    // in event-time order, so no row of the second batch is late
+    val all = (pinned ++ random).sortBy(e => (e.ts.getTime, e.event_id))
+    val (batch1, batch2) = all.splitAt(all.length / 2)
+
+    val ms = MemoryStream[EventRow](spark)
+    val q = EventPipeline.grantChangesBounded(spark, ms.toDS(), fracCfg)
+      .writeStream.format("memory").queryName("frac_flips").outputMode("append").start()
+    try {
+      ms.addData(batch1); q.processAllAvailable()
+      ms.addData(batch2 ++ batch1.take(20)); q.processAllAvailable() // with replays
+    } finally q.stop()
+    val flips = spark.table("frac_flips").as[GrantChange].collect().toSeq
+
+    val batchGrants = Grants.long(EventAggregates.perUser(all.toDF(), fracCfg.aggregates), fracCfg)
+      .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getBoolean(2)).toMap
+    val streamFinal = (for (u <- all.map(_.user_id).distinct; f <- fracCfg.features) yield {
+      val last = flips.filter(c => c.user_id == u && c.feature == f.name).lastOption
+      (u, f.name) -> last.map(_.has_grant).getOrElse(true)
+    }).toMap
+    assert(batchGrants((1L, "buy")), "two distinct amounts keep buy granted in batch")
+    assert(streamFinal == batchGrants,
+      s"diverged on ${streamFinal.toSet.diff(batchGrants.toSet).take(5)}")
+    assert(batchGrants.values.exists(!_), "the random users must revoke some grant")
   }
 
   test("bounded pipeline dedups via watermark state, same flips") {

@@ -1,5 +1,7 @@
 package graft
 
+import scala.reflect.runtime.universe.TypeTag
+
 import graft.config.DefaultConfig
 import graft.operators.{EventAggregates, Grants}
 import graft.sources.GrantStore
@@ -37,6 +39,16 @@ object StreamingRecoverySpec {
       sums: Map[String, Double],
       distincts: Map[String, Map[String, Boolean]],
       grants: Map[String, Boolean])
+
+  /** The per-user state of the nested-map bounded pipeline (round 15
+    * until the flat slot arrays): name-keyed accumulators beside a
+    * watermark-evicted `event_id → event-time ms` dedup map. */
+  final case class NestedAggState(
+      counts: Map[String, Long],
+      sums: Map[String, Double],
+      distincts: Map[String, Map[String, Boolean]],
+      grants: Map[String, Boolean])
+  final case class NestedUserState(agg: NestedAggState, seenTs: Map[Long, Long])
 }
 
 class StreamingRecoverySpec extends AnyFunSuite {
@@ -146,37 +158,32 @@ class StreamingRecoverySpec extends AnyFunSuite {
     }
   }
 
-  test("incompatible checkpoint fails loudly") {
-    // Round 15 changed the pipeline's state type (UserAggState →
-    // BoundedUserState, EventPipeline.scala checkpoint-compatibility
-    // note): a checkpoint written by the pre-r15 pipeline must NOT
-    // restore into the bounded one. This pins the FAILURE MODE: the
-    // restart dies with Spark's state-schema incompatibility error —
-    // a clear, immediate signal to restart from a fresh checkpoint —
-    // rather than deserializing garbage into silently wrong state.
-    // A flatMapGroupsWithState over the pre-r15 state shape, keyed by
-    // user like the bounded fold, stands in for the old pipeline here.
+  /** Writes a checkpoint with a flatMapGroupsWithState over state
+    * type `S`, keyed by user like the grant fold, then restarts the
+    * grant fold from it: the restart must die with Spark's state-schema
+    * incompatibility error — a clear, immediate signal to restart from
+    * a fresh checkpoint — rather than deserialize garbage into silently
+    * wrong state. */
+  private def assertRestoreFails[S <: Product : TypeTag](shape: String, empty: S)(
+      step: (S, Iterator[EventRow]) => S): Unit = {
     import spark.implicits._
-    import StreamingRecoverySpec.LegacyUserState
     val events = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
     val rows = events.as[EventRow].collect().sortBy(e => (e.ts.getTime, e.event_id))
     val (first, rest) = rows.splitAt(rows.length / 2)
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_mig_").toString
     val ms = MemoryStream[EventRow](spark)
     try {
-      // incarnation 1: the legacy state format writes the checkpoint
+      // incarnation 1: the old state format writes the checkpoint
       // foreachBatch sinks, not memory: the memory sink refuses ANY
       // checkpoint recovery, which would short-circuit before the
       // state-schema check under test
       val q1 = ms.toDS().groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-          (_: Long, evs: Iterator[EventRow], state: GroupState[LegacyUserState]) => {
-            val st0 = state.getOption.getOrElse(
-              LegacyUserState(Map.empty, Map.empty, Map.empty, Map.empty, Map.empty))
-            state.update(st0.copy(seenIds = st0.seenIds ++ evs.map(_.event_id -> true)))
+          (_: Long, evs: Iterator[EventRow], state: GroupState[S]) => {
+            state.update(step(state.getOption.getOrElse(empty), evs))
             Iterator.empty[GrantChange]
           })
-        .writeStream.queryName("mig_legacy")
+        .writeStream.queryName(s"mig_$shape")
         .option("checkpointLocation", ckpt).outputMode("append")
         .foreachBatch { (b: Dataset[GrantChange], _: Long) =>
           // must consume every partition: Spark 4 validates that all
@@ -185,18 +192,16 @@ class StreamingRecoverySpec extends AnyFunSuite {
         }.start()
       try { ms.addData(first.toSeq); q1.processAllAvailable() } finally q1.stop()
 
-      // incarnation 2: the bounded pipeline restores the same
-      // checkpoint — must fail loudly, at start or on first batch
+      // incarnation 2: the grant fold restores the same checkpoint —
+      // must fail loudly, at start or on first batch
       ms.addData(rest.toSeq)
       val err = intercept[Throwable] {
         val q2 = EventPipeline.grantChangesBounded(spark, ms.toDS(), cfg)
-          .writeStream.queryName("mig_bounded")
+          .writeStream.queryName(s"mig_${shape}_bounded")
           .option("checkpointLocation", ckpt).outputMode("append")
           .foreachBatch { (b: Dataset[GrantChange], _: Long) =>
-          // must consume every partition: Spark 4 validates that all
-          // state stores committed, and an unconsumed frame commits none
-          val _ = b.count(); ()
-        }.start()
+            val _ = b.count(); ()
+          }.start()
         try q2.processAllAvailable() finally q2.stop()
       }
       // the documented failure, not an arbitrary crash: Spark's state
@@ -205,9 +210,68 @@ class StreamingRecoverySpec extends AnyFunSuite {
       val messages = Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
         .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ").toLowerCase
       assert(messages.contains("schema") && messages.contains("state"),
-        s"expected a state-schema incompatibility error, got: $messages")
+        s"$shape: expected a state-schema incompatibility error, got: $messages")
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+    }
+  }
+
+  test("incompatible checkpoint fails loudly") {
+    // The pipeline's state type has changed three times
+    // (EventPipeline.scala checkpoint-compatibility note). A checkpoint
+    // written by an earlier shape must NOT restore into the flat one;
+    // a flatMapGroupsWithState over the old shape stands in for the old
+    // pipeline.
+    import StreamingRecoverySpec._
+    // pre-r15: forever seen-id set beside the accumulators
+    assertRestoreFails("legacy",
+      LegacyUserState(Map.empty, Map.empty, Map.empty, Map.empty, Map.empty)) { (st, evs) =>
+      st.copy(seenIds = st.seenIds ++ evs.map(_.event_id -> true))
+    }
+    // r15 until the flat state: nested name-keyed maps
+    assertRestoreFails("nested",
+      NestedUserState(NestedAggState(Map.empty, Map.empty, Map.empty, Map.empty), Map.empty)) {
+      (st, evs) =>
+        val seen = evs.map(e => e.event_id -> e.ts.getTime).toMap
+        NestedUserState(st.agg.copy(grants = Map("purchase" -> true, "message" -> true)),
+          st.seenTs ++ seen)
+    }
+  }
+
+  test("restart under a config of another slot layout fails loudly") {
+    // Same state schema, same number of aggregates of each type and of
+    // features: only the fold's layout check tells the old slots apart.
+    import spark.implicits._
+    val events = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
+    val rows = events.as[EventRow].collect().sortBy(e => (e.ts.getTime, e.event_id))
+    val (first, rest) = rows.splitAt(rows.length / 2)
+    val edited = Seq(
+      "reordered aggregates" -> cfg.copy(aggregates = cfg.aggregates.reverse),
+      "swapped features" -> cfg.copy(features = cfg.features.reverse))
+    edited.zipWithIndex.foreach { case ((edit, cfg2), i) =>
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_layout_").toString
+      val ms = MemoryStream[EventRow](spark)
+      def run(c: graft.config.EngineConfig, name: String): Unit = {
+        val q = EventPipeline.grantChangesBounded(spark, ms.toDS(), c)
+          .writeStream.queryName(name)
+          .option("checkpointLocation", ckpt).outputMode("append")
+          .foreachBatch { (b: Dataset[GrantChange], _: Long) =>
+            val _ = b.count(); ()
+          }.start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      try {
+        ms.addData(first.toSeq)
+        run(cfg, s"layout_${i}_a")
+        ms.addData(rest.toSeq)
+        val err = intercept[Throwable](run(cfg2, s"layout_${i}_b"))
+        val messages = Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
+          .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
+        assert(messages.contains("laid out under another config"),
+          s"$edit: expected the fold's layout error, got: $messages")
+      } finally {
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+      }
     }
   }
 }
