@@ -80,9 +80,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // a typo'd stream knob must die here, not archive a mislabeled run
-    // (ADVICE r16) — validate before any session or warmup work
-    StreamBench.validateKnobs()
     val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Warmup: JVM/codegen/session init must not be billed to the first
@@ -344,12 +341,6 @@ object Bench {
       s""""memo_sec":${"%.2f".format(memoSec)},"memo_expected_sec":${"%.2f".format(memoExpectedSec)},"memo_degraded":$memoDegraded,"memo_attempts_sec":${memoAttemptsSec.map("%.2f".format(_)).mkString("[", ",", "]")},"memo_pins":"${if (MemoBaselineSec.nonEmpty) "sf0.1" else "unpinned_sf"}""""
     val canaryJson =
       s""""canary_sec":${"%.2f".format(canarySec)},"canary_attempts_sec":${canaryAttempts.map("%.2f".format(_)).mkString("[", ",", "]")},"degraded":$degraded"""
-    // Streaming env knobs (ADVICE r15): a stray SPARK_GRAFT_STREAM_*
-    // var silently changes the measured streaming configuration —
-    // record any active ones in the artifact so a knobbed ev/s can
-    // never read as a comparable default-config number.
-    val streamKnobsJson = StreamBench.activeKnobs
-      .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
     val sweepsJson = sweeps.map { sw =>
       sw.map { case (k, v, ok) =>
         s""""$k":${if (ok) "%.3f".format(v) else "-1"}"""
@@ -375,7 +366,7 @@ object Bench {
     val fullPath = java.nio.file.Paths.get("target", "bench_full.json")
     java.nio.file.Files.createDirectories(fullPath.getParent)
     java.nio.file.Files.writeString(fullPath,
-      s"""{"bench_protocol":"min-of-$Passes",$canaryJson,$memoGateJson,$weatherJson,"queries_per_canary":$perCanaryJson,"bench_all":$qs,"sweeps":$sweepsJson,"memo_builds":$memoDetailJson,"store_builds":$buildsJson,"stream_knobs":$streamKnobsJson,"failed":$failed,$streamJson,"sf":"$sfDir"}""")
+      s"""{"bench_protocol":"min-of-$Passes",$canaryJson,$memoGateJson,$weatherJson,"queries_per_canary":$perCanaryJson,"bench_all":$qs,"sweeps":$sweepsJson,"memo_builds":$memoDetailJson,"store_builds":$buildsJson,"failed":$failed,$streamJson,"sf":"$sfDir"}""")
     val headline = results.filter { case (k, _, _) =>
       k.matches("q\\d+_.*")
     }.map { case (k, v, ok) =>
@@ -389,7 +380,7 @@ object Bench {
       failedNames.take(10) :+ "\"...\"" else failedNames)
       .mkString("[", ",", "]")
     def line(memo: String): String =
-      s"""{"metric":"total","value":${"%.3f".format(total)},"unit":"sec","bench_protocol":"min-of-$Passes",$canaryJson,$memoGateJson,$weatherJson,"n_queries":${results.size},"n_failed":${results.count(!_._3)},"store_builds":$buildsJson,"memo_builds":$memo,"queries":$headline,"failed":$failedCompact,$streamJson${if (StreamBench.activeKnobs.nonEmpty) s""","stream_knobs":$streamKnobsJson""" else ""},"full":"${fullPath.toString}","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${"%.3f".format(total)},"unit":"sec","bench_protocol":"min-of-$Passes",$canaryJson,$memoGateJson,$weatherJson,"n_queries":${results.size},"n_failed":${results.count(!_._3)},"store_builds":$buildsJson,"memo_builds":$memo,"queries":$headline,"failed":$failedCompact,$streamJson,"full":"${fullPath.toString}","sf":"$sfDir"}"""
     // The driver's capture window is ~2000 chars of tail; the parse
     // target must be well inside it. If the named memo map ever makes
     // the line too long, collapse it to its total (detail stays in

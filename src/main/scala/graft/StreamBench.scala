@@ -14,44 +14,6 @@ import org.apache.spark.sql.SparkSession
   */
 object StreamBench {
 
-  /** The full SPARK_GRAFT_STREAM_* knob-key list — every env knob
-    * that alters the measured streaming configuration (state
-    * partitions, state-store provider, async progress, codegen
-    * modes, stage instrumentation). One constant so [[activeKnobs]]
-    * (what the artifact records) and the spec that pins
-    * "instrumentation is a knob too" read the same source of truth
-    * (ADVICE r16: the stage-metrics listener runs DURING the
-    * measured batches, so an instrumented reading is a knobbed one
-    * too). */
-  val KnobKeys: Seq[String] =
-    Seq("SPARK_GRAFT_STREAM_PARTS", "SPARK_GRAFT_STREAM_PROVIDER",
-      "SPARK_GRAFT_STREAM_ASYNC", "SPARK_GRAFT_STREAM_WSCG",
-      "SPARK_GRAFT_STREAM_CGFACTORY", "SPARK_GRAFT_STREAM_STAGES")
-
-  /** The active subset of [[KnobKeys]] — warned about at run start
-    * and recorded verbatim in the bench artifacts (ADVICE r15: a
-    * stray knob must never archive a non-comparable ev/s as
-    * green). */
-  def activeKnobs: Seq[(String, String)] = activeKnobs(sys.env)
-
-  /** Env-injectable twin so StreamBenchKnobsSpec can pin the contract
-    * without forking a JVM. */
-  private[graft] def activeKnobs(env: Map[String, String]): Seq[(String, String)] =
-    KnobKeys.flatMap(k => env.get(k).map(k -> _))
-
-  /** Fail fast on knob values that would otherwise be silently ignored
-    * (ADVICE r16: `SPARK_GRAFT_STREAM_PROVIDER=RocksDB` fell through a
-    * `case _ => ()` and measured the default HashMap provider while
-    * stream_knobs claimed a RocksDB run). Called before any session or
-    * feed work so a typo costs seconds, not a misattributed artifact. */
-  def validateKnobs(): Unit = validateKnobs(sys.env)
-
-  private[graft] def validateKnobs(env: Map[String, String]): Unit =
-    env.get("SPARK_GRAFT_STREAM_PROVIDER").foreach { v =>
-      require(v == "rocksdb",
-        s"SPARK_GRAFT_STREAM_PROVIDER=$v not recognized (expected 'rocksdb')")
-    }
-
   /** Feed the sf dir's events through the streaming pipeline in
     * `nChunks` micro-batches; returns (events/sec, flips).
     *
@@ -92,28 +54,9 @@ object StreamBench {
     // 16 ≈ 23-24k, 32 ≈ 16k (per-partition overhead wins) — 16 is the
     // sweet spot. No-data micro-batches only exist to advance
     // watermark eviction — pure overhead in a throughput measurement.
-    validateKnobs()
     val ss = spark.newSession()
-    activeKnobs.foreach { case (k, v) => System.err.println(
-      s"[graft] WARNING sweep knob $k=$v active: measured streaming " +
-        "configuration is NOT the shipped default") }
-    ss.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "16"))
+    ss.conf.set("spark.sql.shuffle.partitions", "16")
     ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    sys.env.get("SPARK_GRAFT_STREAM_PROVIDER").foreach { _ =>
-      // validateKnobs rejected everything but "rocksdb" above
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    }
-    sys.env.get("SPARK_GRAFT_STREAM_ASYNC").foreach { v =>
-      ss.conf.set("spark.sql.streaming.asyncProgressTrackingEnabled", v)
-    }
-    sys.env.get("SPARK_GRAFT_STREAM_WSCG").foreach { v =>
-      ss.conf.set("spark.sql.codegen.wholeStage", v)
-    }
-    sys.env.get("SPARK_GRAFT_STREAM_CGFACTORY").foreach { v =>
-      ss.conf.set("spark.sql.codegen.factoryMode", v)
-    }
     import ss.implicits._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
@@ -124,7 +67,6 @@ object StreamBench {
     // roughly time-ordered real source would; file mtimes are forced
     // strictly increasing because FileStreamSource discovers oldest
     // first.
-    val feedDir = java.nio.file.Files.createTempDirectory("stream_bench_feed")
     val ev = Tables.events(ss, sfDir)
     val n = ev.count()
     val chunkSize = math.max(1L, (n + nChunks - 1) / nChunks)
@@ -132,24 +74,31 @@ object StreamBench {
       .withColumn("rn", row_number().over(
         Window.orderBy(col("ts"), col("event_id"))))
       .localCheckpoint(true)
-    (0 until nChunks).foreach { i =>
-      val tmp = feedDir.resolve(s"tmp_$i")
-      ranked.filter(col("rn") > i * chunkSize && col("rn") <= (i + 1) * chunkSize)
-        .drop("rn").coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val part = {
-        val l = java.nio.file.Files.list(tmp)
-        try {
-          import scala.jdk.CollectionConverters._
-          l.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
-        } finally l.close()
+    // `chunks` consecutive runs of `size` ranked rows into a fresh temp
+    // directory, one `events-<i>.parquet` file each
+    def writeChunks(name: String, chunks: Int, size: Long): java.nio.file.Path = {
+      val dir = java.nio.file.Files.createTempDirectory(name)
+      (0 until chunks).foreach { i =>
+        val tmp = dir.resolve(s"tmp_$i")
+        ranked.filter(col("rn") > i * size && col("rn") <= (i + 1) * size)
+          .drop("rn").coalesce(1)
+          .write.mode("overwrite").parquet(tmp.toString)
+        val part = {
+          val l = java.nio.file.Files.list(tmp)
+          try {
+            import scala.jdk.CollectionConverters._
+            l.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
+          } finally l.close()
+        }
+        val dst = dir.resolve(f"events-$i%03d.parquet")
+        java.nio.file.Files.move(part, dst)
+        java.nio.file.Files.setLastModifiedTime(dst,
+          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
+        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
       }
-      val dst = feedDir.resolve(f"events-$i%03d.parquet")
-      java.nio.file.Files.move(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+      dir
     }
+    val feedDir = writeChunks("stream_bench_feed", nChunks, chunkSize)
     // Pipeline warmup on a SEPARATE query over a 2-file sliver of the
     // same feed, run through the SAME FileEventSource + pipeline plan:
     // compiles the stateful plan, the parquet-scan stage, and the
@@ -159,25 +108,7 @@ object StreamBench {
     // first-planning — all fixed cost, none of it the pipeline under
     // measurement. Its own temp dir + query name + state; nothing the
     // measured query reuses but JIT.
-    val warmDir = java.nio.file.Files.createTempDirectory("stream_bench_warm")
-    (0 until 4).foreach { i =>
-      val tmp = warmDir.resolve(s"tmp_$i")
-      ranked.filter(col("rn") > i * 2500L && col("rn") <= (i + 1) * 2500L)
-        .drop("rn").coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val part = {
-        val l = java.nio.file.Files.list(tmp)
-        try {
-          import scala.jdk.CollectionConverters._
-          l.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
-        } finally l.close()
-      }
-      val dst = warmDir.resolve(f"events-$i%03d.parquet")
-      java.nio.file.Files.move(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-    }
+    val warmDir = writeChunks("stream_bench_warm", 4, 2500L)
     ranked.unpersist()
     locally {
       val wstream = graft.streaming.FileEventSource.events(
@@ -189,23 +120,6 @@ object StreamBench {
       try wq.processAllAvailable() finally wq.stop()
       org.apache.commons.io.FileUtils.deleteDirectory(warmDir.toFile)
     }
-    // Optional stage-level diagnosis (SPARK_GRAFT_STREAM_STAGES=1):
-    // per-stage wall + summed task time to stderr — locates the
-    // per-batch fixed cost between scan, fold, and scheduling gaps.
-    if (sys.env.contains("SPARK_GRAFT_STREAM_STAGES"))
-      ss.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = sc.stageInfo
-          val wall = for {
-            a <- i.completionTime; b <- i.submissionTime
-          } yield a - b
-          System.err.println(s"[stage] id=${i.stageId} tasks=${i.numTasks} " +
-            s"wall=${wall.getOrElse(-1L)}ms run=${i.taskMetrics.executorRunTime}ms " +
-            s"deser=${i.taskMetrics.executorDeserializeTime}ms " +
-            s"name=${i.name.takeWhile(_ != '\n').take(60)}")
-        }
-      })
     val readings = (1 to attempts).map { attempt =>
       val stream = graft.streaming.FileEventSource.events(
         ss, feedDir.toString, maxFilesPerTrigger = 1, glob = "events-*.parquet")
@@ -249,10 +163,8 @@ object StreamBench {
     spark.sparkContext.setLogLevel("WARN")
     val (readings, flips) = runAttempts(spark, sfDir, nChunks, attempts)
     val eps = readings.max
-    val knobs = activeKnobs.map { case (k, v) => s""""$k":"$v"""" }
-      .mkString("{", ",", "}")
     val att = readings.map(r => "%.0f".format(r)).mkString("[", ",", "]")
-    println(s"""{"metric":"stream_events_per_sec","value":$eps,"unit":"events/sec","micro_batches":$nChunks,"attempts":$att,"flips":$flips,"stream_knobs":$knobs}""")
+    println(s"""{"metric":"stream_events_per_sec","value":$eps,"unit":"events/sec","micro_batches":$nChunks,"attempts":$att,"flips":$flips}""")
     spark.stop()
   }
 }

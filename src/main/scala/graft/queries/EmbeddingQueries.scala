@@ -52,10 +52,8 @@ object EmbeddingQueries extends QueryModule {
     "ivfq_" + java.lang.Integer.toHexString(dir.hashCode)
   private[graft] def pqPrefixName(dir: String): String =
     "pqix_" + java.lang.Integer.toHexString(dir.hashCode)
-  private def dropIndex(prefix: String => String)(s: SparkSession, dir: String): Unit = {
-    graft.sources.StoreSentinel.drop(s, prefix(dir))
-    graft.sources.IvfIndexStore.drop(s, prefix(dir))
-  }
+  private def dropIndex(prefix: String => String)(s: SparkSession, dir: String): Unit =
+    graft.sources.StoreSentinel.dropStore(s, prefix(dir), graft.sources.IvfIndexStore.drop)
 
   /** Session-scoped memo of the PERSISTED IVF index (IvfIndexStore):
     * probed read-only by every embed_ann_indexed run, the
@@ -67,19 +65,13 @@ object EmbeddingQueries extends QueryModule {
   private[graft] val ivfIndexPrefix = memo("ivf_cells", Seq("embeddings.parquet"),
       dropStore = dropIndex(ivfPrefixName)) { (s, dir) =>
     val p = ivfPrefixName(dir)
-    val sig = graft.sources.StoreSentinel.corpusSignature(dir, "embeddings.parquet")
-    val adopted = graft.sources.StoreSentinel.matches(s, p, sig) &&
-      graft.sources.IvfIndexStore.adopt(s, p)
-    if (!adopted) {
-      graft.sources.StoreSentinel.drop(s, p)
-      graft.sources.IvfIndexStore.drop(s, p)
+    graft.sources.StoreSentinel.buildOrAdopt(s, p, dir, "embeddings.parquet",
+        graft.sources.IvfIndexStore.adopt, graft.sources.IvfIndexStore.drop) {
       graft.sources.IvfIndexStore.init(s,
         vecs(s, dir).filter(col("vec_id") < 16)
           .select(col("vec_id").as("pid"), col("emb").as("pemb")), p)
       graft.sources.IvfIndexStore.upsertBatch(s, vecs(s, dir), p)
-      graft.sources.StoreSentinel.write(s, p, sig)
     }
-    p
   }
 
   /** Session-scoped memo of the PERSISTED PQ index (IvfIndexStore
@@ -90,17 +82,11 @@ object EmbeddingQueries extends QueryModule {
   private[graft] val pqIndexPrefix = memo("pq_codes", Seq("embeddings.parquet"),
       dropStore = dropIndex(pqPrefixName)) { (s, dir) =>
     val p = pqPrefixName(dir)
-    val sig = graft.sources.StoreSentinel.corpusSignature(dir, "embeddings.parquet")
-    val adopted = graft.sources.StoreSentinel.matches(s, p, sig) &&
-      graft.sources.IvfIndexStore.adoptPq(s, p)
-    if (!adopted) {
-      graft.sources.StoreSentinel.drop(s, p)
-      graft.sources.IvfIndexStore.drop(s, p)
+    graft.sources.StoreSentinel.buildOrAdopt(s, p, dir, "embeddings.parquet",
+        graft.sources.IvfIndexStore.adoptPq, graft.sources.IvfIndexStore.drop) {
       graft.sources.IvfIndexStore.initPq(s, vecs(s, dir), p)
       graft.sources.IvfIndexStore.upsertPqBatch(s, vecs(s, dir), p)
-      graft.sources.StoreSentinel.write(s, p, sig)
     }
-    p
   }
 
   /** `SPARK_GRAFT_PLANFULL` (plan-dump sessions only): dedup_semantic

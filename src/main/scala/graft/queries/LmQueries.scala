@@ -51,18 +51,11 @@ object LmQueries extends QueryModule {
   private def lmStorePrefix(s: SparkSession, dir: String, prefix: String,
                             slice: DataFrame => DataFrame): String = {
     val lm = graft.streaming.LmCountsStream
-    val sig = graft.sources.StoreSentinel.corpusSignature(dir, "documents.parquet")
-    val adopted = graft.sources.StoreSentinel.matches(s, prefix, sig) &&
-      lm.adopt(s, prefix)
-    if (!adopted) {
-      graft.sources.StoreSentinel.drop(s, prefix)
-      lm.drop(s, prefix)
+    graft.sources.StoreSentinel.buildOrAdopt(s, prefix, dir, "documents.parquet",
+        lm.adopt, lm.drop) {
       lm.init(s, prefix)
       lm.upsertBatch(s, slice(Tables.documents(s, dir)), prefix)
-      // sentinel LAST: its presence certifies a completed build
-      graft.sources.StoreSentinel.write(s, prefix, sig)
     }
-    prefix
   }
   private[graft] def lmTrustedStore(s: SparkSession, dir: String): String =
     lmStorePrefix(s, dir, lmTrustedPrefixName(dir),
@@ -70,10 +63,8 @@ object LmQueries extends QueryModule {
   private[graft] def lmFullStore(s: SparkSession, dir: String): String =
     lmStorePrefix(s, dir, lmFullPrefixName(dir), identity)
 
-  private def dropCounts(prefix: String => String)(s: SparkSession, dir: String): Unit = {
-    graft.sources.StoreSentinel.drop(s, prefix(dir))
-    graft.streaming.LmCountsStream.drop(s, prefix(dir))
-  }
+  private def dropCounts(prefix: String => String)(s: SparkSession, dir: String): Unit =
+    graft.sources.StoreSentinel.dropStore(s, prefix(dir), graft.streaming.LmCountsStream.drop)
 
   /** Session-scoped memo of the LM trained on the trusted
     * doc_id % 5 != 0 slice — the count frames come from the PERSISTED

@@ -331,10 +331,9 @@ object TextQueries extends QueryModule {
     * every encoder). Holds a driver-side Seq read from the persisted
     * merge table below. */
   private[queries] val bpeMergesCached = memo("bpe_merges",
-      Seq("documents.parquet"), warm = true, dropStore = (s, dir) => {
-        graft.sources.StoreSentinel.drop(s, bpePrefixName(dir))
-        graft.sources.BucketedUpsert.drop(s, bpePrefixName(dir) + "merges")
-      })(bpeMergesStored)
+      Seq("documents.parquet"), warm = true, dropStore = (s, dir) =>
+        graft.sources.StoreSentinel.dropStore(s, bpePrefixName(dir), dropBpeMerges)
+      )(bpeMergesStored)
 
   /** PERSISTED merge table (path-keyed prefix — the LM-counts recipe,
     * VERDICT r15 #1 applied to the tokenizer): the 20 iterative
@@ -345,24 +344,16 @@ object TextQueries extends QueryModule {
     * changed corpus fails the signature and retrains. */
   private[graft] def bpePrefixName(dir: String): String =
     "bpe_" + java.lang.Integer.toHexString(dir.hashCode) + "_"
-  private[graft] def bpeStorePrefix(s: SparkSession, dir: String): String = {
-    val p = bpePrefixName(dir)
-    val table = p + "merges"
-    val sig = graft.sources.StoreSentinel.corpusSignature(dir, "documents.parquet")
-    val adopted = graft.sources.StoreSentinel.matches(s, p, sig) &&
-      graft.sources.BucketedUpsert.adopt(s, table)
-    if (!adopted) {
-      graft.sources.StoreSentinel.drop(s, p)
-      graft.sources.BucketedUpsert.drop(s, table)
+  private def dropBpeMerges(s: SparkSession, p: String): Unit =
+    graft.sources.BucketedUpsert.drop(s, p + "merges")
+  private[graft] def bpeStorePrefix(s: SparkSession, dir: String): String =
+    graft.sources.StoreSentinel.buildOrAdopt(s, bpePrefixName(dir), dir, "documents.parquet",
+        (ss, p) => graft.sources.BucketedUpsert.adopt(ss, p + "merges"), dropBpeMerges) {
       val merges = graft.operators.Bpe.train(docs(s, dir), numMerges = BpeRounds)
       import s.implicits._
       graft.sources.BucketedUpsert.materialize(
-        merges.toDF("rank", "left", "right"), table, "rank", 1)
-      // sentinel LAST: its presence certifies a completed train
-      graft.sources.StoreSentinel.write(s, p, sig)
+        merges.toDF("rank", "left", "right"), bpePrefixName(dir) + "merges", "rank", 1)
     }
-    p
-  }
   private def bpeMergesStored(s: SparkSession, dir: String): Seq[graft.operators.Bpe.Merge] = {
     val p = bpeStorePrefix(s, dir)
     // 20 rows (BpeRounds) — a driver-bounded read by construction;
@@ -644,24 +635,16 @@ object TextQueries extends QueryModule {
   private[graft] def postingsPrefixName(dir: String): String =
     "bm25ix_" + java.lang.Integer.toHexString(dir.hashCode)
   private[graft] val postingsPrefix = memo("bm25_postings",
-      Seq("documents.parquet"), dropStore = (s, dir) => {
-        graft.sources.StoreSentinel.drop(s, postingsPrefixName(dir))
-        graft.sources.PostingsStore.drop(s, postingsPrefixName(dir))
-      }) { (s, dir) =>
+      Seq("documents.parquet"), dropStore = (s, dir) =>
+        graft.sources.StoreSentinel.dropStore(s, postingsPrefixName(dir),
+          graft.sources.PostingsStore.drop)) { (s, dir) =>
     val p = postingsPrefixName(dir)
-    val sig = graft.sources.StoreSentinel.corpusSignature(dir, "documents.parquet")
-    val adopted = graft.sources.StoreSentinel.matches(s, p, sig) &&
-      graft.sources.PostingsStore.adopt(s, p)
-    if (!adopted) {
-      graft.sources.StoreSentinel.drop(s, p)
-      graft.sources.PostingsStore.drop(s, p)
+    graft.sources.StoreSentinel.buildOrAdopt(s, p, dir, "documents.parquet",
+        graft.sources.PostingsStore.adopt, graft.sources.PostingsStore.drop) {
       graft.sources.PostingsStore.init(s, p)
       graft.sources.PostingsStore.upsertBatch(s,
         docs(s, dir).select(col("doc_id"), col("text")), p)
-      // sentinel LAST: its presence certifies a completed build
-      graft.sources.StoreSentinel.write(s, p, sig)
     }
-    p
   }
 
   /** The SAME BM25 top-20 against the persisted index: tf/dl come from

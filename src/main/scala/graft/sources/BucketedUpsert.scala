@@ -30,6 +30,9 @@ import org.apache.spark.storage.StorageLevel
   * defaultParallelism)` write tasks that each own whole buckets, so
   * every generation keeps exactly one file per non-empty bucket.
   * A 10-row delta against a 100 TB table touches ~10 buckets of IO.
+  * Every publish has one merge shape: the touched buckets' rows full
+  * outer joined with the delta, so a key once written stays (there is
+  * no delete).
   * On a real deployment the same shape feeds a Delta/Iceberg
   * `MERGE INTO`, where carry-forward is a manifest reference. Single
   * writer by construction (one streaming query owns a table).
@@ -372,7 +375,7 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     }
 
   /** Undo the LAST publish: republish the inactive generation — the
-    * state before the most recent materialize/upsert/delete — as the
+    * state before the most recent materialize/upsert — as the
     * served view. The bad-batch escape hatch: a poisoned merge is off
     * the serve path in one catalog op, no data rewrite. One step of
     * history exists by construction (two generations), so a second
@@ -529,19 +532,20 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     compose(spark, table, delta, joinKeys, bucketKey, buckets, batchId, upsertMerge)
   }
 
-  /** The view's columns and [[upsert]]'s merge over them. The merged
-    * rows keep the table's column order, whatever position the join
-    * keys hold in it. No broadcast() hint on the Spark path: Spark
-    * cannot broadcast-build a FULL OUTER side (every hint here is
-    * ignored with a per-merge warning). Both sides are delta-bounded
-    * anyway — `existing` is only the touched buckets — so the shuffled
-    * join is small by construction. */
+  /** The view's columns and [[upsert]]'s merge over them: the
+    * projection over `existing.join(delta, joinKeys, "full_outer")`
+    * that puts the merged rows back in the table's column order,
+    * whatever position the join keys hold in it. No broadcast() hint
+    * on the Spark path: Spark cannot broadcast-build a FULL OUTER side
+    * (every hint here is ignored with a per-merge warning). Both sides
+    * are delta-bounded anyway — `existing` is only the touched buckets
+    * — so the shuffled join is small by construction. */
   private def outerMerge(spark: SparkSession, table: String, joinKeys: Seq[String],
-                         merge: (String, Column, Column) => Column): (Seq[String], Merge) = {
+                         merge: (String, Column, Column) => Column): (Seq[String], Seq[Column]) = {
     val cols = columns(spark, table)
-    cols -> Merge("full_outer", cols.map(c =>
+    cols -> cols.map(c =>
       if (joinKeys.contains(c)) col(c)
-      else merge(c, col(c), col(s"__delta_$c")).as(c)))
+      else merge(c, col(c), col(s"__delta_$c")).as(c))
   }
 
   /** Last-writer-wins [[upsert]] of a delta the caller already holds on
@@ -574,34 +578,10 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
       joinKeys, bucketKey, buckets, batchId, upsertMerge)
   }
 
-  /** Delete rows by key — the retention/GDPR path, same O(delta)
-    * shape as `upsert`: only the buckets containing `keys0` are
-    * rewritten (as an anti-join against the key set, broadcast on the
-    * Spark path), every other bucket file carries forward by link. A
-    * key absent from the table is a no-op, so deletes are
-    * replay-idempotent; pass `batchId` anyway when driven from
-    * foreachBatch so a redelivered tombstone batch skips the rewrite
-    * entirely. */
-  def delete(spark: SparkSession, table: String, keys0: DataFrame,
-             joinKeys: Seq[String], bucketKey: String, buckets: Int,
-             batchId: Option[Long] = None): Unit = {
-    val keys = keys0.select(joinKeys.map(col): _*).distinct()
-    compose(spark, table, keys, joinKeys, bucketKey, buckets, batchId,
-      Merge("left_anti", columns(spark, table).map(col)))
-  }
-
   /** The served view's columns, from its catalog entry: a metadata
     * lookup, where `spark.table(table)` analyzes the view. */
   private def columns(spark: SparkSession, table: String): Seq[String] =
     spark.sessionState.catalog.getTableMetadata(TableIdentifier(table)).schema.fieldNames.toSeq
-
-  /** How a publish combines the touched buckets' rows with the delta:
-    * `existing.join(delta, joinKeys, how)` — "full_outer" or
-    * "left_anti" — then `project` over the join's columns, which puts
-    * the rows back in the table's column order. */
-  private final case class Merge(how: String, project: Seq[Column]) {
-    def outer: Boolean = how == "full_outer"
-  }
 
   /** The largest delta, in rows, that the bucket-set job hands to the
     * driver (for `GrantStore.upsert`, the largest batch of raw flips it
@@ -613,11 +593,12 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
   private[graft] val DriverMergeRows = 1024
   private[graft] val DriverMergeBytes = 8L << 20
 
-  /** The generation-compose core shared by upsert and delete: prune to
-    * the buckets containing `delta`'s keys, rewrite ONLY those with
-    * `merge`, carry untouched bucket files forward by hard link,
-    * republish the view atomically. `delta` must contain `joinKeys`
-    * (plus whatever the merge reads).
+  /** The generation-compose core of [[upsert]]: prune to the buckets
+    * containing `delta`'s keys, rewrite ONLY those — the full outer
+    * join of their rows with the delta on `joinKeys`, then `merge`
+    * ([[outerMerge]]) — carry untouched bucket files forward by hard
+    * link, republish the view atomically. `delta` holds `joinKeys`
+    * and the `__delta_*` value columns.
     *
     * A publish runs one job besides the shuffles that computing
     * `delta` needs: it computes `delta`, caches its rows, and collects
@@ -638,7 +619,7 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     * and runs no job at all when the driver merges. */
   private def compose(spark: SparkSession, table: String, delta0: DataFrame,
                       joinKeys: Seq[String], bucketKey: String, buckets: Int,
-                      batchId: Option[Long], merge: Merge): Unit = {
+                      batchId: Option[Long], merge: Seq[Column]): Unit = {
     // the delta's rows are cached as an RDD, not as a Dataset: adaptive
     // execution materializes a cached Dataset over a shuffle (a CDC
     // collapse, a distinct) in a job of its own, ahead of the bucket-set job
@@ -662,7 +643,7 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
   private def publishDelta(spark: SparkSession, table: String, schema: StructType,
                            touched: Set[Int], deltaRows: Option[Seq[(Int, InternalRow)]],
                            frame: () => DataFrame, joinKeys: Seq[String], bucketKey: String,
-                           buckets: Int, batchId: Option[Long], merge: Merge): Unit = {
+                           buckets: Int, batchId: Option[Long], merge: Seq[Column]): Unit = {
     // the delta joins and prunes buckets on the same key; a bucketKey
     // outside joinKeys would surface as an opaque unresolved-column
     // failure deep in affectedBuckets — fail fast with the contract
@@ -729,8 +710,7 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
           if (touchedFiles.isEmpty) spark.table(table).limit(0)
           else spark.read.schema(spark.table(table).schema)
             .parquet(touchedFiles.map(_.toString): _*)
-        val right = if (merge.outer) delta else broadcast(delta)
-        Bucketed.write(existing.join(right, joinKeys, merge.how).select(merge.project: _*),
+        Bucketed.write(existing.join(delta, joinKeys, "full_outer").select(merge: _*),
           gen, bucketKey, buckets, touched.size)
     }
     // carry untouched buckets forward: link shares the bytes (the
@@ -762,7 +742,7 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     * write job's create path handles those. */
   private def localMerge(spark: SparkSession, gen: String, tableSchema: StructType,
                          deltaSchema: StructType, joinKeys: Seq[String], bucketKey: String,
-                         buckets: Int, merge: Merge)
+                         buckets: Int, merge: Seq[Column])
       : Option[(StructType, BucketMerge)] = {
     val catalog = spark.sessionState.catalog
     for {
@@ -773,14 +753,14 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     } yield {
       val project = UnsafeProjection.create(exprs, input)
       project.initialize(0)
-      val join = localJoin(tableSchema, deltaSchema, joinKeys, merge.outer)
+      val join = localJoin(tableSchema, deltaSchema, joinKeys)
       schema -> ((existing, delta) => join(existing, delta).map(project(_).copy()))
     }
   }
 
-  /** `merge.project` analyzed and optimized by Catalyst over a relation
-    * laid out as Spark lays out the USING join — the keys, then the
-    * table's other columns, then (full outer) the delta's: the output
+  /** `merge` analyzed and optimized by Catalyst over a relation laid
+    * out as Spark lays out the full outer USING join — the keys, then
+    * the table's other columns, then the delta's: the output
     * schema, the optimized expressions and the attributes they read.
     * None for a join key whose equality is not that of its bytes
     * (floating point, a non-binary collation) or whose type differs
@@ -788,7 +768,7 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     * outside a plan. Planned once per session and merge
     * ([[Bucketed.SessionCache]]). */
   private def mergePlan(spark: SparkSession, tableSchema: StructType, deltaSchema: StructType,
-                        joinKeys: Seq[String], merge: Merge)
+                        joinKeys: Seq[String], merge: Seq[Column])
       : Option[(StructType, Seq[NamedExpression], Seq[Attribute])] = {
     val bytewise = joinKeys.forall { k =>
       val t = tableSchema(k).dataType
@@ -802,12 +782,11 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     if (!bytewise) return None
     val others = (s: StructType) => s.fields.toSeq.filterNot(f => joinKeys.contains(f.name))
     val layout = joinKeys.map(tableSchema(_)) ++
-      (if (merge.outer) (others(tableSchema) ++ others(deltaSchema)).map(_.copy(nullable = true))
-       else others(tableSchema))
+      (others(tableSchema) ++ others(deltaSchema)).map(_.copy(nullable = true))
     // an RDD leaf, not a LocalRelation, so the optimizer keeps the
     // projection instead of folding it away over no rows
     val plan = ColumnBridge.ofInternalRows(spark, spark.sparkContext.emptyRDD[InternalRow],
-      StructType(layout)).select(merge.project: _*).queryExecution.optimizedPlan
+      StructType(layout)).select(merge: _*).queryExecution.optimizedPlan
     val (exprs, input) = plan match {
       case Project(list, leaf: LeafNode) => (list, leaf.output)
       case leaf: LeafNode => (leaf.output, leaf.output)
@@ -822,7 +801,7 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     Option.when(!unevaluable)((plan.schema, exprs, input))
   }
 
-  private val mergePlans = new Bucketed.SessionCache[(StructType, StructType, Seq[String], Merge),
+  private val mergePlans = new Bucketed.SessionCache[(StructType, StructType, Seq[String], Seq[Column]),
     Option[(StructType, Seq[NamedExpression], Seq[Attribute])]]
 
   /** Rewrite the touched buckets into the inactive generation `gen`
@@ -879,14 +858,12 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     } finally pool.shutdown()
   }
 
-  /** `existing.join(delta, joinKeys, if (outer) "full_outer" else
-    * "left_anti")` over one bucket's driver-side rows, in the layout
-    * [[localMerge]] declares. Keys match on their bytes, which
-    * localMerge admits only for keys whose equality that is; a key
-    * with a null matches nothing, as in SQL. */
+  /** `existing.join(delta, joinKeys, "full_outer")` over one bucket's
+    * driver-side rows, in the layout [[localMerge]] declares. Keys
+    * match on their bytes, which localMerge admits only for keys whose
+    * equality that is; a key with a null matches nothing, as in SQL. */
   private def localJoin(tableSchema: StructType, deltaSchema: StructType,
-                        joinKeys: Seq[String], outer: Boolean)
-      : BucketMerge = {
+                        joinKeys: Seq[String]): BucketMerge = {
     def keyOf(s: StructType) = UnsafeProjection.create(joinKeys.map { k =>
       BoundReference(s.fieldIndex(k), s(k).dataType, nullable = true)
     })
@@ -904,7 +881,7 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     def row(keys: Seq[Any], ex: Option[InternalRow], dl: Option[InternalRow]): InternalRow =
       new GenericInternalRow((keys ++
         exOthers.map(c => ex.map(c).orNull) ++
-        (if (outer) dlOthers.map(c => dl.map(c).orNull) else Nil)).toArray)
+        dlOthers.map(c => dl.map(c).orNull)).toArray)
     (existing, delta) => {
       val matches = delta.filterNot(dlKey(_).anyNull).groupBy(dlKey(_).copy())
       val hit = scala.collection.mutable.Set.empty[UnsafeRow]
@@ -913,14 +890,12 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
         // a key with a null never matches: no such delta key is in `matches`
         matches.get(k) match {
           case None => Seq(row(exKeys.map(_(e)), Some(e), None))
-          case Some(_) if !outer => Nil
           case Some(ds) =>
             hit += k.copy()
             ds.map(d => row(exKeys.map(_(e)), Some(e), Some(d)))
         }
       }
-      if (!outer) joined
-      else joined ++ delta.filterNot(d => hit.contains(dlKey(d)))
+      joined ++ delta.filterNot(d => hit.contains(dlKey(d)))
         .map(d => row(dlKeys.map(_(d)), None, Some(d)))
     }
   }

@@ -115,20 +115,6 @@ object GrantStore {
     } finally flips.unpersist(blocking = false)
   }
 
-  /** Delete every grant row for the given users — the account-wipe /
-    * retention path (GDPR "right to erasure" applied to the grants
-    * table). Same O(delta) cost shape as the CDC upsert: the user set
-    * prunes to its buckets, only those are rewritten without the
-    * users' rows, the rest of a 100 TB table carries forward by link.
-    * Downstream semantics: a wiped user reverts to the default grant
-    * (an absent row IS the default in the serve path), which is the
-    * correct post-erasure state. */
-  def deleteUsers(spark: SparkSession, users: DataFrame,
-                  table: String = DefaultTable, buckets: Int = 32,
-                  batchId: Option[Long] = None): Unit =
-    BucketedUpsert.delete(spark, table, users.select(col("user_id")),
-      Seq("user_id"), "user_id", buckets, batchId = batchId)
-
   /** Serve-path lookup join: grants for a keyed frame of user_ids.
     * When `users` is bucketed by user_id with the same bucket count,
     * this join plans with NO exchange on either side (asserted in

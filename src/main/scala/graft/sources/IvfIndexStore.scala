@@ -24,10 +24,10 @@ import org.apache.spark.sql.functions._
   *    touch.
   *
   * Contract: vectors are immutable once ingested (re-sent ids are
-  * first-writer no-ops); changing the pivot set means rebuilding the
-  * index — exactly the FAISS IVF contract. Probing with the same
-  * pivots, nProbe and tie-breaks as ivfTopKWith reproduces its output
-  * bit-for-bit (oracle `embed_ann_indexed` hashes equal to
+  * first-writer no-ops) and never removed; changing the pivot set
+  * means rebuilding the index — exactly the FAISS IVF contract.
+  * Probing with the same pivots, nProbe and tie-breaks as ivfTopKWith
+  * reproduces its output bit-for-bit (oracle `embed_ann_indexed` hashes equal to
   * `embed_ann_ivf`'s SQL; asserted in IvfIndexStoreSpec).
   */
 object IvfIndexStore {
@@ -101,31 +101,6 @@ object IvfIndexStore {
       Seq("cell", "vec_id"), "cell", buckets,
       merge = (_, existing, delta) => coalesce(existing, delta),
       batchId = batchId)
-
-  /** Retention/GDPR path: remove vectors from the index — cells and
-    * (when present) PQ codes, each an O(delta) bucket-pruned rewrite.
-    * The caller passes `(vec_id, emb)`: re-assigning against the
-    * FROZEN pivots recovers exactly the (cell, vec_id) key each
-    * vector was stored under (assignment is deterministic), so the
-    * delete prunes to the same buckets the ingest touched. Deletes
-    * are idempotent (absent keys are no-ops); pass `batchId` from
-    * foreachBatch so a redelivered tombstone batch skips the rewrite
-    * entirely. */
-  def deleteVecs(spark: SparkSession, vecs: DataFrame, prefix: String,
-                 buckets: Int = DefaultBuckets,
-                 batchId: Option[Long] = None): Unit = {
-    val keys = assign(spark, vecs.select(col("vec_id"), col("emb")), prefix)
-      .select(col("cell"), col("vec_id"))
-    BucketedUpsert.delete(spark, cellsTable(prefix), keys,
-      Seq("cell", "vec_id"), "cell", buckets, batchId = batchId)
-    if (spark.catalog.tableExists(codesTable(prefix))) {
-      val codeKeys = vecs.select(col("vec_id"))
-        .crossJoin(spark.range(graft.operators.PqFp.M).select(
-          col("id").cast("int").as("s")))
-      BucketedUpsert.delete(spark, codesTable(prefix), codeKeys,
-        Seq("vec_id", "s"), "vec_id", buckets, batchId = batchId)
-    }
-  }
 
   /** The materialized index: `(cell, vec_id, emb)`. */
   def read(spark: SparkSession, prefix: String): DataFrame =

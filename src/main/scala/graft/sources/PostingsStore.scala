@@ -38,8 +38,9 @@ import org.apache.spark.sql.functions._
   * recomputes the same new-docs set and the per-store guards skip
   * exactly the merges that already landed.
   *
-  * Documents are immutable once ingested (re-sent ids are no-ops) —
-  * the IvfIndexStore contract; a corpus rebuild is a new prefix.
+  * Documents are immutable once ingested (re-sent ids are no-ops) and
+  * never removed — the IvfIndexStore contract; a corpus rebuild is a
+  * new prefix.
   * Reference analogue: the point-lookup serve path
   * (`/root/reference/app.py:63-79`) got the same treatment via
   * GrantStore — precompute on write, O(keys) on read.
@@ -122,49 +123,6 @@ object PostingsStore {
         Seq("doc_id"), "doc_id", buckets,
         merge = (_, ex, dlt) => coalesce(ex, dlt), batchId = batchId)
     } finally fresh.unpersist()
-  }
-
-  /** Retention/GDPR path: remove documents from the index — the
-    * O(delta) twin of [[upsertBatch]]. The caller passes `(doc_id,
-    * text)` (the corpus is immutable, so the original text is
-    * re-readable; tokenizing it recovers exactly the (term, doc_id)
-    * posting keys, each deleted via a term-bucket-pruned rewrite).
-    * Only documents actually PRESENT in the membership table count
-    * against the stats (so replays and doubles are no-ops), and the
-    * membership row is deleted LAST — the mirror of ingest's
-    * membership-written-last: a crash mid-delete leaves the doc still
-    * marked present, so the replay recomputes the same key set and
-    * the per-store guards skip what already landed. */
-  def deleteDocs(spark: SparkSession, docs0: DataFrame, prefix: String,
-                 buckets: Int = DefaultBuckets,
-                 batchId: Option[Long] = None): Unit = {
-    val batch = docs0.select(col("doc_id"), col("text"))
-      .dropDuplicates("doc_id")
-    val present = BucketedUpsert.readKeys(spark, docsTable(prefix),
-      batch.select(col("doc_id")), "doc_id", buckets)
-      .select(col("doc_id"))
-    val gone = batch.join(present, Seq("doc_id"), "left_semi").persist()
-    try {
-      if (gone.isEmpty) return
-      val keys = gone
-        .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("term"))
-        .distinct()
-      BucketedUpsert.delete(spark, postingsTable(prefix), keys,
-        Seq("term", "doc_id"), "term", buckets, batchId = batchId)
-      val statsDelta = gone
-        .select(col("doc_id"), size(TextOps.tokens(col("text"))).cast("long").as("dl"))
-        .agg((-count(lit(1))).cast("long").as("n_docs"),
-          (-coalesce(sum(col("dl")), lit(0L))).as("sum_dl"))
-        .select(lit(0L).as("sid"), col("n_docs"), col("sum_dl"))
-      BucketedUpsert.upsert(spark, statsTable(prefix), statsDelta,
-        Seq("sid"), "sid", 1,
-        merge = (_, ex, dlt) => coalesce(ex, lit(0L)) + coalesce(dlt, lit(0L)),
-        batchId = batchId)
-      // membership tombstone LAST (see crash/replay mirror above)
-      BucketedUpsert.delete(spark, docsTable(prefix),
-        gone.select(col("doc_id")), Seq("doc_id"), "doc_id", buckets,
-        batchId = batchId)
-    } finally gone.unpersist()
   }
 
   /** The postings of exactly `terms`: a bucket-pruned read of the

@@ -171,4 +171,32 @@ object StoreSentinel {
 
   def drop(spark: SparkSession, prefix: String): Unit =
     java.nio.file.Files.deleteIfExists(path(spark, prefix))
+
+  /** Drop the derived store under `prefix`: the sentinel first, so it
+    * never outlives the tables it certifies, then the tables
+    * (`dropTables`). */
+  def dropStore(spark: SparkSession, prefix: String,
+                dropTables: (SparkSession, String) => Unit): Unit = {
+    drop(spark, prefix)
+    dropTables(spark, prefix)
+  }
+
+  /** Adopt the derived store under `prefix`, or build it — the one
+    * order every sentinel-guarded store follows. A completed build over
+    * the same `corpus` file(s) under `dir` ([[matches]]) adopts when
+    * `adopt` re-registers all its tables. Anything else (no sentinel,
+    * another corpus, a partial store) is dropped ([[dropStore]]) and
+    * rebuilt by `build`, and the sentinel is written LAST: its presence
+    * certifies a completed build. Returns `prefix`. */
+  def buildOrAdopt(spark: SparkSession, prefix: String, dir: String, corpus: String,
+                   adopt: (SparkSession, String) => Boolean,
+                   dropTables: (SparkSession, String) => Unit)(build: => Unit): String = {
+    val sig = corpusSignature(dir, corpus)
+    if (!(matches(spark, prefix, sig) && adopt(spark, prefix))) {
+      dropStore(spark, prefix, dropTables)
+      build
+      write(spark, prefix, sig)
+    }
+    prefix
+  }
 }

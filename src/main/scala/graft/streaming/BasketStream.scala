@@ -21,11 +21,10 @@ import org.apache.spark.sql.functions._
   * EXACTLY the one-shot aggregation of the union (asserted against
   * the batch queries in StreamingBasketSpec).
   *
-  * Deletes (order returns / retention) are the negated-counts merge —
-  * the LmCountsStream recipe — and serve-side filters (`c` ≥
-  * min-support, `n` > 0) make zeroed rows behave as never-ingested.
-  * Replay safety: additive merges record the foreachBatch batchId per
-  * store; a redelivered batch is a no-op.
+  * Counts only grow: there is no delete, so the serve side cuts pairs
+  * at min-support (`c` ≥ [[MinSupport]]) and nothing else. Replay
+  * safety: additive merges record the foreachBatch batchId per store;
+  * a redelivered batch is a no-op.
   *
   * Serving reuses [[AnalyticsQueries.basketCosine]] /
   * [[AnalyticsQueries.basketRules]] verbatim — the scoring math
@@ -41,8 +40,8 @@ object BasketStream {
     * query item — the doubled-row layout is what makes an
     * "also-bought" lookup a bucket-file probe ([[recsTopK]]) instead
     * of a table scan, the PostingsStore term-bucket recipe applied to
-    * item-item recs. Maintained by the same additive merges/deletes
-    * as the analytic pair table. */
+    * item-item recs. Maintained by the same additive merges as the
+    * analytic pair table. */
   val RecsTable = "mb_recs"     // (q, r, c), bucketed by q
   val DefaultBuckets = 32
 
@@ -79,13 +78,11 @@ object BasketStream {
 
   /** The batch's own (pairs, items, totals) delta frames from a
     * `[o, i]` line frame — one distinct + the basket-keyed self-join,
-    * map-side combined. `sign` −1 builds the delete deltas. Items
-    * route through [[AnalyticsQueries.capBasketItems]]: the hash-rank
-    * is a function of (o, i) alone, so with whole baskets per batch
-    * (the caller contract above) the stream keeps EXACTLY the items
-    * the batch memo keeps — including for delete deltas, which
-    * replay the same basket rows and therefore cancel the same
-    * capped subset.
+    * map-side combined. Items route through
+    * [[AnalyticsQueries.capBasketItems]]: the hash-rank is a function
+    * of (o, i) alone, so with whole baskets per batch (the caller
+    * contract above) the stream keeps EXACTLY the items the batch memo
+    * keeps.
     *
     * Contract-violation blast radius (ADVICE r18): if a caller splits
     * one ORDER KEY across micro-batches, the cap amplifies the
@@ -100,16 +97,15 @@ object BasketStream {
     * There is deliberately no seen-order assertion here: it would
     * need a per-order-key state table touched by every batch — a
     * second keyed exchange per micro-batch purely for diagnostics. */
-  private def deltas(batch: DataFrame, sign: Int):
-      (DataFrame, DataFrame, DataFrame) = {
+  private def deltas(batch: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val bi = AnalyticsQueries.capBasketItems(batch)
     val pairs = bi.select(col("o"), col("i").as("i1"))
       .join(bi.select(col("o"), col("i").as("i2")), Seq("o"))
       .filter(col("i1") < col("i2"))
       .groupBy(col("i1"), col("i2"))
-      .agg((count(lit(1)) * sign).as("c"))
-    val items = bi.groupBy(col("i")).agg((count(lit(1)) * sign).as("n"))
-    val totals = bi.agg((countDistinct(col("o")) * sign).as("n_orders"))
+      .agg(count(lit(1)).as("c"))
+    val items = bi.groupBy(col("i")).agg(count(lit(1)).as("n"))
+    val totals = bi.agg(countDistinct(col("o")).as("n_orders"))
       .select(lit(0L).as("k"), col("n_orders"))
     (pairs, items, totals)
   }
@@ -133,20 +129,13 @@ object BasketStream {
   def upsertBatch(spark: SparkSession, batch: DataFrame,
                   prefix: String = "", buckets: Int = DefaultBuckets,
                   batchId: Option[Long] = None): Unit =
-    merge(spark, deltas(batch, 1), prefix, buckets, batchId)
-
-  /** Remove complete baskets' contributions (returns/retention).
-    * Caller contract: delete only baskets that were ingested, whole. */
-  def deleteBatch(spark: SparkSession, batch: DataFrame,
-                  prefix: String = "", buckets: Int = DefaultBuckets,
-                  batchId: Option[Long] = None): Unit =
-    merge(spark, deltas(batch, -1), prefix, buckets, batchId)
+    merge(spark, deltas(batch), prefix, buckets, batchId)
 
   private def served(spark: SparkSession, prefix: String):
       (DataFrame, DataFrame, DataFrame) = (
     BucketedUpsert.read(spark, prefix + PairsTable)
       .filter(col("c") >= MinSupport),
-    BucketedUpsert.read(spark, prefix + ItemsTable).filter(col("n") > 0),
+    BucketedUpsert.read(spark, prefix + ItemsTable),
     BucketedUpsert.read(spark, prefix + TotalsTable)
       .select(col("n_orders").as("nord")))
 

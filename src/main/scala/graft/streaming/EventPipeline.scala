@@ -351,8 +351,7 @@ object EventPipeline {
     * user's state on-heap per partition — fine at bench scale,
     * memory-bound at 10⁹ users; set the conf to
     * `org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`
-    * to move state off-heap with incremental checkpointing
-    * (StreamBench: `SPARK_GRAFT_STREAM_PROVIDER=rocksdb`; measured
+    * to move state off-heap with incremental checkpointing (measured
     * ev/s in BENCHNOTES "RocksDB state store"). */
   def grantChangesBounded(spark: SparkSession, events: Dataset[EventRow],
                           cfg: EngineConfig,

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * forward by hard link. Counts are purely additive, so the
   * accumulated stores are EXACTLY the one-shot training counts of the
   * union corpus under any batch split (asserted in StreamingLmSpec)
-  * — no approximation, no ordering sensitivity.
+  * — no approximation, no ordering sensitivity. Counts only grow:
+  * there is no delete, so every stored count is positive.
   *
   * Replay safety: additive merges are NOT replay-idempotent, so every
   * merge records the foreachBatch batchId and a redelivered batch is
@@ -91,47 +92,15 @@ object LmCountsStream {
       Seq("k"), "k", 1, merge = additive, batchId = batchId)
   }
 
-  /** Remove documents' contributions — the retention/GDPR path, the
-    * decrement twin of [[upsertBatch]]: counts are LINEAR in the
-    * corpus, so deletion is the additive merge of the departing docs'
-    * NEGATED counts (PostingsStore.deleteDocs needs a membership
-    * gate for this; the LM stores don't because they never key by
-    * doc). Zeroed rows stay physically present until a compaction
-    * but are invisible to scoring ([[readCounts]] filters to positive
-    * counts). Caller contract: delete only documents that were
-    * ingested — the stores don't track membership, and deleting an
-    * unseen doc would leave (readCounts-invisible but wrong) negative
-    * residue. */
-  def deleteBatch(spark: SparkSession, docs: DataFrame,
-                  prefix: String = "", buckets: Int = DefaultBuckets,
-                  batchId: Option[Long] = None): Unit = {
-    val c = NgramLm.train(docs)
-    def neg(df: DataFrame, cnt: String): DataFrame =
-      df.withColumn(cnt, -col(cnt))
-    BucketedUpsert.upsert(spark, prefix + BigramTable, neg(c.bigrams, "c12"),
-      Seq("w1", "w2"), "w1", buckets, merge = additive, batchId = batchId)
-    BucketedUpsert.upsert(spark, prefix + ContextTable, neg(c.contexts, "c1"),
-      Seq("w1"), "w1", buckets, merge = additive, batchId = batchId)
-    BucketedUpsert.upsert(spark, prefix + UnigramTable, neg(c.unigrams, "c2"),
-      Seq("token"), "token", buckets, merge = additive, batchId = batchId)
-    BucketedUpsert.upsert(spark, prefix + TotalsTable,
-      neg(c.totals, "n_tok").select(lit(0L).as("k"), col("n_tok")),
-      Seq("k"), "k", 1, merge = additive, batchId = batchId)
-  }
-
   /** The accumulated counts as a [[NgramLm.Counts]] — drop-in for
-    * `NgramLm.score`, which is how the store serves. Filtered to
-    * POSITIVE counts so rows zeroed by [[deleteBatch]] behave exactly
-    * as if they were never ingested (a zero count reaching the
-    * scorer's log would be undefined). */
+    * `NgramLm.score`, which is how the store serves. Every stored
+    * count is positive: a row exists only once a batch counted it,
+    * and counts only grow. */
   def readCounts(spark: SparkSession, prefix: String = ""): NgramLm.Counts =
     NgramLm.Counts(
-      bigrams = BucketedUpsert.read(spark, prefix + BigramTable)
-        .filter(col("c12") > 0),
-      contexts = BucketedUpsert.read(spark, prefix + ContextTable)
-        .filter(col("c1") > 0),
-      unigrams = BucketedUpsert.read(spark, prefix + UnigramTable)
-        .filter(col("c2") > 0),
+      bigrams = BucketedUpsert.read(spark, prefix + BigramTable),
+      contexts = BucketedUpsert.read(spark, prefix + ContextTable),
+      unigrams = BucketedUpsert.read(spark, prefix + UnigramTable),
       totals = BucketedUpsert.read(spark, prefix + TotalsTable)
         .select(col("n_tok")))
 

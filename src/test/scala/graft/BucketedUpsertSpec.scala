@@ -179,64 +179,6 @@ class BucketedUpsertSpec extends AnyFunSuite {
     } finally BucketedUpsert.drop(spark, table)
   }
 
-  test("delete removes keys O(delta): untouched bucket files survive by link") {
-    import spark.implicits._
-    val table = "bu_del"
-    BucketedUpsert.drop(spark, table)
-    try {
-      val rows = (1L to 64L).map(k => (k, k.toInt * 10))
-      BucketedUpsert.materialize(rows.toDF("k", "v"), table, "k", 8)
-      import scala.jdk.CollectionConverters._
-      def gen(t: String) = {
-        val d = BucketedUpsert.tableDir(spark, t)
-        java.nio.file.Files.list(d).iterator().asScala
-          .map(p => p.getFileName.toString ->
-            java.nio.file.Files.readAttributes(p,
-              classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey())
-          .toMap
-      }
-      val before = gen(table + "__a")
-      BucketedUpsert.delete(spark, table, Seq(3L, 7L).toDF("k"), Seq("k"), "k", 8)
-      val after = gen(table + "__b")
-      // the two keys land in <= 2 buckets; every other bucket's file in
-      // the new generation must be the SAME inode (hard link), not a
-      // rewrite
-      val sharedInodes = after.values.toSet.intersect(before.values.toSet)
-      assert(sharedInodes.size >= 6,
-        s"expected >= 6 linked bucket files, got ${sharedInodes.size}")
-      val got = BucketedUpsert.read(spark, table).collect()
-        .map(r => r.getLong(0) -> r.getInt(1)).toMap
-      assert(got == rows.toMap -- Seq(3L, 7L))
-      // deleting an absent key is a no-op, not an error
-      BucketedUpsert.delete(spark, table, Seq(999L).toDF("k"), Seq("k"), "k", 8)
-      assert(BucketedUpsert.read(spark, table).count() == 62)
-      // past the driver's row budget: a write job deletes
-      BucketedUpsert.delete(spark, table,
-        ((10L to 20L) ++ (1000L to 1000L + BucketedUpsert.DriverMergeRows)).toDF("k"),
-        Seq("k"), "k", 8)
-      assert(BucketedUpsert.read(spark, table).collect()
-        .map(r => r.getLong(0) -> r.getInt(1)).toMap == rows.toMap -- Seq(3L, 7L) -- (10L to 20L))
-    } finally BucketedUpsert.drop(spark, table)
-  }
-
-  test("delete by key-prefix: GrantStore user wipe reverts to default grant") {
-    import spark.implicits._
-    import graft.sources.GrantStore
-    val table = "bu_del_grants"
-    GrantStore.drop(spark, table)
-    try {
-      GrantStore.materialize(
-        Seq((1L, "purchase", false), (1L, "message", false),
-          (2L, "purchase", true), (3L, "message", false))
-          .toDF("user_id", "feature", "has_grant"), table, 8)
-      GrantStore.deleteUsers(spark, Seq(1L).toDF("user_id"), table, 8)
-      val left = GrantStore.read(spark, table).collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet
-      assert(left == Set((2L, "purchase"), (3L, "message")),
-        "every row of the wiped user must be gone, others untouched")
-    } finally GrantStore.drop(spark, table)
-  }
-
   /** Data files of a generation, grouped by bucket id. */
   private def bucketFiles(gen: String): Map[Int, Seq[java.nio.file.Path]] = {
     val listing = java.nio.file.Files.list(BucketedUpsert.tableDir(spark, gen))
@@ -244,6 +186,13 @@ class BucketedUpsertSpec extends AnyFunSuite {
       .flatMap(p => BucketedUpsert.bucketIdOf(p.getFileName.toString).map(_ -> p))
       .groupMap(_._1)(_._2)
     finally listing.close()
+  }
+
+  /** The file key (device and inode) of each bucket's first data file:
+    * equal keys across two generations mean a hard link, not a copy. */
+  private def linked(gen: String): Map[Int, Object] = bucketFiles(gen).map { case (b, fs) =>
+    b -> java.nio.file.Files.readAttributes(fs.head,
+      classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
   }
 
   private def bucketsOf(keys: Seq[Long], buckets: Int): Set[Int] = {
@@ -350,13 +299,17 @@ class BucketedUpsertSpec extends AnyFunSuite {
     try {
       var model = (1L to 400L).map(k => k -> k).toMap
       BucketedUpsert.materialize(model.toSeq.toDF("k", "v"), table, "k", buckets)
+      // more rows than the driver merges, all outside buckets 0-3, so
+      // that write job has untouched buckets to carry forward
+      val pastBudget = spark.range(1L, 10000L).filter(pmod(hash(col("id")), lit(buckets)) >= 4)
+        .limit(BucketedUpsert.DriverMergeRows + 1).as[Long].collect().toSeq
       // one bucket, then more buckets than cores, then more rows than
       // the driver merges: the first and the last run a write job
-      for (keys <- Seq(Seq(7L), (1L to 400L by 19L) :+ 1000L,
-                       1L to BucketedUpsert.DriverMergeRows + 1L)) {
+      for (keys <- Seq(Seq(7L), (1L to 400L by 19L) :+ 1000L, pastBudget)) {
         val t = bucketsOf(keys, buckets).size
         val delta = keys.map(k => k -> -k)
         model = model ++ delta
+        val before = linked(BucketedUpsert.activeGen(spark, table).get)
         val stages = resultStages(BucketedUpsert.upsert(spark, table,
           delta.toDF("k", "v"), Seq("k"), "k", buckets))
         assert(stages.size <= 2, s"t=$t: result stages (tasks) $stages")
@@ -365,7 +318,14 @@ class BucketedUpsertSpec extends AnyFunSuite {
         assert(files.values.forall(_.size == 1), s"t=$t: $files")
         assert(files.keySet == bucketsOf(model.keys.toSeq, buckets))
         assert(BucketedUpsert.read(spark, table).as[(Long, Long)].collect().toMap == model)
+        // untouched buckets carry forward by link; touched ones are new
+        val touched = bucketsOf(keys, buckets)
+        val now = linked(BucketedUpsert.activeGen(spark, table).get)
+        assert((before -- touched).nonEmpty && (before -- touched) == (now -- touched),
+          s"t=$t: untouched buckets must be the same files")
+        assert(touched.forall(b => now.get(b).forall(!before.get(b).contains(_))))
       }
+      assert(pastBudget.size > BucketedUpsert.DriverMergeRows)
       assert(bucketsOf((1L to 400L by 19L) :+ 1000L, buckets).size > parallelism)
     } finally BucketedUpsert.drop(spark, table)
   }
@@ -460,31 +420,21 @@ class BucketedUpsertSpec extends AnyFunSuite {
       BucketedUpsert.materialize(model.toSeq.toDF("k", "v"), table, "k", buckets)
       // the first publish creates the inactive generation with a write job
       BucketedUpsert.upsert(spark, table, Seq((1L, 1L)).toDF("k", "v"), Seq("k"), "k", buckets)
-      def linked(gen: String): Map[Int, Object] = bucketFiles(gen).map { case (b, fs) =>
-        b -> java.nio.file.Files.readAttributes(fs.head,
-          classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
-      }
-      val upsert = Seq(3L, 77L, 150L, 151L, 1000L)
-      val delete = Seq(5L, 77L, 2000L)
-      for ((keys, publish) <- Seq[(Seq[Long], () => Unit)](
-             upsert -> (() => BucketedUpsert.upsert(spark, table,
-               upsert.map(k => (k, -k)).toDF("k", "v"), Seq("k"), "k", buckets)),
-             delete -> (() => BucketedUpsert.delete(spark, table,
-               delete.toDF("k"), Seq("k"), "k", buckets)))) {
-        val before = linked(BucketedUpsert.activeGen(spark, table).get)
-        val stages = resultStages(publish())
-        assert(stages.size == 1, s"result stages (tasks) $stages")
-        model = if (keys == delete) model -- delete else model ++ upsert.map(k => k -> -k)
-        assert(BucketedUpsert.read(spark, table).as[(Long, Long)].collect().toMap == model)
-        val after = bucketFiles(BucketedUpsert.activeGen(spark, table).get)
-        assert(after.values.forall(_.size == 1), s"$after")
-        assert(after.keySet == bucketsOf(model.keys.toSeq, buckets))
-        // untouched buckets carry forward by link; touched ones are new
-        val touched = bucketsOf(keys, buckets)
-        val now = linked(BucketedUpsert.activeGen(spark, table).get)
-        assert((before -- touched) == (now -- touched))
-        assert(touched.forall(b => now.get(b).forall(!before.get(b).contains(_))))
-      }
+      val keys = Seq(3L, 77L, 150L, 151L, 1000L)
+      val before = linked(BucketedUpsert.activeGen(spark, table).get)
+      val stages = resultStages(BucketedUpsert.upsert(spark, table,
+        keys.map(k => (k, -k)).toDF("k", "v"), Seq("k"), "k", buckets))
+      assert(stages.size == 1, s"result stages (tasks) $stages")
+      model = model ++ keys.map(k => k -> -k)
+      assert(BucketedUpsert.read(spark, table).as[(Long, Long)].collect().toMap == model)
+      val after = bucketFiles(BucketedUpsert.activeGen(spark, table).get)
+      assert(after.values.forall(_.size == 1), s"$after")
+      assert(after.keySet == bucketsOf(model.keys.toSeq, buckets))
+      // untouched buckets carry forward by link; touched ones are new
+      val touched = bucketsOf(keys, buckets)
+      val now = linked(BucketedUpsert.activeGen(spark, table).get)
+      assert((before -- touched) == (now -- touched))
+      assert(touched.forall(b => now.get(b).forall(!before.get(b).contains(_))))
     } finally BucketedUpsert.drop(spark, table)
   }
 

@@ -128,40 +128,6 @@ class IvfIndexStoreSpec extends AnyFunSuite {
     } finally Seq(inc, full).foreach(IvfIndexStore.drop(spark, _))
   }
 
-  test("retention delete removes cells AND codes; equals a fresh build over the remainder") {
-    val (del, ref) = ("ivf_del", "ivf_ref")
-    Seq(del, ref).foreach(IvfIndexStore.drop(spark, _))
-    try {
-      Seq(del, ref).foreach { p =>
-        IvfIndexStore.init(spark, pivots, p, buckets = 8)
-        IvfIndexStore.initPq(spark, vecs, p, buckets = 8)
-      }
-      val keep = vecs.filter(col("vec_id") % 3 =!= 1)
-      val drop = vecs.filter(col("vec_id") % 3 === 1)
-      IvfIndexStore.upsertBatch(spark, vecs, del, 8)
-      IvfIndexStore.upsertPqBatch(spark, vecs, del, 8)
-      IvfIndexStore.upsertBatch(spark, keep, ref, 8)
-      IvfIndexStore.upsertPqBatch(spark, keep, ref, 8)
-      IvfIndexStore.deleteVecs(spark, drop, del, 8, Some(0L))
-      def codeSet(p: String): Set[(Long, Int, Long)] =
-        BucketedUpsert.read(spark, IvfIndexStore.codesTable(p)).collect()
-          .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-      assert(cellSet(del) == cellSet(ref),
-        "cells after delete must equal the never-ingested build")
-      assert(codeSet(del) == codeSet(ref),
-        "codes after delete must equal the never-ingested build")
-      // deleted vectors can no longer be served
-      val queries = vecs.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-      val served = IvfIndexStore.topK(spark, queries, del, k = 3,
-        nProbe = 2, buckets = 8)
-        .select(col("neighbor_id")).collect().map(_.getLong(0)).toSet
-      val dropped = drop.select(col("vec_id")).collect().map(_.getLong(0)).toSet
-      assert(served.intersect(dropped).isEmpty,
-        "probe must never return a deleted vector")
-    } finally Seq(del, ref).foreach(IvfIndexStore.drop(spark, _))
-  }
-
   test("redelivered batch is a no-op; re-sent vector keeps its first row") {
     import spark.implicits._
     val prefix = "ivf_replay"

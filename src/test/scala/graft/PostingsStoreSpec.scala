@@ -85,31 +85,6 @@ class PostingsStoreSpec extends AnyFunSuite {
     } finally PostingsStore.drop(spark, prefix)
   }
 
-  test("retention delete equals a fresh build without the deleted docs") {
-    val (del, ref) = ("bm25_del", "bm25_ref")
-    Seq(del, ref).foreach(PostingsStore.drop(spark, _))
-    try {
-      PostingsStore.init(spark, del, buckets = 8)
-      PostingsStore.init(spark, ref, buckets = 8)
-      PostingsStore.upsertBatch(spark, docs, del, 8)
-      val keep = docs.filter(col("doc_id") % 3 =!= 0)
-      val drop = docs.filter(col("doc_id") % 3 === 0)
-      PostingsStore.upsertBatch(spark, keep, ref, 8)
-      PostingsStore.deleteDocs(spark, drop, del, 8, Some(0L))
-      assert(postingsSet(del) == postingsSet(ref),
-        "postings after delete must equal the never-ingested build")
-      assert(statsRow(del) == statsRow(ref),
-        "stats must decrement to the never-ingested values")
-      // replayed tombstone batch: per-store guards + membership make
-      // it a no-op (stats cannot double-decrement)
-      PostingsStore.deleteDocs(spark, drop, del, 8, Some(0L))
-      assert(statsRow(del) == statsRow(ref))
-      // deleting under a new batch id is also a no-op: membership gone
-      PostingsStore.deleteDocs(spark, drop, del, 8, Some(1L))
-      assert(postingsSet(del) == postingsSet(ref) && statsRow(del) == statsRow(ref))
-    } finally Seq(del, ref).foreach(PostingsStore.drop(spark, _))
-  }
-
   test("probe reads only the query terms' bucket files, not the corpus") {
     val prefix = "bm25_prune"
     PostingsStore.drop(spark, prefix)
