@@ -106,24 +106,6 @@ final case class EngineConfig(
     f.rules.foreach(r => require(ruleNames(r), s"feature ${f.name}: unknown rule $r"))
   }
   def rule(name: String): RuleSpec = rules.find(_.name == name).get
-
-  /** rule → features index (reference feature_registry.py:17-18,26-28
-    * `get_features_by_rule`): the SO1/SO2 impact set — which features
-    * must re-evaluate when a rule's inputs change. The batch compiler
-    * re-evaluates everything per plan, so this is the narrowing an
-    * incremental caller uses. */
-  private val byRule: Map[String, Seq[FeatureSpec]] =
-    features.flatMap(f => f.rules.map(_ -> f)).groupBy(_._1)
-      .view.mapValues(_.map(_._2)).toMap
-  def featuresByRule(rule: String): Seq[FeatureSpec] =
-    byRule.getOrElse(rule, Seq.empty)
-
-  /** aggregate → impacted features (transitively through rules) — the
-    * full impact chain used to narrow recomputation on one
-    * aggregate's update. */
-  def featuresByAggregate(agg: String): Seq[FeatureSpec] =
-    rules.filter(r => r.aggregate1 == agg || r.aggregate2.contains(agg))
-      .flatMap(r => featuresByRule(r.name)).distinct
 }
 
 /** Default config bound to the driver's `events` table

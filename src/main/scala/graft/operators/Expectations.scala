@@ -111,25 +111,11 @@ object Expectations {
     * before the partial agg — the documented cost of exactness; the
     * approx path at 100 TB is the engine's HLL sketch column family,
     * [[graft.functions.expressions.HllSketchAgg]]). */
-  def profile(df: DataFrame, columns: Seq[String]): DataFrame =
-    profileWith(df, columns, c => count_distinct(col(c)))
-
-  /** [[profile]] with HLL-approximate distinct counts — the 100 TB
-    * shape: exact multi-column DISTINCT compiles to an Expand that
-    * duplicates every row #columns ways before the partial aggregate,
-    * while the HLL sketches fold all columns in ONE un-expanded scan
-    * with O(2^p) state per column. Same report schema; `n_distinct`
-    * carries the usual ~1.04/sqrt(2^p) relative error. */
-  def profileApprox(df: DataFrame, columns: Seq[String], p: Int = 12): DataFrame =
-    profileWith(df, columns,
-      c => graft.functions.expressions.HllSketchAgg(col(c), p))
-
-  private def profileWith(df: DataFrame, columns: Seq[String],
-                          distinct: String => Column): DataFrame = {
+  def profile(df: DataFrame, columns: Seq[String]): DataFrame = {
     require(columns.nonEmpty, "profile: at least one column required")
     val aggs = count(lit(1)).as("__n") +: columns.zipWithIndex.flatMap { case (c, i) =>
       Seq(count(col(c)).as(s"__nn$i"),
-        distinct(c).as(s"__nd$i"))
+        count_distinct(col(c)).as(s"__nd$i"))
     }
     df.agg(aggs.head, aggs.tail: _*)
       .select(explode(array(columns.zipWithIndex.map { case (c, i) =>

@@ -161,11 +161,9 @@ case class GraftBuildPqCommand(prefix: String, table: String, buckets: Int)
   *   GRAFT BUILD LM <prefix> FROM <table> [BUCKETS n]
   *     -- <table>: (doc_id, text); (re)builds the stupid-backoff LM
   *        count stores ([[graft.streaming.LmCountsStream]]) from the
-  *        table's CURRENT rows. DROP-AND-REBUILD semantics: the LM
-  *        merge is additive (not first-writer like postings), so an
-  *        accumulate re-run would double-count — the statement
-  *        rebuilds from scratch instead, making re-runs idempotent;
-  *        incremental accumulation stays the streaming writer's job.
+  *        table's CURRENT rows. DROP-AND-BUILD: each store is dropped,
+  *        then materialized once, full, so a re-run is idempotent and
+  *        every store's only generation is the one it serves.
   */
 case class GraftBuildLmCommand(prefix: String, table: String, buckets: Int)
   extends LeafRunnableCommand {
@@ -179,12 +177,10 @@ case class GraftBuildLmCommand(prefix: String, table: String, buckets: Int)
     import org.apache.spark.sql.functions.col
     val lm = graft.streaming.LmCountsStream
     lm.drop(spark, prefix)
-    lm.init(spark, prefix, buckets)
-    lm.upsertBatch(spark,
-      spark.table(table).select(col("doc_id"), col("text")), prefix, buckets)
+    lm.build(spark.table(table).select(col("doc_id"), col("text")), prefix, buckets)
     val n = lm.readCounts(spark, prefix).totals.collect()
       .headOption.map(_.getLong(0)).getOrElse(0L)
-    Seq(Row(prefix, prefix + graft.streaming.LmCountsStream.BigramTable, n))
+    Seq(Row(prefix, prefix + lm.BigramTable, n))
   }
 }
 
@@ -194,9 +190,7 @@ case class GraftBuildLmCommand(prefix: String, table: String, buckets: Int)
   *     -- <events_table>: (ts, event_type, value, ...); (re)builds the
   *        per-(type, day) daily revenue store
   *        ([[graft.streaming.AnomalyMonitorStream]]) from the table's
-  *        CURRENT rows. DROP-AND-REBUILD like BUILD LM: daily merges
-  *        are additive, so re-running an accumulate would
-  *        double-count — the statement is idempotent instead.
+  *        CURRENT rows, DROP-AND-BUILD like BUILD LM.
   */
 case class GraftBuildDailyCommand(table: String, source: String, buckets: Int)
   extends LeafRunnableCommand {
@@ -208,8 +202,7 @@ case class GraftBuildDailyCommand(table: String, source: String, buckets: Int)
   override def run(spark: SparkSession): Seq[Row] = {
     val am = graft.streaming.AnomalyMonitorStream
     am.drop(spark, table)
-    am.init(spark, table, buckets)
-    am.upsertBatch(spark, spark.table(source), table, buckets)
+    am.build(spark.table(source), table, buckets)
     Seq(Row(table, am.daily(spark, table).count()))
   }
 }
@@ -220,10 +213,7 @@ case class GraftBuildDailyCommand(table: String, source: String, buckets: Int)
   *     -- <table>: (o, i) basket lines; (re)builds the co-purchase
   *        pair/item/total count stores
   *        ([[graft.streaming.BasketStream]]) from the table's CURRENT
-  *        rows. DROP-AND-REBUILD like BUILD LM: basket merges are
-  *        additive, so re-running an accumulate would double-count —
-  *        the statement is idempotent; incremental accumulation is
-  *        the streaming writer's job.
+  *        rows, DROP-AND-BUILD like BUILD LM.
   */
 case class GraftBuildBasketCommand(prefix: String, table: String, buckets: Int)
   extends LeafRunnableCommand {
@@ -236,12 +226,10 @@ case class GraftBuildBasketCommand(prefix: String, table: String, buckets: Int)
   override def run(spark: SparkSession): Seq[Row] = {
     val bs = graft.streaming.BasketStream
     bs.drop(spark, prefix)
-    bs.init(spark, prefix, buckets)
-    bs.upsertBatch(spark, spark.table(table), prefix, buckets)
-    val n = graft.sources.BucketedUpsert
-      .read(spark, prefix + graft.streaming.BasketStream.TotalsTable)
+    bs.build(spark.table(table), prefix, buckets)
+    val n = BucketedUpsert.read(spark, prefix + bs.TotalsTable)
       .collect().headOption.map(_.getLong(1)).getOrElse(0L)
-    Seq(Row(prefix, prefix + graft.streaming.BasketStream.PairsTable, n))
+    Seq(Row(prefix, prefix + bs.PairsTable, n))
   }
 }
 

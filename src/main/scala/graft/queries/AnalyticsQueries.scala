@@ -37,13 +37,11 @@ object AnalyticsQueries extends QueryModule {
   /** Funnel step-conversion window: 24 h in µs (see funnel_conversion). */
   private val StepWindowUs = 86400000000L
 
-  /** Market-basket min-support floor. ONE constant feeds all three
-    * places that must agree for the streaming==batch invariant: the
-    * batch pair memo's filter ([[basketPairs]]), the oracle CTE's
-    * HAVING ([[basketCte]]), and the streaming serve path
-    * ([[graft.streaming.BasketStream.MinSupport]] aliases it) — a
-    * change anywhere propagates everywhere instead of silently
-    * breaking StreamingBasketSpec at the changed value. */
+  /** Market-basket min-support floor. ONE constant feeds both places
+    * that must agree: the batch pair memo's filter ([[basketPairs]])
+    * and the oracle CTE's HAVING ([[basketCte]]); readers of the
+    * stored pair counts ([[graft.streaming.BasketStream]]) cut with it
+    * too. */
   private[graft] val BasketMinSupport = 2
 
   /** Per-item neighbor cap for the recommender's similarity frame:
@@ -67,12 +65,10 @@ object AnalyticsQueries extends QueryModule {
     * 64 is far above every fixture's max basket (11/13/17/17 distinct
     * items at sf0.001/0.01/0.1/sf1_scaled), so fixture results are
     * bit-identical capped or not; the value is interpolated into the
-    * oracle CTE ([[basketCte]]) and shared by the streaming serve
-    * path ([[graft.streaming.BasketStream]] routes its per-batch
-    * frames through [[capBasketItems]]) so all three engines prune
-    * the SAME items. The rank hash is a deterministic function of
-    * (o, i) alone — independent of batching — which is what keeps
-    * the streaming==batch invariant exact under the cap. */
+    * oracle CTE ([[basketCte]]) and shared by the basket store build
+    * ([[graft.streaming.BasketStream]] routes its lines through
+    * [[capBasketItems]]) so all three prune the SAME items. The rank
+    * hash is a deterministic function of (o, i) alone. */
   private[graft] val BasketItemCap = 64
 
   /** The shared basket-items carve: distinct (order, item) pairs,
@@ -136,18 +132,16 @@ object AnalyticsQueries extends QueryModule {
   }
 
   /** Per-(type, day) event counts and exact DECIMAL revenue — the
-    * additive daily frame behind revenue_anomaly_mad AND the
-    * streaming AnomalyMonitorStream store (counts and decimal sums
-    * are associative over disjoint event sets, so incremental merges
-    * equal the one-shot aggregation exactly). */
+    * daily frame behind revenue_anomaly_mad AND the persisted
+    * AnomalyMonitorStream store it is built into. */
   private[graft] def dailyRevenue(events: DataFrame): DataFrame =
     events.groupBy(col("event_type"),
       expr(s"unix_micros(ts) div $DayUs").as("day"))
       .agg(count(lit(1)).as("n_events"), sum(dec(col("value"))).as("rev"))
 
   /** Median/MAD anomaly flags over a `(event_type, day, rev)` daily
-    * frame — revenue_anomaly_mad's scoring stage, shared verbatim by
-    * the streaming monitor so the two can never diverge. */
+    * frame — revenue_anomaly_mad's scoring stage, also run over the
+    * stored daily frame ([[graft.streaming.AnomalyMonitorStream.daily]]). */
   private[graft] def madFlags(daily: DataFrame): DataFrame = {
     val d = daily.select(col("event_type"), col("day"),
       dbl4(col("rev")).as("revenue"))
@@ -192,9 +186,9 @@ object AnalyticsQueries extends QueryModule {
   /** Exact integer micros from a decimal daily-revenue frame: the
     * DECIMAL(·,6) sum is order-free-exact, so ×10⁶ is an integral
     * value and the cast is lossless — the conversion that lets the
-    * batch changepoint query and the store-served
-    * [[graft.streaming.AnomalyMonitorStream.shifts]] read the SAME
-    * number under any ingest chunking. */
+    * batch changepoint query and a read of the stored daily frame
+    * ([[graft.streaming.AnomalyMonitorStream.daily]]) see the SAME
+    * number. */
   private[graft] def revMicros(daily: DataFrame): DataFrame =
     daily.select(col("event_type"), col("day"),
       (col("rev") * 1000000).cast("long").as("rev"))
@@ -223,9 +217,8 @@ object AnalyticsQueries extends QueryModule {
   }
 
   /** Cosine scoring over a `(i1, i2, c)` pair frame + `(i, n)` item
-    * counts — shared verbatim by the streaming
-    * [[graft.streaming.BasketStream]] serve path so batch and
-    * incremental market-basket scoring can never diverge. */
+    * counts — copurchase_cosine's scoring stage, also run over the
+    * stored counts of [[graft.streaming.BasketStream]]. */
   private[graft] def basketCosine(pairs: DataFrame, items: DataFrame): DataFrame =
     pairs
       .join(items.select(col("i").as("i1"), col("n").as("n1")), Seq("i1"))

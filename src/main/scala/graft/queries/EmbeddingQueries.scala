@@ -67,10 +67,9 @@ object EmbeddingQueries extends QueryModule {
     val p = ivfPrefixName(dir)
     graft.sources.StoreSentinel.buildOrAdopt(s, p, dir, "embeddings.parquet",
         graft.sources.IvfIndexStore.adopt, graft.sources.IvfIndexStore.drop) {
-      graft.sources.IvfIndexStore.init(s,
+      graft.sources.IvfIndexStore.build(s,
         vecs(s, dir).filter(col("vec_id") < 16)
-          .select(col("vec_id").as("pid"), col("emb").as("pemb")), p)
-      graft.sources.IvfIndexStore.upsertBatch(s, vecs(s, dir), p)
+          .select(col("vec_id").as("pid"), col("emb").as("pemb")), vecs(s, dir), p)
     }
   }
 
@@ -1087,8 +1086,8 @@ object EmbeddingQueries extends QueryModule {
              |GROUP BY x.query_id""".stripMargin)),
 
     // The SAME probe against the PERSISTED index (IvfIndexStore):
-    // cell assignments are materialized once per (session, source) and
-    // maintained incrementally on ingest; the probe reads only the
+    // cell assignments are materialized once per corpus (adopted by
+    // later sessions, rebuilt when it changes); the probe reads only the
     // probed cells' bucket files instead of re-assigning the corpus.
     // Shares embed_ann_ivf's oracle text — the two must hash-match.
     Q("embed_ann_indexed",

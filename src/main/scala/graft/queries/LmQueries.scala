@@ -52,10 +52,7 @@ object LmQueries extends QueryModule {
                             slice: DataFrame => DataFrame): String = {
     val lm = graft.streaming.LmCountsStream
     graft.sources.StoreSentinel.buildOrAdopt(s, prefix, dir, "documents.parquet",
-        lm.adopt, lm.drop) {
-      lm.init(s, prefix)
-      lm.upsertBatch(s, slice(Tables.documents(s, dir)), prefix)
-    }
+        lm.adopt, lm.drop)(lm.build(slice(Tables.documents(s, dir)), prefix))
   }
   private[graft] def lmTrustedStore(s: SparkSession, dir: String): String =
     lmStorePrefix(s, dir, lmTrustedPrefixName(dir),

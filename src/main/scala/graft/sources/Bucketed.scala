@@ -95,8 +95,6 @@ object Bucketed {
       meta.bucketSpec.exists(bs => bs.numBuckets == buckets &&
         bs.bucketColumnNames == Seq(key) && bs.sortColumnNames == Seq(key))
 
-  def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
-
   /** Spark's own Parquet decoder for whole bucket files, run on the
     * driver: no job, no task. `schema` is the table's. Building it
     * broadcasts the session's Hadoop conf, so it is built once per

@@ -14,8 +14,11 @@ import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 /** Generic O(delta) upsert into a bucketed generation table — the
-  * storage primitive under GrantStore (last-writer-wins grants) and the
-  * additive stores (LM counts, baskets, anomaly baselines).
+  * storage primitive under every persisted store. GrantStore and
+  * CircuitStore merge last-writer-wins, the postings and PQ-code
+  * stores first-writer-wins, and the postings' one-row corpus stats
+  * add; the whole-built stores (LM counts, baskets, daily revenue,
+  * IVF cells) only [[materialize]].
   *
   * Layout: the served name is a catalog VIEW over the current
   * generation table (`t__a` / `t__b`), bucketed+sorted by `bucketKey`.
@@ -128,19 +131,41 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
       m.properties.get("graft.batchId").foreach(p.setProperty(s"$g.batchId", _))
       m.properties.get("graft.queryId").foreach(p.setProperty(s"$g.queryId", _))
     }
-    val mp = markerPath(spark, table)
-    java.nio.file.Files.createDirectories(mp.getParent)
-    // all-or-nothing publish of the marker itself (the RunManifest
-    // contract): a truncated in-place write could parse as a valid
+    val bytes = new java.io.ByteArrayOutputStream()
+    p.store(bytes, null)
+    // all-or-nothing: a truncated in-place write could parse as a valid
     // marker for the WRONG generation
-    val tmp = java.nio.file.Files.createTempFile(
-      mp.getParent, "." + mp.getFileName.toString, ".tmp")
-    val out = java.nio.file.Files.newOutputStream(tmp)
-    try p.store(out, null) finally out.close()
-    java.nio.file.Files.move(tmp, mp,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    writeAtomically(markerPath(spark, table), bytes.toByteArray, replace = true)
   }
+
+  /** Write `bytes` to `path` all-or-nothing: into a temp file in the
+    * same directory, then an atomic rename onto `path`, so a reader
+    * sees the old file or the whole new one, never a truncated write.
+    * `replace` lets the rename overwrite an existing `path` (the
+    * publish marker, the store sentinel); a run manifest is written
+    * once and passes false. */
+  private[graft] def writeAtomically(path: java.nio.file.Path, bytes: Array[Byte],
+                                     replace: Boolean): Unit = {
+    java.nio.file.Files.createDirectories(path.getParent)
+    val tmp = java.nio.file.Files.createTempFile(
+      path.getParent, "." + path.getFileName.toString, ".tmp")
+    java.nio.file.Files.write(tmp, bytes)
+    val opts = java.nio.file.StandardCopyOption.ATOMIC_MOVE +:
+      Option.when(replace)(java.nio.file.StandardCopyOption.REPLACE_EXISTING).toSeq
+    java.nio.file.Files.move(tmp, path, opts: _*)
+  }
+
+  /** Hard-link each of `files` into `dir` under its own name — the
+    * bytes are shared, not copied — falling back to a copy where the
+    * filesystem cannot link. */
+  private def linkInto(dir: java.nio.file.Path, files: Seq[java.nio.file.Path]): Unit =
+    files.foreach { f =>
+      val dst = dir.resolve(f.getFileName.toString)
+      try java.nio.file.Files.createLink(dst, f)
+      catch { case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
+        java.nio.file.Files.copy(f, dst, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      }
+    }
 
   /** Re-register an existing on-disk store into THIS session's catalog
     * — the warm-restart half of build-once/probe-many. A restarted
@@ -154,8 +179,7 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     * when the table is unknown (no marker) or the marker/bytes
     * disagree (missing active dir, unparseable schema): a partial
     * adoption would serve a store the merge contract no longer
-    * guarantees. Already-registered tables return true immediately,
-    * so callers can gate `init` on `!adopt(...)`. */
+    * guarantees. Already-registered tables return true immediately. */
   def adopt(spark: SparkSession, table: String): Boolean = {
     if (spark.catalog.tableExists(table)) return true
     val mp = markerPath(spark, table)
@@ -354,14 +378,7 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
     val files = try listing.iterator().asScala
       .filter(p => bucketIdOf(p.getFileName.toString).isDefined).toSeq
     finally listing.close()
-    files.foreach { f =>
-      val out = dst.resolve(f.getFileName.toString)
-      try java.nio.file.Files.createLink(out, f)
-      catch { case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-        java.nio.file.Files.copy(f, out,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
+    linkInto(dst, files)
     files.size
   }
 
@@ -508,16 +525,16 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
 
   /** Merge `delta` into `table`: rows join on `joinKeys`; every other
     * column combines via `merge(name, existing, delta)` — default
-    * last-writer-wins (`coalesce(delta, existing)`); additive stores
-    * (LM counts, baskets, anomaly baselines) pass a sum. The merge is
+    * last-writer-wins (`coalesce(delta, existing)`); the one additive
+    * store, the postings' corpus stats row, passes a sum. The merge is
     * any Catalyst column, evaluated as it is on both publish paths
     * ([[compose]]). Delta schema must equal the table's.
     *
     * `batchId`: foreachBatch is at-least-once — a crash between
     * publish and the stream's commit re-delivers the same micro-batch.
-    * Last-writer-wins merges are replay-idempotent, but ADDITIVE ones
-    * double-count, so callers with non-idempotent merges pass the
-    * foreachBatch batchId; a batch whose id is already recorded on the
+    * Last- and first-writer-wins merges are replay-idempotent, but an
+    * ADDITIVE one double-counts, so callers with non-idempotent merges
+    * pass the batch id; a batch whose id is already recorded on the
     * ACTIVE generation is skipped. */
   def upsert(spark: SparkSession, table: String, delta0: DataFrame,
              joinKeys: Seq[String], bucketKey: String, buckets: Int,
@@ -713,17 +730,9 @@ object BucketedUpsert extends org.apache.spark.internal.Logging {
         Bucketed.write(existing.join(delta, joinKeys, "full_outer").select(merge: _*),
           gen, bucketKey, buckets, touched.size)
     }
-    // carry untouched buckets forward: link shares the bytes (the
-    // "reference" half of generation-compose); copy is the fallback
-    // for filesystems without links
-    val dstDir = tableDir(spark, gen)
-    untouchedFiles.foreach { f =>
-      val dst = dstDir.resolve(f.getFileName.toString)
-      try java.nio.file.Files.createLink(dst, f)
-      catch { case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-        java.nio.file.Files.copy(f, dst)
-      }
-    }
+    // carry untouched buckets forward (the "reference" half of
+    // generation-compose)
+    linkInto(tableDir(spark, gen), untouchedFiles)
     recordBatch(spark, gen, batchId.map(qid -> _))
     refreshGen(spark, gen)
     publish(spark, table, gen)

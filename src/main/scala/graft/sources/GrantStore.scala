@@ -114,12 +114,4 @@ object GrantStore {
           keys, "user_id", buckets, batchId = batchId)
     } finally flips.unpersist(blocking = false)
   }
-
-  /** Serve-path lookup join: grants for a keyed frame of user_ids.
-    * When `users` is bucketed by user_id with the same bucket count,
-    * this join plans with NO exchange on either side (asserted in
-    * GrantStoreSpec). */
-  def grantsFor(spark: SparkSession, users: DataFrame,
-                table: String = DefaultTable): DataFrame =
-    users.join(read(spark, table), Seq("user_id"), "left_outer")
 }

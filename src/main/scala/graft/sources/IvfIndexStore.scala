@@ -7,27 +7,25 @@ import org.apache.spark.sql.functions._
 /** Persisted IVF (inverted-file) ANN index — the build-once/probe-many
   * shape the per-query variant (EmbeddingQueries.ivfTopKWith) lacks:
   * there, the FULL corpus re-assigns to cells inside every probe; at
-  * 100 TB that is a corpus scan per query batch. Here assignment is
-  * materialized once into a cell-bucketed store and maintained
-  * incrementally on ingest, and a probe
-  * reads ONLY the bucket files its nProbe cells hash into
+  * 100 TB that is a corpus scan per query batch. Here [[build]]
+  * materializes the assignment once into a cell-bucketed store, and a
+  * probe reads ONLY the bucket files its nProbe cells hash into
   * ([[BucketedUpsert.readKeys]]) — O(cells probed), not O(corpus).
   *
   * Tables under one prefix:
-  *  - `<p>_pivots (pid, pemb)` — the coarse quantizer, frozen at
-  *    [[init]] (trained offline, e.g. EmbeddingQueries.kmeansPivots on
-  *    a sample, or any deterministic pivot set). Tiny; broadcast at
-  *    probe and assignment time.
+  *  - `<p>_pivots (pid, pemb)` — the coarse quantizer (trained
+  *    offline, e.g. EmbeddingQueries.kmeansPivots on a sample, or any
+  *    deterministic pivot set). Tiny; broadcast at probe and
+  *    assignment time.
   *  - `<p>_cells (cell, vec_id, emb)` — one row per indexed vector,
-  *    bucketed by its nearest-pivot cell. BucketedUpsert generation
-  *    table: an arriving batch rewrites only the buckets its cells
-  *    touch.
+  *    bucketed by its nearest-pivot cell.
+  *  - `<p>_codebooks`, `<p>_codes` — the PQ half ([[initPq]],
+  *    [[upsertPqBatch]]): codes merge per batch, first writer wins.
   *
-  * Contract: vectors are immutable once ingested (re-sent ids are
-  * first-writer no-ops) and never removed; changing the pivot set
-  * means rebuilding the index — exactly the FAISS IVF contract.
-  * Probing with the same pivots, nProbe and tie-breaks as ivfTopKWith
-  * reproduces its output bit-for-bit (oracle `embed_ann_indexed` hashes equal to
+  * Changing the pivot set or the vectors means rebuilding the index —
+  * exactly the FAISS IVF contract. Probing with the same pivots,
+  * nProbe and tie-breaks as ivfTopKWith reproduces its output
+  * bit-for-bit (oracle `embed_ann_indexed` hashes equal to
   * `embed_ann_ivf`'s SQL; asserted in IvfIndexStoreSpec).
   */
 object IvfIndexStore {
@@ -42,17 +40,17 @@ object IvfIndexStore {
   private def cosine(a: Column, b: Column): Column =
     graft.functions.expressions.CosineSimilarity(a, b)
 
-  /** Freeze the pivot set and create the empty cell store. */
-  def init(spark: SparkSession, pivots: DataFrame, prefix: String,
-           buckets: Int = DefaultBuckets): Unit = {
-    import spark.implicits._
-    if (!spark.catalog.tableExists(pivotsTable(prefix)))
-      BucketedUpsert.materialize(
-        pivots.select(col("pid"), col("pemb")), pivotsTable(prefix), "pid", 1)
-    if (!spark.catalog.tableExists(cellsTable(prefix)))
-      BucketedUpsert.materialize(
-        Seq.empty[(Long, Long, Seq[Double])].toDF("cell", "vec_id", "emb"),
-        cellsTable(prefix), "cell", buckets)
+  /** Materialize the pivot set, then every vector of `vecs` `(vec_id,
+    * emb)` assigned to its nearest pivot, each table once. The caller
+    * drops the prefix first: a store that already exists keeps its
+    * other generation. */
+  def build(spark: SparkSession, pivots: DataFrame, vecs: DataFrame, prefix: String,
+            buckets: Int = DefaultBuckets): Unit = {
+    BucketedUpsert.materialize(
+      pivots.select(col("pid"), col("pemb")), pivotsTable(prefix), "pid", 1)
+    BucketedUpsert.materialize(
+      assign(spark, vecs.select(col("vec_id"), col("emb")), prefix),
+      cellsTable(prefix), "cell", buckets)
   }
 
   def drop(spark: SparkSession, prefix: String): Unit =
@@ -76,7 +74,7 @@ object IvfIndexStore {
 
   /** Nearest-pivot cell assignment of a vector frame `(vec_id, emb)` —
     * the SAME ranking (cosine desc, pid tiebreak) as ivfTopKWith's
-    * inline assignment, against the frozen pivot table. Bounded
+    * inline assignment, against the stored pivot table. Bounded
     * broadcast nested-loop by design: |pivots| rows on the broadcast
     * side. */
   private def assign(spark: SparkSession, vecs: DataFrame,
@@ -88,19 +86,6 @@ object IvfIndexStore {
           .orderBy(col("psim").desc, col("pid"))))
       .filter(col("prn") === 1)
       .select(col("pid").as("cell"), col("vec_id"), col("emb"))
-
-  /** Ingest one batch of vectors: assign against the frozen pivots,
-    * merge O(batch) rows into the cell store (first-writer-wins — an
-    * id re-sent with different floats keeps its original row, honoring
-    * the immutability contract). */
-  def upsertBatch(spark: SparkSession, vecs: DataFrame, prefix: String,
-                  buckets: Int = DefaultBuckets,
-                  batchId: Option[Long] = None): Unit =
-    BucketedUpsert.upsert(spark, cellsTable(prefix),
-      assign(spark, vecs.select(col("vec_id"), col("emb")), prefix),
-      Seq("cell", "vec_id"), "cell", buckets,
-      merge = (_, existing, delta) => coalesce(existing, delta),
-      batchId = batchId)
 
   /** The materialized index: `(cell, vec_id, emb)`. */
   def read(spark: SparkSession, prefix: String): DataFrame =
@@ -131,9 +116,10 @@ object IvfIndexStore {
   }
 
   /** Encode one batch of vectors against the frozen codebooks and
-    * merge O(batch) code rows (first-writer-wins — the cell-store
-    * immutability contract). M code rows per vector — 4 small ints
-    * where the vector was 64 doubles: the 16× shipping compression. */
+    * merge O(batch) code rows (first-writer-wins: an id re-sent with
+    * different floats keeps its first codes). M code rows per vector —
+    * 4 small ints where the vector was 64 doubles: the 16× shipping
+    * compression. */
   def upsertPqBatch(spark: SparkSession, vecs: DataFrame, prefix: String,
                     buckets: Int = DefaultBuckets,
                     batchId: Option[Long] = None): Unit = {

@@ -53,13 +53,10 @@ object RunManifest {
     // publish marker must be all-or-nothing: a crash mid-write of an
     // in-place writeString can leave truncated bytes that still parse
     // to a SUBSET of entries — a partial pin reading as a complete run.
-    // Write to a temp file in the same directory and ATOMIC_MOVE it
-    // into place; n_tables is the belt to that suspender ([[tables]]
-    // refuses a manifest whose entry count disagrees).
-    val tmp = java.nio.file.Files.createTempFile(root, ".run_manifest", ".tmp")
-    java.nio.file.Files.writeString(tmp, json)
-    java.nio.file.Files.move(tmp, manifestPath(runDir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    // Write it atomically; n_tables is the belt to that suspender
+    // ([[tables]] refuses a manifest whose entry count disagrees).
+    BucketedUpsert.writeAtomically(manifestPath(runDir),
+      json.getBytes(java.nio.charset.StandardCharsets.UTF_8), replace = false)
     counts
   }
 

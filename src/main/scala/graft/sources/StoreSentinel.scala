@@ -149,14 +149,8 @@ object StoreSentinel {
 
   /** Record a completed build of `prefix` over a corpus with `sig`. */
   def write(spark: SparkSession, prefix: String, sig: String): Unit = {
-    val p = path(spark, prefix)
-    java.nio.file.Files.createDirectories(p.getParent)
-    val tmp = java.nio.file.Files.createTempFile(
-      p.getParent, "." + p.getFileName.toString, ".tmp")
-    java.nio.file.Files.writeString(tmp, s"$SchemeVersion:$sig")
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    BucketedUpsert.writeAtomically(path(spark, prefix),
+      s"$SchemeVersion:$sig".getBytes(java.nio.charset.StandardCharsets.UTF_8), replace = true)
   }
 
   /** Does a completed build for exactly this corpus signature, under

@@ -16,8 +16,8 @@ class BucketedSpec extends AnyFunSuite {
     Bucketed.write(left, "bkt_left", "k", 8)
     Bucketed.write(right, "bkt_right", "k", 8)
     try {
-      val l = Bucketed.read(spark, "bkt_left")
-      val r = Bucketed.read(spark, "bkt_right")
+      val l = spark.table("bkt_left")
+      val r = spark.table("bkt_right")
       // disable broadcast so the bucketed SMJ path is what's planned
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try {

@@ -64,20 +64,6 @@ class ConfigSpec extends AnyFunSuite {
     }
   }
 
-  test("rule->features and aggregate->features impact indexes") {
-    val cfg = DefaultConfig.config
-    // few_errors gates BOTH features (feature_registry.get_features_by_rule)
-    assert(cfg.featuresByRule("few_errors").map(_.name).toSet ==
-      Set("purchase", "message"))
-    assert(cfg.featuresByRule("error_ratio_low").map(_.name) == Seq("purchase"))
-    assert(cfg.featuresByRule("unknown").isEmpty)
-    // total_errors feeds only few_errors, whose impact set is both features
-    assert(cfg.featuresByAggregate("total_errors").map(_.name).toSet ==
-      Set("purchase", "message"))
-    assert(cfg.featuresByAggregate("total_purchase_amount").map(_.name) ==
-      Seq("purchase"))
-  }
-
   test("feature names must be lowercase alphabetic") {
     intercept[IllegalArgumentException] { FeatureSpec("Bad1", Seq("r")) }
   }

@@ -1,7 +1,6 @@
 package graft
 
-import graft.sources.{BucketedUpsert, PostingsStore, StoreSentinel, Tables}
-import graft.streaming.AnomalyMonitorStream
+import graft.sources.{BucketedUpsert, PostingsStore, StoreSentinel}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -304,27 +303,5 @@ class CrossSessionStoreSpec extends AnyFunSuite {
     StoreSentinel.drop(spark, p)
     PostingsStore.drop(spark, p)
     Memo.forget()
-  }
-
-  test("a restarted daily-revenue stream store resumes accumulated state") {
-    val t = "xsess_daily"
-    AnomalyMonitorStream.drop(spark, t)
-    AnomalyMonitorStream.init(spark, t, buckets = 4)
-    val events = Tables.events(spark, sf).limit(200)
-    AnomalyMonitorStream.upsertBatch(spark, events, t, buckets = 4, batchId = Some(0L))
-    def daily = AnomalyMonitorStream.daily(spark, t).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDecimal(3)))
-      .sortBy(x => (x._1, x._2)).toSeq
-    val before = daily
-    assert(before.nonEmpty)
-
-    deregisterPreservingBytes(t)
-    // a restarted stream calls init() before starting — it must ADOPT
-    AnomalyMonitorStream.init(spark, t, buckets = 4)
-    assert(daily == before, "init after restart must adopt, not shadow with empty")
-    // the redelivered first micro-batch must remain a no-op
-    AnomalyMonitorStream.upsertBatch(spark, events, t, buckets = 4, batchId = Some(0L))
-    assert(daily == before, "replay guard must hold across the restart")
-    AnomalyMonitorStream.drop(spark, t)
   }
 }

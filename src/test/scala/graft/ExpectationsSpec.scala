@@ -74,29 +74,6 @@ class ExpectationsSpec extends AnyFunSuite {
     assert(got("tag") == ((5L, 0L, 2L)))
   }
 
-  test("profileApprox matches exact within HLL error and plans no Expand") {
-    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-    val cols = Seq("doc_id", "lang", "n_chars")
-    val exact = Expectations.profile(docs, cols).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    val approx = Expectations.profileApprox(docs, cols).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    cols.foreach { c =>
-      assert(approx(c)._1 == exact(c)._1 && approx(c)._2 == exact(c)._2,
-        s"$c: row/null counts must be exact")
-      val (e, a) = (exact(c)._3.toDouble, approx(c)._3.toDouble)
-      assert(math.abs(a - e) <= math.max(3.0, 0.05 * e),
-        s"$c: approx distinct $a too far from exact $e")
-    }
-    val expand = Expectations.profileApprox(docs, cols)
-      .queryExecution.executedPlan.toString()
-    assert(!expand.contains("Expand"), "HLL profile must not Expand the scan")
-    val exactPlan = Expectations.profile(docs, cols)
-      .queryExecution.executedPlan.toString()
-    assert(exactPlan.contains("Expand"),
-      "sanity: the exact multi-distinct is the Expand shape the approx path avoids")
-  }
-
   test("audit is one scan: a single aggregate over the input, no joins") {
     val plan = Expectations.audit(fixture, checks)
       .queryExecution.optimizedPlan.toString()

@@ -282,14 +282,16 @@ class GraftViewsSpec extends AnyFunSuite {
         s"GRAFT BUILD LM $lfx FROM views_sql_lm_docs BUCKETS 8").collect()
       assert(built.length == 1 && built(0).getLong(2) == want,
         s"LM build must report total training tokens: ${built.toSeq}")
-      // additive merge would double-count on a re-run; the statement
-      // is drop-and-rebuild, so the second run reports the same totals
+      // the statement is drop-and-build, so a second run reports the
+      // same totals
       val again = spark.sql(
         s"GRAFT BUILD LM $lfx FROM views_sql_lm_docs BUCKETS 8").collect()
       assert(again(0).getLong(2) == want, "re-build must not double-count")
+      FirstGeneration.check(spark, Seq(LmCountsStream.BigramTable, LmCountsStream.ContextTable,
+        LmCountsStream.UnigramTable, LmCountsStream.TotalsTable).map(lfx + _))
       // the built store scores like the one-shot counts
       val eval = spark.table("views_sql_lm_docs").limit(20)
-      val got = LmCountsStream.score(spark, eval, lfx).collect()
+      val got = graft.operators.NgramLm.score(eval, LmCountsStream.readCounts(spark, lfx)).collect()
         .map(r => (r.getLong(0), r.getLong(2))).sortBy(_._1)
       val exp = graft.operators.NgramLm.score(eval, ref).collect()
         .map(r => (r.getLong(0), r.getLong(2))).sortBy(_._1)
@@ -305,8 +307,8 @@ class GraftViewsSpec extends AnyFunSuite {
       val r = spark.sql(s"GRAFT BUILD DAILY $table FROM events BUCKETS 4")
         .collect()
       assert(r.head.getString(0) == table && r.head.getLong(1) > 0)
-      val fromStore = graft.streaming.AnomalyMonitorStream
-        .anomalies(spark, table).collect()
+      val fromStore = graft.queries.AnalyticsQueries
+        .madFlags(graft.streaming.AnomalyMonitorStream.daily(spark, table)).collect()
         .map(x => (x.getString(0), x.getLong(1), x.getDouble(2), x.getBoolean(5)))
         .toSet
       val batch = SparkEntry.queries("revenue_anomaly_mad")(spark, dir)
@@ -318,6 +320,7 @@ class GraftViewsSpec extends AnyFunSuite {
       val r2 = spark.sql(s"GRAFT BUILD DAILY $table FROM events BUCKETS 4")
         .collect()
       assert(r2.head.getLong(1) == r.head.getLong(1))
+      FirstGeneration.check(spark, Seq(table))
     } finally graft.streaming.AnomalyMonitorStream.drop(spark, table)
   }
 
@@ -335,7 +338,11 @@ class GraftViewsSpec extends AnyFunSuite {
         .collect()
       assert(r.head.getString(0) == bfx && r.head.getLong(2) > 0)
       // the SQL-built store serves the gated batch outputs
-      val fromStore = BasketStream.cosine(spark, bfx).collect()
+      def stored(t: String) = graft.sources.BucketedUpsert.read(spark, bfx + t)
+      val fromStore = graft.queries.AnalyticsQueries.basketCosine(
+        stored(BasketStream.PairsTable)
+          .filter(col("c") >= graft.queries.AnalyticsQueries.BasketMinSupport),
+        stored(BasketStream.ItemsTable)).collect()
         .map(_.mkString("|")).sorted.toSeq
       val batch = SparkEntry.queries("copurchase_cosine")(spark, dir)
         .collect().map(_.mkString("|")).sorted.toSeq
@@ -345,6 +352,8 @@ class GraftViewsSpec extends AnyFunSuite {
         s"GRAFT BUILD BASKET $bfx FROM views_sql_basket_lines BUCKETS 4")
         .collect()
       assert(r2.head.getLong(2) == r.head.getLong(2))
+      FirstGeneration.check(spark, Seq(BasketStream.PairsTable, BasketStream.ItemsTable,
+        BasketStream.TotalsTable).map(bfx + _))
     } finally BasketStream.drop(spark, bfx)
   }
 

@@ -5,10 +5,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Persisted IVF index vs the per-query IVF plan: incremental builds
-  * converge to the full build, probes are bit-identical to
-  * ivfTopKWith, and — the point of persisting at all — a probe reads
-  * only the probed cells' bucket files, never the corpus. */
+/** Persisted IVF index vs the per-query IVF plan: a build publishes
+  * each table once, probes are bit-identical to ivfTopKWith, and — the
+  * point of persisting at all — a probe reads only the probed cells'
+  * bucket files, never the corpus. The PQ codes merge per batch:
+  * incremental encodes converge to the one-shot encode, and replays
+  * and re-sent ids are no-ops. */
 object IvfIndexStoreSpec {
   case class Vec(vec_id: Long, emb: Seq[Double])
 }
@@ -31,35 +33,26 @@ class IvfIndexStoreSpec extends AnyFunSuite {
     IvfIndexStore.read(spark, prefix).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toSet
 
-  test("streamed incremental build converges to the one-shot build") {
-    import spark.implicits._
-    val (inc, full) = ("ivf_inc", "ivf_full")
-    Seq(inc, full).foreach(IvfIndexStore.drop(spark, _))
-    try {
-      IvfIndexStore.init(spark, pivots, inc, buckets = 8)
-      IvfIndexStore.init(spark, pivots, full, buckets = 8)
-      IvfIndexStore.upsertBatch(spark, vecs, full, 8)
+  test("memo build publishes one generation; probes match ivfTopKWith") {
+    val p = graft.queries.EmbeddingQueries.ivfPrefixName(sf)
+    // force a build: no sentinel, no store, no memo entry
+    graft.sources.StoreSentinel.dropStore(spark, p, IvfIndexStore.drop)
+    Memo.forget()
+    assert(graft.queries.EmbeddingQueries.ivfIndexPrefix(spark, sf) == p)
+    FirstGeneration.check(spark,
+      Seq(IvfIndexStore.pivotsTable(p), IvfIndexStore.cellsTable(p)))
+    assert(cellSet(p).size == vecs.count(), "every vector indexed exactly once")
 
-      val rows = vecs.as[Vec].collect()
-      // one micro-batch id per chunk, as a stream's foreachBatch passes it
-      rows.grouped(math.max(1, rows.length / 3)).zipWithIndex.foreach { case (c, id) =>
-        IvfIndexStore.upsertBatch(spark, c.toSeq.toDF(), inc, 8, Some(id.toLong))
-      }
-
-      assert(cellSet(inc) == cellSet(full))
-      assert(cellSet(inc).size == rows.length, "every vector indexed exactly once")
-
-      // probes against the incrementally-built index are bit-identical
-      // to the per-query inline-assignment plan
-      val queries = vecs.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-      val got = IvfIndexStore.topK(spark, queries, inc, k = 3, nProbe = 2, buckets = 8)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).sorted
-      val want = graft.queries.EmbeddingQueries
-        .ivfTopKWith(vecs, pivots, col("vec_id") < 20, k = 3, nProbe = 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).sorted
-      assert(got.sameElements(want), s"probe diverges: got=${got.take(3).toSeq} want=${want.take(3).toSeq}")
-    } finally Seq(inc, full).foreach(IvfIndexStore.drop(spark, _))
+    // probes against the built index are bit-identical to the
+    // per-query inline-assignment plan
+    val queries = vecs.filter(col("vec_id") < 20)
+      .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
+    val got = IvfIndexStore.topK(spark, queries, p, k = 3, nProbe = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).sorted
+    val want = graft.queries.EmbeddingQueries
+      .ivfTopKWith(vecs, pivots, col("vec_id") < 20, k = 3, nProbe = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).sorted
+    assert(got.sameElements(want), s"probe diverges: got=${got.take(3).toSeq} want=${want.take(3).toSeq}")
   }
 
   test("probe reads only the probed cells' bucket files, not the corpus") {
@@ -67,8 +60,7 @@ class IvfIndexStoreSpec extends AnyFunSuite {
     val prefix = "ivf_prune"
     IvfIndexStore.drop(spark, prefix)
     try {
-      IvfIndexStore.init(spark, pivots, prefix, buckets = 16)
-      IvfIndexStore.upsertBatch(spark, vecs, prefix, 16)
+      IvfIndexStore.build(spark, pivots, vecs, prefix, buckets = 16)
       val cellsMarker = IvfIndexStore.cellsTable(prefix) + "__"
       def bucketsOf(files: Seq[String]): Set[Int] = files
         .filter(_.contains(cellsMarker))
@@ -130,18 +122,25 @@ class IvfIndexStoreSpec extends AnyFunSuite {
 
   test("redelivered batch is a no-op; re-sent vector keeps its first row") {
     import spark.implicits._
-    val prefix = "ivf_replay"
+    val prefix = "pq_replay"
     IvfIndexStore.drop(spark, prefix)
+    def codeSet: Set[(Long, Int, Long)] =
+      BucketedUpsert.read(spark, IvfIndexStore.codesTable(prefix)).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     try {
-      IvfIndexStore.init(spark, pivots, prefix, buckets = 8)
-      IvfIndexStore.upsertBatch(spark, vecs.filter(col("vec_id") < 30), prefix, 8, Some(0L))
-      val before = cellSet(prefix)
+      IvfIndexStore.initPq(spark, vecs, prefix, buckets = 8)
+      IvfIndexStore.upsertPqBatch(spark, vecs.filter(col("vec_id") < 30), prefix, 8, Some(0L))
+      val before = codeSet
+      assert(before.nonEmpty)
       // exact redelivery (same batch id, different payload): guard skips
-      IvfIndexStore.upsertBatch(spark, vecs.filter(col("vec_id") >= 30), prefix, 8, Some(0L))
-      assert(cellSet(prefix) == before, "replay guard must skip the merge")
-      // re-sent vector under a NEW batch id: first-writer-wins no-op
-      IvfIndexStore.upsertBatch(spark, vecs.filter(col("vec_id") < 30), prefix, 8, Some(1L))
-      assert(cellSet(prefix) == before, "re-ingest must not duplicate rows")
+      IvfIndexStore.upsertPqBatch(spark, vecs.filter(col("vec_id") >= 30), prefix, 8, Some(0L))
+      assert(codeSet == before, "replay guard must skip the merge")
+      // re-sent ids with different floats under a NEW batch id:
+      // first-writer-wins keeps every original code row
+      val resent = vecs.filter(col("vec_id") < 30).as[Vec].collect()
+        .map(v => Vec(v.vec_id, v.emb.reverse)).toSeq.toDF()
+      IvfIndexStore.upsertPqBatch(spark, resent, prefix, 8, Some(1L))
+      assert(codeSet == before, "re-ingest must keep the first codes")
     } finally IvfIndexStore.drop(spark, prefix)
   }
 }

@@ -1,76 +1,45 @@
 package graft
 
+import graft.queries.AnalyticsQueries
 import graft.sources.Tables
 import graft.streaming.AnomalyMonitorStream
-import graft.streaming.EventPipeline.EventRow
+import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Incremental anomaly monitor vs the batch ground truth: the
-  * accumulated daily store must equal the one-shot daily aggregation
-  * over everything ingested (DECIMAL sums are associative), and the
-  * served flags must equal the oracled revenue_anomaly_mad query
-  * row-for-row.
+/** The persisted daily revenue store vs the batch ground truth: the
+  * flags scored over the built store must equal the oracled
+  * revenue_anomaly_mad and changepoint_cusum queries row-for-row.
   */
 class StreamingAnomalySpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
-  private def flags(table: String): Set[(String, Long, Double, Boolean)] =
-    AnomalyMonitorStream.anomalies(spark, table).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getBoolean(5)))
-      .toSet
-
-  test("chunked event stream converges to the oracled batch anomaly flags") {
-    import spark.implicits._
+  test("built daily store serves the oracled anomaly and CUSUM flags") {
     val table = "anom_converge"
     AnomalyMonitorStream.drop(spark, table)
-    AnomalyMonitorStream.init(spark, table, buckets = 4)
     try {
-      val events = Tables.events(spark, sf).as[EventRow].collect()
-        .sortBy(_.event_id)
-      // one micro-batch id per chunk, as a stream's foreachBatch passes it
-      events.grouped(math.max(1, events.length / 3)).zipWithIndex.foreach { case (c, id) =>
-        AnomalyMonitorStream.upsertBatch(spark, c.toSeq.toDF(), table, 4, Some(id.toLong))
-      }
+      AnomalyMonitorStream.build(Tables.events(spark, sf), table, buckets = 4)
+      FirstGeneration.check(spark, Seq(table))
+      val daily = AnomalyMonitorStream.daily(spark, table)
+      assert(daily.schema("rev").dataType == DecimalType(38, 6))
 
-      val batch = SparkEntry.queries("revenue_anomaly_mad")(spark, sf)
-        .collect()
+      def flags(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getBoolean(5)))
         .toSet
-      assert(flags(table) == batch,
-        "monitor flags must equal the oracle-gated batch query exactly")
+      val batch = flags(SparkEntry.queries("revenue_anomaly_mad")(spark, sf))
+      assert(flags(AnalyticsQueries.madFlags(daily)) == batch,
+        "store flags must equal the oracle-gated batch query exactly")
       assert(batch.exists(_._4), "fixture must contain at least one anomaly")
 
-      // the CUSUM twin serves from the SAME store: bit-equal to the
-      // oracled changepoint query over everything ingested
-      val servedShifts = AnomalyMonitorStream.shifts(spark, table)
+      // the CUSUM stage over the SAME store: bit-equal to the oracled
+      // changepoint query
+      val servedShifts = AnalyticsQueries.cusumFlags(AnalyticsQueries.revMicros(daily))
         .collect().map(_.mkString("|")).sorted.toSeq
       val batchShifts = SparkEntry.queries("changepoint_cusum")(spark, sf)
         .collect().map(_.mkString("|")).sorted.toSeq
       assert(servedShifts == batchShifts,
         "store-served CUSUM must equal the oracle-gated batch query")
-    } finally AnomalyMonitorStream.drop(spark, table)
-  }
-
-  test("redelivered batch does not double-count (additive replay guard)") {
-    import spark.implicits._
-    val table = "anom_replay"
-    AnomalyMonitorStream.drop(spark, table)
-    AnomalyMonitorStream.init(spark, table, buckets = 4)
-    try {
-      val half = Tables.events(spark, sf).as[EventRow].collect()
-        .sortBy(_.event_id).take(300).toSeq
-      AnomalyMonitorStream.upsertBatch(spark, half.toDF(), table,
-        buckets = 4, batchId = Some(7L))
-      val once = AnomalyMonitorStream.daily(spark, table).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      // same batchId again: the replay guard must make this a no-op
-      AnomalyMonitorStream.upsertBatch(spark, half.toDF(), table,
-        buckets = 4, batchId = Some(7L))
-      val twice = AnomalyMonitorStream.daily(spark, table).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      assert(once == twice, "replayed batchId must not double-count")
     } finally AnomalyMonitorStream.drop(spark, table)
   }
 }

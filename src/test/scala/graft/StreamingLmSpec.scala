@@ -4,12 +4,10 @@ import graft.operators.NgramLm
 import graft.streaming.LmCountsStream
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Streaming LM count maintenance ([[graft.streaming.LmCountsStream]]):
-  * additive per-batch merges must accumulate to EXACTLY the one-shot
-  * `NgramLm.train` counts of the union corpus (counts are linear in
-  * the corpus, so any batch split converges bit-identically), scoring
-  * from the store must equal batch scoring, and a redelivered
-  * micro-batch must be a no-op (batchId guard on every store).
+/** The persisted LM count stores ([[graft.streaming.LmCountsStream]]):
+  * a build must store EXACTLY the one-shot `NgramLm.train` counts of
+  * its corpus, each table in one publish, and scoring from the store
+  * must equal batch scoring.
   */
 object StreamingLmSpec {
   case class Doc(doc_id: Long, text: String)
@@ -29,17 +27,14 @@ class StreamingLmSpec extends AnyFunSuite {
     }
   }
 
-  test("accumulated counts == one-shot training; store scoring == batch scoring") {
+  test("built counts == one-shot training; store scoring == batch scoring") {
     import spark.implicits._
     val prefix = "lmspec_"
     LmCountsStream.drop(spark, prefix)
-    LmCountsStream.init(spark, prefix, buckets = 4)
     try {
-      val batches = corpus.grouped(11).toSeq // 11 + 11 + 8, uneven on purpose
-      // one micro-batch id per chunk, as a stream's foreachBatch passes it
-      batches.zipWithIndex.foreach { case (b, id) =>
-        LmCountsStream.upsertBatch(spark, b.toDF(), prefix, 4, Some(id.toLong))
-      }
+      LmCountsStream.build(corpus.toDF(), prefix, buckets = 4)
+      FirstGeneration.check(spark, Seq(LmCountsStream.BigramTable, LmCountsStream.ContextTable,
+        LmCountsStream.UnigramTable, LmCountsStream.TotalsTable).map(prefix + _))
 
       val ref = NgramLm.train(corpus.toDF("doc_id", "text"))
       val got = LmCountsStream.readCounts(spark, prefix)
@@ -60,24 +55,10 @@ class StreamingLmSpec extends AnyFunSuite {
       def scored(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
           .sortBy(_._1)
-      assert(scored(LmCountsStream.score(spark, eval, prefix))
+      assert(scored(NgramLm.score(eval, got))
         .sameElements(scored(NgramLm.score(eval, ref))))
       assert(scored(NgramLm.score(eval, ref))
         .find(_._1 == 101L).get._3 == NgramLm.OovBitsFp)
-
-      // redelivered batch (same caller + batch id) is a no-op: the
-      // first direct call applies and records the id, the second —
-      // the at-least-once redelivery — must skip on every store
-      val extra = Seq(Doc(200L, "spill sort spill sort"))
-        .toDF("doc_id", "text")
-      LmCountsStream.upsertBatch(spark, extra, prefix, 4, Some(99L))
-      val after1 = rows3(LmCountsStream.readCounts(spark, prefix).bigrams)
-      assert(!after1.sameElements(rows3(ref.bigrams))) // first call applied
-      LmCountsStream.upsertBatch(spark, extra, prefix, 4, Some(99L))
-      val g2 = LmCountsStream.readCounts(spark, prefix)
-      assert(rows3(g2.bigrams).sameElements(after1))
-      assert(g2.totals.collect().head.getLong(0) ==
-        ref.totals.collect().head.getLong(0) + 4L)
     } finally LmCountsStream.drop(spark, prefix)
   }
 }
